@@ -218,11 +218,15 @@ HEADLINE = [
 # Documented-quadratic oracle anchors (exact all-pairs / within-block
 # pairwise) and the entries that compose them. At sf >= 1 these are
 # auto-skipped unless SPARK_GRAFT_BENCH_EXACT=1: the r9 100x run died
-# on disk (shared_exact_graph_build's all-pairs shuffle > 77 GB free)
+# on disk (the exact pair graph's all-pairs shuffle > 77 GB free)
 # before the manual skip knob was applied — the policy now lives here
-# instead of in tribal knowledge. The skip list is printed.
+# instead of in tribal knowledge. The skip list is printed. Every
+# battery entry that touches the exact graph must be listed, or it
+# would be refused the skipped artifact: tests/test_plans.py checks
+# that closure against the recorded shared-artifact accesses.
 EXACT_ANCHORS = (
-    "shared_exact_graph_build",
+    "shared_exact_pairs",
+    "shared_components_exact",
     "dedup_components",
     "dedup_keep_best_per_component",
     "split_leakage_check",
@@ -230,89 +234,6 @@ EXACT_ANCHORS = (
     "dedup_containment",
     "fuzzy_match_part_names",
 )
-
-# Session-shared pre-builds and the battery entries that compose them.
-# Skipping a pre-build while measuring one of its consumers silently
-# moves the one-time build cost inside that consumer's timing window
-# (the r9 comment acknowledged this; nothing enforced it) — fail fast.
-PREBUILD_CONSUMERS = {
-    "shared_exact_graph_build": (
-        # exact_ngram_pairs + exact components labeling (datasets.py)
-        "dedup_components",
-        "dedup_keep_best_per_component",
-        "split_leakage_check",
-        "dedup_lsh_calibration",  # exact side is the calibration truth
-    ),
-    "shared_lsh_graph_build": (
-        # dedup_minhash_lsh pair set + LSH components labeling: every
-        # direct dedup_minhash_lsh() caller, the labeling composites,
-        # and the curation composites that keep one doc per LSH
-        # component (dedup_keep_best_lsh inside curation_pipeline_v2;
-        # the token-budget family builds on v2's survivor set).
-        # NOTE dedup_exact / curation_pipeline (v1) are NOT here: v1's
-        # dedup stage is the exact-FINGERPRINT hash groupBy, not the
-        # exact ngram-jaccard graph.
-        "dedup_minhash_lsh",
-        "dedup_minhash_bbit",
-        "dedup_containment_lsh",
-        "dedup_containment_profile",
-        # NOT dedup_containment_bounded: the collapsed form builds its
-        # own representative-level LSH pipeline (text-pure equivalence)
-        # and does not touch the doc-level shared graph
-        "dedup_lsh_calibration",  # LSH side is the thing calibrated
-        "dedup_components_lsh",
-        "dedup_keep_best_lsh",
-        "split_leakage_check_lsh",
-        "dedup_cluster_size_profile",
-        "dedup_soft_reweight",
-        "curation_pipeline_v2",
-        "curation_filter_audit",
-        "curation_token_budget",
-        "curation_token_budget_parts",
-        "curation_token_budget_rows",
-    ),
-    "shared_ann_index_build": ("sim_ann_ivf_persisted",),
-    "shared_kmeans_cells_build": (
-        # trained-codebook cell assignment (r12): the 3-round Lloyd
-        # loop was re-run by both consumers; now a once-per-corpus
-        # index artifact (sim_kmeans_train/centroids still train live —
-        # the iteration log is their output, not a cacheable artifact)
-        "sim_ann_ivf_trained",
-        "sim_ann_recall_report",
-    ),
-    "shared_exact_topk_build": (
-        # session-shared exact cosine top-k anchor (r12): its own entry
-        # plus every QA report that scores a method against the truth
-        "sim_topk_cosine",
-        "sim_ann_recall_report",
-        "sim_int8_topk_agreement",
-        "sim_matryoshka_recall",
-    ),
-    "shared_pq_codes_build": (
-        # _pq_codes/_pq_codes_packed direct callers + topk_cosine_pq
-        # composites (recall_report runs pq_adc_refine as one method)
-        "embedding_pq_codes",
-        "sim_topk_cosine_pq",
-        "sim_ann_ivfpq",
-        "hybrid_retrieval_mmr_ann",
-        "hybrid_retrieval_rrf_ann",
-        "sim_ann_recall_report",
-    ),
-    "shared_power_iteration": ("embedding_top_pc", "embedding_anisotropy"),
-}
-
-
-def _check_prebuild_skips(skip: set[str]) -> None:
-    # raise, not assert: the fail-fast must survive python -O
-    for build, consumers in PREBUILD_CONSUMERS.items():
-        if build in skip:
-            live = [c for c in consumers if c not in skip]
-            if live:
-                raise RuntimeError(
-                    f"{build} is skipped but its consumers {live} are still "
-                    f"measured — they would lazily rebuild it inside their own "
-                    f"timing window; add them to SPARK_GRAFT_BENCH_SKIP"
-                )
 
 
 def _current_round() -> int:
@@ -508,100 +429,8 @@ def main() -> None:
                 }
             )
         )
-    # fail fast BEFORE any timing: a skipped pre-build with a measured
-    # consumer would rebuild the shared subtree inside the consumer's
-    # timing window, silently corrupting its per-entry number
-    _check_prebuild_skips(skip)
     per_query: dict[str, float] = {}
     canary_start = _canary(spark)
-
-    # The near-dup pair graphs (exact inverted-index jaccard; banded
-    # LSH + label propagation) are session-shared materializations
-    # (operators/dedup.py `_SHARED_SUBTREES`): the components /
-    # keep-best / leakage / containment composites all reuse them, as a
-    # production curation DAG materializes its candidate-pair table
-    # once. Timing them HERE as first-class battery entries keeps the
-    # one-time build honestly inside the total, while the per-family
-    # entries below then show the true steady-state marginal cost.
-    from kafka_flink_streaming_pipeline_spark.operators.datasets import (
-        _components_labels,
-    )
-
-    for kind in ("exact", "lsh"):
-        # scale runs can skip a pre-build by its pseudo-entry name
-        # (e.g. shared_exact_graph_build at 100x, where the all-pairs
-        # anchor's shuffle exceeds local disk — its consumers must then
-        # be skipped too or they rebuild it lazily)
-        if f"shared_{kind}_graph_build" in skip:
-            continue
-        t0 = time.time()
-        _components_labels(spark, sf_dir, kind).count()
-        per_query[f"shared_{kind}_graph_build"] = round(time.time() - t0, 3)
-
-    # same policy for the on-disk IVF index: built once per session,
-    # probed by sim_ann_ivf_persisted — the build is its own entry.
-    # All shared pre-builds honor the skip list uniformly (r10: the
-    # first cut only honored it for the two graph builds, so naming
-    # e.g. shared_pq_codes_build in SPARK_GRAFT_BENCH_SKIP was silently
-    # ignored while the detail file reported it skipped)
-    if "shared_ann_index_build" not in skip:
-        from kafka_flink_streaming_pipeline_spark.operators.similarity import (
-            ann_index_path,
-        )
-
-        t0 = time.time()
-        ann_index_path(spark, sf_dir)
-        per_query["shared_ann_index_build"] = round(time.time() - t0, 3)
-
-    # and the PQ code table (the third persisted index artifact): the
-    # encode is session-shared; the codes entry and ADC search then
-    # show their true steady-state marginals
-    if "shared_pq_codes_build" not in skip:
-        from kafka_flink_streaming_pipeline_spark.operators.similarity import (
-            _pq_codes,
-            _pq_codes_packed,
-        )
-
-        t0 = time.time()
-        _pq_codes(spark, sf_dir).count()
-        _pq_codes_packed(spark, sf_dir).count()  # r6: the packed ADC layout
-        per_query["shared_pq_codes_build"] = round(time.time() - t0, 3)
-
-    # and the trained-codebook cells (r12): the Lloyd training is the
-    # once-per-rebuild index build; its payoff assignment is shared
-    if "shared_kmeans_cells_build" not in skip:
-        from kafka_flink_streaming_pipeline_spark.operators.similarity import (
-            _ivf_trained_cells,
-        )
-
-        t0 = time.time()
-        _ivf_trained_cells(spark, sf_dir).count()
-        per_query["shared_kmeans_cells_build"] = round(time.time() - t0, 3)
-
-    # and the exact top-k anchor (r12): session-shared truth side of
-    # the recall/agreement/matryoshka QA reports — the one-time
-    # corpus×queries scan is its own entry, consumers show marginals
-    if "shared_exact_topk_build" not in skip:
-        from kafka_flink_streaming_pipeline_spark.operators.similarity import (
-            topk_cosine,
-        )
-
-        t0 = time.time()
-        topk_cosine(spark, sf_dir).count()
-        per_query["shared_exact_topk_build"] = round(time.time() - t0, 3)
-
-    # and the power-iteration direction (r7): `_PI_CACHE` memoizes the
-    # converged vector per sf_dir, so embedding_top_pc/anisotropy time
-    # their steady-state marginal (emit / Rayleigh pass); the 6-round
-    # iteration itself is this one-time entry — same policy as the
-    # graphs and indexes above
-    if "shared_power_iteration" not in skip:
-        from kafka_flink_streaming_pipeline_spark.operators import linalg
-
-        t0 = time.time()
-        linalg._PI_CACHE.clear()
-        linalg._power_iterate(spark, sf_dir)
-        per_query["shared_power_iteration"] = round(time.time() - t0, 3)
     # Materialization (round-5 methodology fix): `.count()` is NOT a
     # valid benchmark action for projection- or LEFT-join-shaped
     # outputs — Catalyst prunes every column the count doesn't need,
@@ -640,17 +469,51 @@ def main() -> None:
     # candidates are complete rebuilds, so nothing is hidden.
     n_meas = int(os.environ.get("SPARK_GRAFT_BENCH_RUNS", "2"))
 
-    def _measure(name: str, runs: int, warm_n: int | None = None) -> float:
-        if warm_n is None:
+    # Session-shared artifacts (operators/shared_cache.py: pair graphs,
+    # component labels, top-k anchor, PQ codes, IVF cells and index,
+    # power-iteration vector) are built once and composed by many
+    # entries, as a production DAG materializes each once. Each build
+    # is timed HERE as its own pseudo-entry, in declaration (=
+    # dependency) order, so the battery total carries it once and its
+    # consumers show their steady-state marginal cost. Skipping one
+    # (e.g. the exact pair graph at 100x, whose shuffle exceeds local
+    # disk) refuses it: a consumer still measured raises before
+    # building it, so no entry is ever timed over a one-time build.
+    # Every entry's accesses (hit / disk / build) are recorded into
+    # `shared`, the consumer map of the detail file.
+    from kafka_flink_streaming_pipeline_spark.operators import shared_cache
+
+    refused = skip & set(shared_cache.SHARED)
+    shared: dict[str, dict[str, str]] = {}
+
+    def _record(name: str, rec: dict[str, str]) -> None:
+        if rec:
+            shared.setdefault(name, rec)
+
+    for name in shared_cache.SHARED:
+        if name in skip:
+            continue
+        t0 = time.time()
+        with shared_cache.recording(name, refused) as rec:
+            shared_cache.get(spark, sf_dir, name)
+        per_query[name] = round(time.time() - t0, 3)
+        _record(name, rec)
+
+    def _measure(name: str, runs: int) -> float:
+        with shared_cache.recording(name, refused) as rec:
             warm_n = _materialize(plans[name].build(spark, sf_dir))
-        best = None
-        for _ in range(runs):
-            spark.catalog.clearCache()
-            t0 = time.time()
-            n = _materialize(plans[name].build(spark, sf_dir))
-            dt = time.time() - t0
-            best = dt if best is None else min(best, dt)
-            assert n == warm_n
+            best = None
+            for _ in range(runs):
+                spark.catalog.clearCache()
+                t0 = time.time()
+                n = _materialize(plans[name].build(spark, sf_dir))
+                dt = time.time() - t0
+                best = dt if best is None else min(best, dt)
+                if n != warm_n:  # RuntimeError, not assert: must survive -O
+                    raise RuntimeError(
+                        f"{name}: measured run returned {n} rows, warm run {warm_n}"
+                    )
+        _record(name, rec)
         return best
 
     min_of: dict[str, int] = {}
@@ -727,6 +590,9 @@ def main() -> None:
         "mover_baseline": Path(prev_file).name if prev_file else None,
         "mover_baseline_round": prev_round,
         "skipped": sorted(skip) or None,
+        # entry -> {artifact: "hit" | "disk" | "build"}: the recorded
+        # consumer map (entries touching no shared artifact are absent)
+        "shared": shared,
     }
     # full per-query map: file + an early stdout line (NOT the last line)
     Path(__file__).resolve().parent.joinpath("BENCH_DETAIL.json").write_text(

@@ -37,11 +37,11 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from kafka_flink_streaming_pipeline_spark.operators import shared_cache
 from kafka_flink_streaming_pipeline_spark.operators.dedup import (
     _DUP_THRESH,
     _NGRAM_JACCARD_T,
     _DOC_SHINGLES_SQL,
-    _session_shared,
     LSH_EST_SQL,
     dedup_minhash_lsh,
     exact_ngram_pairs,
@@ -673,30 +673,31 @@ def label_propagate(nodes: DataFrame, pairs: DataFrame) -> DataFrame:
     )
 
 
-def _components_labels(spark: SparkSession, sf_dir: str, kind: str) -> DataFrame:
-    """Session-shared converged (node, label) for the exact or LSH edge
-    graph — components, keep-best and the leakage composites all
-    consume the SAME labeling, and the iterative propagation is the
-    expensive half of each (round-3 bench: the family re-ran it per
-    query, ~10 s of the 52 s battery). The edge sets themselves are the
-    shared `exact_ngram_pairs` / `dedup_minhash_lsh` subtrees."""
-    docs = load_table(spark, sf_dir, "documents").select(
-        F.col("doc_id").alias("node")
+def _doc_nodes(spark: SparkSession, sf_dir: str) -> DataFrame:
+    return load_table(spark, sf_dir, "documents").select(F.col("doc_id").alias("node"))
+
+
+# Session-shared converged (node, label) for the exact and the LSH edge
+# graph: components, keep-best and the leakage composites all consume
+# the SAME labeling, and the iterative propagation is the expensive
+# half of each (round-3 bench: the family re-ran it per query, ~10 s
+# of the 52 s battery). The edge sets are the shared
+# `exact_ngram_pairs` / `dedup_minhash_lsh` artifacts.
+@shared_cache.artifact("shared_components_exact")
+def _components_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
+    return label_propagate(
+        _doc_nodes(spark, sf_dir), exact_ngram_pairs(spark, sf_dir).select("d1", "d2")
     )
-    if kind == "exact":
-        pairs = exact_ngram_pairs(spark, sf_dir).select("d1", "d2")
-    else:
-        pairs = (
-            dedup_minhash_lsh(spark, sf_dir)
-            .filter(F.col("est_jaccard") >= _DUP_THRESH)
-            .select("d1", "d2")
-        )
-    return _session_shared(
-        spark,
-        sf_dir,
-        f"components_{kind}",
-        lambda: label_propagate(docs, pairs),
+
+
+@shared_cache.artifact("shared_components_lsh")
+def _components_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
+    pairs = (
+        dedup_minhash_lsh(spark, sf_dir)
+        .filter(F.col("est_jaccard") >= _DUP_THRESH)
+        .select("d1", "d2")
     )
+    return label_propagate(_doc_nodes(spark, sf_dir), pairs)
 
 
 def _labels_as_components(labels: DataFrame) -> DataFrame:
@@ -711,7 +712,7 @@ def dedup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Connected components over the ngram-jaccard near-dup graph; the
     converged labeling maps every doc to min(doc_id) of its component
     and `is_canonical` marks the survivor each component keeps."""
-    return _labels_as_components(_components_labels(spark, sf_dir, "exact"))
+    return _labels_as_components(_components_exact(spark, sf_dir))
 
 
 #: the exact-jaccard transitive-closure CTE chain — shared by every
@@ -759,7 +760,7 @@ def dedup_components_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     fully deterministic, so the whole pipeline — signatures, bands,
     candidate pairs, estimated jaccard threshold, transitive closure —
     is reproduced by the DuckDB oracle's recursive CTE."""
-    return _labels_as_components(_components_labels(spark, sf_dir, "lsh"))
+    return _labels_as_components(_components_lsh(spark, sf_dir))
 
 
 #: LSH transitive-closure CTE chain (composes `LSH_EST_SQL`) — shared
@@ -870,7 +871,7 @@ def dedup_keep_best_per_component(spark: SparkSession, sf_dir: str) -> DataFrame
     `dedup_keep_best_lsh` is the corpus-scale sibling over the
     banded-LSH edge graph."""
     return _keep_best(
-        _labels_as_components(_components_labels(spark, sf_dir, "exact")),
+        _labels_as_components(_components_exact(spark, sf_dir)),
         quality_scores(spark, sf_dir),
     )
 
@@ -883,7 +884,7 @@ def dedup_keep_best_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     Shares the session-persisted LSH labeling, so composing it after
     the components query costs one join + one argmax aggregate."""
     return _keep_best(
-        _labels_as_components(_components_labels(spark, sf_dir, "lsh")),
+        _labels_as_components(_components_lsh(spark, sf_dir)),
         quality_scores(spark, sf_dir),
     )
 
@@ -960,7 +961,7 @@ def dedup_cluster_size_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     session-shared LSH labeling, so after any components-family query
     this is two tiny aggregations; `dup_frac` = share of all docs
     living in components of that size (exact integer count ratio)."""
-    comp = _components_labels(spark, sf_dir, "lsh")
+    comp = _components_lsh(spark, sf_dir)
     sizes = comp.groupBy("label").agg(F.count("*").alias("cluster_size"))
     hist = sizes.groupBy("cluster_size").agg(F.count("*").alias("n_components"))
     total = hist.agg(
@@ -1136,7 +1137,7 @@ def dedup_soft_reweight(spark: SparkSession, sf_dir: str) -> DataFrame:
     the window is one shuffle on component_id, the documents join is
     key-co-partitioned on doc_id — nothing quadratic, nothing
     driver-sized."""
-    comp = _labels_as_components(_components_labels(spark, sf_dir, "lsh")).select(
+    comp = _labels_as_components(_components_lsh(spark, sf_dir)).select(
         "doc_id", "component_id"
     )
     sized = comp.withColumn(

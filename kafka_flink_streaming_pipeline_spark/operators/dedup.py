@@ -35,50 +35,13 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from kafka_flink_streaming_pipeline_spark.functions.core import det_round, det_round_sql
+from kafka_flink_streaming_pipeline_spark.operators import shared_cache
 from kafka_flink_streaming_pipeline_spark.plans import QuerySpec
 from kafka_flink_streaming_pipeline_spark.sources.batch import load_table
 
 # --- shared building blocks ----------------------------------------------
 
 _WORDS_SQL = "SELECT doc_id, string_split(text, ' ') AS ws FROM documents"
-
-#: session-scoped persisted common subexpressions for the dedup family.
-#: The components/keep-best/leakage/containment composites all build on
-#: the SAME pair graph (exact 3-gram jaccard edges, or banded-LSH
-#: estimated-jaccard edges); Catalyst cannot share an exchange across
-#: separate query executions, so without this each battery entry re-ran
-#: the whole shingle→join→aggregate edge pipeline (~10 s of the 52 s
-#: round-3 battery). Keyed by (applicationId, sf_dir, subtree): the
-#: testdata is immutable per sf_dir, so a persisted pair set is valid
-#: for the lifetime of the session. At 100 TB this is exactly the
-#: materialized "candidate pair table" a production curation DAG writes
-#: once and feeds to every downstream consumer.
-_SHARED_SUBTREES: dict[tuple[str, str, str], DataFrame] = {}
-
-
-def _session_shared(spark: SparkSession, sf_dir: str, key: str, build) -> DataFrame:
-    app = spark.sparkContext.applicationId
-    for stale in [k for k in _SHARED_SUBTREES if k[0] != app]:
-        _SHARED_SUBTREES.pop(stale, None)  # dropped with the old session's JVM state
-    ck = (app, sf_dir, key)
-    if ck not in _SHARED_SUBTREES:
-        # r8: disk-backed across processes (spark-warehouse/shared_cache,
-        # keyed by sf_dir parquet mtimes — see operators/shared_cache.py);
-        # within a process the memo still guarantees one materialization.
-        # Cache misses build via eager localCheckpoint, not persist():
-        # the materialized table must survive a
-        # spark.catalog.clearCache() (bench.py issues one between its
-        # warm and measured runs), and checkpoint blocks do while
-        # cache-manager entries do not. bench.py times these builds as
-        # explicit `shared_*_graph_build` entries so the one-time cost
-        # stays visible in the battery total.
-        from kafka_flink_streaming_pipeline_spark.operators import shared_cache
-
-        _SHARED_SUBTREES[ck] = shared_cache.get_or_build_df(
-            spark, sf_dir, key, build
-        )
-    return _SHARED_SUBTREES[ck]
-
 
 def _docs_parallel(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The documents scan, spread across the cluster. The testdata table
@@ -347,24 +310,21 @@ def dedup_ngram_jaccard_prefix(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@shared_cache.artifact("shared_exact_pairs")
 def exact_ngram_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The session-shared EXACT near-dup edge set (3-gram jaccard ≥
     {_NGRAM_JACCARD_T}): the subtree `dedup_components`,
     `dedup_keep_best_per_component` and `split_leakage_check` all
     compose. Built once per session and materialized (see
-    `_SHARED_SUBTREES`). Uses the NAIVE inverted-index join, not prefix
-    filtering: shingle postings are near-unique, so the naive join wins
-    (strategy follows token skew — see `dedup_word_jaccard`; measured
-    10×: naive ~60 s vs prefix 297 s, the doc-frequency ranking window
-    dominates when prefixes barely prune)."""
-    return _session_shared(
-        spark,
-        sf_dir,
-        "exact_ngram_pairs",
-        lambda: _jaccard_pairs(
-            _doc_shingles(spark, sf_dir), "shingle", _NGRAM_JACCARD_T
-        ),
-    )
+    `operators/shared_cache.py`): Catalyst cannot share an exchange
+    across separate query executions, so without it each consumer
+    re-ran the whole shingle→join→aggregate edge pipeline. Uses the
+    NAIVE inverted-index join, not prefix filtering: shingle postings
+    are near-unique, so the naive join wins (strategy follows token
+    skew — see `dedup_word_jaccard`; measured 10×: naive ~60 s vs
+    prefix 297 s, the doc-frequency ranking window dominates when
+    prefixes barely prune)."""
+    return _jaccard_pairs(_doc_shingles(spark, sf_dir), "shingle", _NGRAM_JACCARD_T)
 
 
 # --- MinHash + LSH --------------------------------------------------------
@@ -428,17 +388,16 @@ def _band_join_partitions(bands: DataFrame, lo: int) -> int:
     return int(max(lo, min(4096, need)))
 
 
+@shared_cache.artifact("shared_lsh_pairs")
 def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Session-shared banded-LSH candidate pairs with estimated jaccard
     (see `_lsh_est_build` for the plan): the subtree every LSH-edged
     composite (`dedup_components_lsh`, `dedup_keep_best_lsh`,
     `split_leakage_check_lsh`, `dedup_containment_lsh`) composes, so it
-    is built once per session and persisted (`_SHARED_SUBTREES`) — the
-    round-3 driver bench showed the components family re-running this
-    pipeline per query."""
-    return _session_shared(
-        spark, sf_dir, "lsh_est_pairs", lambda: _lsh_est_build(spark, sf_dir)
-    )
+    is built once per session and persisted (`operators/shared_cache.py`)
+    — the round-3 battery showed the components family re-running
+    this pipeline per query."""
+    return _lsh_est_build(spark, sf_dir)
 
 
 def _lsh_est_build(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -49,10 +49,9 @@ FEATURE_SCHEMA = T.StructType(
 def decode_image_real(payload: bytes) -> dict:
     """Real decode path — Pillow, import-gated (the default container
     ships no image libraries; `tests/test_plans.py` exercises this with
-    a real PNG when Pillow exists and self-skips otherwise, the same
-    env-gate treatment as streaming/stateful_v2). The plumbing around
-    it (media_table → mapInPandas → FEATURE_SCHEMA) is identical for
-    the real and fake paths."""
+    a real PNG when Pillow exists and self-skips otherwise). The
+    plumbing around it (media_table → mapInPandas → FEATURE_SCHEMA) is
+    identical for the real and fake paths."""
     try:
         import io
 

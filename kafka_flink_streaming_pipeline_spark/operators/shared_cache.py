@@ -1,25 +1,46 @@
-"""Cross-process disk persistence for the session-shared one-time
-builds (pair graphs, PQ code tables, the IVF inverted file, the
-power-iteration direction).
+"""Session-shared artifacts: the one place that knows about them.
 
-`_session_shared` (operators/dedup.py) already materializes these once
-per SESSION; but every battery/driver process rebuilt them from
-scratch (~22 s of the 142 s r7 battery). Their own docstrings argue
-the artifacts are write-once at 100 TB — a production curation DAG
-materializes its candidate-pair table / ANN index ONCE and every
-downstream consumer reads it from storage. This module makes the local
-harness do what the docstrings say: artifacts land under
-`spark-warehouse/shared_cache/<key>__<fingerprint>/`, where the
+A handful of operator subtrees are built once per corpus and composed
+by many registry entries: the near-dup pair graphs and their component
+labelings, the exact cosine top-k anchor, the PQ code tables, the
+trained IVF cells, the on-disk IVF index and the power-iteration
+direction. A production curation DAG materializes each of these once
+and every downstream consumer reads it from storage; this module makes
+the local engine do the same.
+
+Declaration. Each artifact is declared exactly once, by decorating its
+builder `fn(spark, sf_dir)` with `@artifact(name)`; the decorator
+returns the accessor that serves it. `SHARED` holds the declarations
+in import order, which is dependency order (a module imports the
+module whose artifacts it builds on, and within a module a builder is
+declared after the artifacts it reads). The name is the same
+everywhere: memo key, cache directory, bench.py pseudo-entry and
+SPARK_GRAFT_BENCH_SKIP token.
+
+Memo. `get` serves each artifact once per (applicationId, sf_dir,
+name); entries of a previous SparkSession are dropped with its JVM
+state. `clear()` forgets every artifact, so the next access rebuilds.
+DataFrame artifacts are materialized with an eager localCheckpoint
+(not persist) so they survive `spark.catalog.clearCache()`.
+
+Access record. Inside `recording(entry, refuse=...)` every access is
+recorded as name -> "hit" (memo), "disk" (read from the cache below)
+or "build", and an access to a refused name raises before anything is
+built, naming the entry and the artifact. bench.py uses the record as
+its per-entry consumer map and refuses the artifacts it was told to
+skip, so no consumer is ever timed over a one-time build.
+
+Disk cache. Artifacts land under
+`spark-warehouse/shared_cache/<name>__<fingerprint>/`, where the
 fingerprint covers
 
 - the resolved sf_dir path,
 - (name, mtime_ns, size) of every parquet file in it — the testdata
   is immutable per sf_dir, so any regeneration invalidates the key,
-- the artifact key and `CACHE_VERSION`,
-- a hash of the BUILDER'S SOURCE (the `build` callable plus every
-  package-local function it directly references) — an edit to the
-  builder's logic invalidates its cached artifact automatically, so
-  `CACHE_VERSION` is a belt-and-braces hammer, not the only guard.
+- the md5 of every `.py` file in this package. Any edit anywhere in
+  the package, however many calls below a builder, rebuilds every
+  artifact once; a per-builder hash cannot see helpers, closures or
+  module constants, and served stale artifacts when it missed one.
 
 Crash/torn-write safety: builds write to a pid-suffixed temp dir and
 `os.rename` into place — first writer wins, losers read the winner's
@@ -30,77 +51,141 @@ rebuilt. Temp dirs from crashed builders (pid no longer alive) are
 swept before each build. `try/finally` removes this process's temp
 dir on any build failure.
 
-Set SPARK_GRAFT_SHARED_CACHE=0 to disable (in-memory behavior only).
+Set SPARK_GRAFT_SHARED_CACHE=0 to disable the disk cache (the memo
+stays on).
 """
 
 from __future__ import annotations
 
+import functools
 import hashlib
-import inspect
 import json
 import os
 import shutil
+from contextlib import contextmanager
 from pathlib import Path
 
-CACHE_VERSION = 2  # r9: builder-source fingerprint + torn-write recovery
-
-_ROOT = Path(__file__).resolve().parents[2] / "spark-warehouse" / "shared_cache"
+_PKG = Path(__file__).resolve().parents[1]
+_ROOT = _PKG.parent / "spark-warehouse" / "shared_cache"
 
 #: our own marker for artifacts not written by Spark (get_or_build_path
 #: builders write Spark parquet INSIDE the dir, but the dir itself may
 #: hold extra sidecar files — mark the whole publish unit).
 _OK_MARKER = "_CACHE_OK"
 
+#: name -> (kind, builder), in declaration (= dependency) order. kind
+#: "df": builder returns a DataFrame; "json": a JSON-able value; "path":
+#: builder(spark, sf_dir, path) writes the artifact into `path`.
+SHARED: dict[str, tuple[str, object]] = {}
+
+_MEMO: dict[tuple[str, str, str], object] = {}
+
+#: (entry, record, refused) of the innermost `recording` block
+_RECORDING: tuple[str | None, dict[str, str] | None, frozenset] = (
+    None,
+    None,
+    frozenset(),
+)
+
 
 def enabled() -> bool:
     return os.environ.get("SPARK_GRAFT_SHARED_CACHE", "1") != "0"
 
 
-_PKG_PREFIX = "kafka_flink_streaming_pipeline_spark"
+def artifact(name: str, kind: str = "df"):
+    """Declare `build` as the builder of shared artifact `name`; the
+    decorated name becomes its memoized, disk-cached accessor."""
+
+    def register(build):
+        if name in SHARED:
+            raise ValueError(f"shared artifact {name} declared twice")
+        SHARED[name] = (kind, build)
+
+        @functools.wraps(build)
+        def accessor(spark, sf_dir: str):
+            return get(spark, sf_dir, name)
+
+        return accessor
+
+    return register
 
 
-def _code_fp(build) -> str:
-    """Hash the builder's source plus the source of every package-local
-    function it directly references (one level — enough to catch an
-    edit to e.g. `build_ann_index` behind a thin lambda). Falls back to
-    raw bytecode when source is unavailable (REPL-defined callables);
-    unresolvable referents are skipped, so this is best-effort by
-    design — CACHE_VERSION remains the manual override."""
-    pieces: list[str] = []
+def get(spark, sf_dir: str, name: str):
+    """Serve artifact `name` for `sf_dir`: memo, else disk, else build."""
+    entry, record, refused = _RECORDING
+    if name in refused:
+        raise RuntimeError(
+            f"{entry} needs shared artifact {name}, which is skipped — add "
+            f"{entry} to SPARK_GRAFT_BENCH_SKIP or stop skipping {name}"
+        )
+    app = spark.sparkContext.applicationId
+    for stale in [k for k in _MEMO if k[0] != app]:
+        del _MEMO[stale]  # dropped with the old session's JVM state
+    key = (app, sf_dir, name)
+    event = "hit"
+    if key not in _MEMO:
+        kind, build = SHARED[name]
+        built = []
+
+        def run(*path):
+            built.append(1)
+            return build(spark, sf_dir, *path)
+
+        if kind == "df":
+            _MEMO[key] = get_or_build_df(spark, sf_dir, name, run)
+        elif kind == "json":
+            _MEMO[key] = get_or_build_json(sf_dir, name, run)
+        else:
+            _MEMO[key] = get_or_build_path(name, sf_dir, run)
+        event = "build" if built else "disk"
+    if record is not None:
+        record.setdefault(name, event)
+    return _MEMO[key]
+
+
+def clear() -> None:
+    """Forget every memoized artifact: the next access rebuilds (or
+    re-reads the disk cache, when it is on)."""
+    _MEMO.clear()
+
+
+@contextmanager
+def recording(entry: str, refuse=()):
+    """Record the artifacts `entry` touches into the yielded dict
+    (name -> "hit" | "disk" | "build", first access wins) and refuse
+    every artifact named in `refuse`."""
+    global _RECORDING
+    prev = _RECORDING
+    record: dict[str, str] = {}
+    _RECORDING = (entry, record, frozenset(refuse))
     try:
-        pieces.append(inspect.getsource(build))
-    except (OSError, TypeError):
-        code = getattr(build, "__code__", None)
-        pieces.append(code.co_code.hex() if code is not None else repr(build))
-    code = getattr(build, "__code__", None)
-    glb = getattr(build, "__globals__", {})
-    if code is not None:
-        for name in sorted(set(code.co_names)):
-            ref = glb.get(name)
-            if ref is None or not callable(ref):
-                continue
-            if not getattr(ref, "__module__", "").startswith(_PKG_PREFIX):
-                continue
-            try:
-                pieces.append(inspect.getsource(ref))
-            except (OSError, TypeError):
-                pass
-    return hashlib.md5("\n".join(pieces).encode()).hexdigest()[:12]
+        yield record
+    finally:
+        _RECORDING = prev
 
 
-def sf_fingerprint(sf_dir: str, build=None) -> str:
+@functools.cache
+def code_fingerprint() -> str:
+    """md5 over the path and bytes of every `.py` file in the package."""
+    h = hashlib.md5()
+    for f in sorted(_PKG.rglob("*.py")):
+        h.update(str(f.relative_to(_PKG)).encode())
+        h.update(f.read_bytes())
+    return h.hexdigest()
+
+
+def sf_fingerprint(sf_dir: str) -> str:
     p = Path(sf_dir).resolve()
     stats = []
     for f in sorted(p.glob("*.parquet")):
         st = f.stat()
         stats.append((f.name, st.st_mtime_ns, st.st_size))
-    code_fp = _code_fp(build) if build is not None else ""
-    blob = json.dumps([str(p), CACHE_VERSION, code_fp, stats]).encode()
+    blob = json.dumps([str(p), code_fingerprint(), stats]).encode()
     return hashlib.md5(blob).hexdigest()[:16]
 
 
-def artifact_dir(key: str, sf_dir: str, build=None) -> Path:
-    return _ROOT / f"{key}__{sf_fingerprint(sf_dir, build)}"
+def artifact_dir(key: str, sf_dir: str) -> Path:
+    return _ROOT / f"{key}__{sf_fingerprint(sf_dir)}"
 
 
 def _sweep_stale_tmp(final: Path) -> None:
@@ -153,7 +238,7 @@ def get_or_build_df(spark, sf_dir: str, key: str, build):
     at tiny SF; writing it can produce a schema-less directory)."""
     if not enabled():
         return build().localCheckpoint()
-    final = artifact_dir(key, sf_dir, build)
+    final = artifact_dir(key, sf_dir)
     _clear_torn(final, "_SUCCESS")
     if not _valid(final, "_SUCCESS"):
         df = build().localCheckpoint()
@@ -176,7 +261,7 @@ def get_or_build_json(sf_dir: str, key: str, build):
     a same-directory `os.replace`, so torn files cannot be observed."""
     if not enabled():
         return build()
-    final = artifact_dir(key, sf_dir, build).with_suffix(".json")
+    final = artifact_dir(key, sf_dir).with_suffix(".json")
     if final.exists():
         return json.loads(final.read_text())
     value = build()
@@ -201,7 +286,7 @@ def get_or_build_path(key: str, sf_dir: str, build_into) -> str:
         path = tempfile.mkdtemp(prefix=f"{key}_")
         build_into(path)
         return path
-    final = artifact_dir(key, sf_dir, build_into)
+    final = artifact_dir(key, sf_dir)
     _clear_torn(final, _OK_MARKER)
     if not _valid(final, _OK_MARKER):
         _ROOT.mkdir(parents=True, exist_ok=True)

@@ -37,6 +37,7 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from kafka_flink_streaming_pipeline_spark.functions.core import det_round, det_round_sql
+from kafka_flink_streaming_pipeline_spark.operators import shared_cache
 from kafka_flink_streaming_pipeline_spark.plans import QuerySpec
 from kafka_flink_streaming_pipeline_spark.sources.batch import load_table
 
@@ -99,16 +100,11 @@ def topk_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     parquet round-trip through the disk cache is bit-lossless; the
     ORDER BY is re-applied after the cache read (parquet preserves no
     row order contract)."""
-    from kafka_flink_streaming_pipeline_spark.operators.dedup import (
-        _session_shared,
-    )
-
-    return _session_shared(
-        spark, sf_dir, "exact_topk_cosine", lambda: _topk_cosine_build(spark, sf_dir)
-    ).orderBy("query_id", "rank")
+    return _topk_cosine_shared(spark, sf_dir).orderBy("query_id", "rank")
 
 
-def _topk_cosine_build(spark: SparkSession, sf_dir: str) -> DataFrame:
+@shared_cache.artifact("shared_exact_topk")
+def _topk_cosine_shared(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = load_table(spark, sf_dir, "embeddings")
     queries = F.broadcast(
         _with_norm(e.filter(F.col("vec_id") < _N_QUERIES), "query_id", "qv")
@@ -590,12 +586,6 @@ def ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # --- persisted IVF index (inverted file on disk) ---------------------------
 
-#: session-scoped (applicationId, sf_dir) → on-disk index path, so the
-#: registered probe query builds the index once per session — the
-#: production shape: the inverted file is WRITTEN once, probed forever
-_ANN_INDEX_PATHS: dict[tuple[str, str], str] = {}
-
-
 def build_ann_index(embeddings: DataFrame, index_path: str) -> None:
     """Write the IVF inverted file: every vector stored WITH its norm,
     as parquet PARTITIONED BY centroid_id — the embedding-side analogue
@@ -703,19 +693,13 @@ def probe_ann_index(
     )
 
 
-def ann_index_path(spark: SparkSession, sf_dir: str) -> str:
-    """Session-memoized build of the on-disk IVF index for a testdata
-    dir (written once per session — the production lifecycle)."""
-    from kafka_flink_streaming_pipeline_spark.operators import shared_cache
-
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _ANN_INDEX_PATHS:
-        _ANN_INDEX_PATHS[key] = shared_cache.get_or_build_path(
-            "ann_ivf_index",
-            sf_dir,
-            lambda p: build_ann_index(load_table(spark, sf_dir, "embeddings"), p),
-        )
-    return _ANN_INDEX_PATHS[key]
+@shared_cache.artifact("shared_ann_index", kind="path")
+def ann_index_path(spark: SparkSession, sf_dir: str, path: str) -> None:
+    """The on-disk IVF index for a testdata dir, written once per
+    session (the production lifecycle: the inverted file is WRITTEN
+    once, probed forever). Builds into `path`; the declared accessor
+    `ann_index_path(spark, sf_dir)` returns the published directory."""
+    build_ann_index(load_table(spark, sf_dir, "embeddings"), path)
 
 
 def ann_ivf_persisted(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -920,26 +904,17 @@ def _pq_anchors(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@shared_cache.artifact("shared_pq_codes")
 def _pq_codes(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(vec_id, m, code): every vector's per-subspace nearest anchor —
-    SESSION-SHARED like the dedup pair graphs (`_session_shared`): the
+    SESSION-SHARED like the dedup pair graphs (`shared_cache`): the
     encode is the one-time index build a production DAG persists once
     per corpus snapshot (exactly like the on-disk IVF file), and both
     the codes entry and the ADC search compose it. bench.py times the
-    build as an explicit `shared_pq_codes_build` entry."""
-    from kafka_flink_streaming_pipeline_spark.operators.dedup import (
-        _session_shared,
-    )
-
-    return _session_shared(
-        spark, sf_dir, "pq_codes", lambda: _pq_codes_build(spark, sf_dir)
-    )
-
-
-def _pq_codes_build(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The actual encode: N×M×K assignment rows stream through one
-    (vec_id, m)-partitioned rank window — 16 rows per partition,
-    shuffle payload is 3 ints + one nano-unit distance."""
+    build as its own `shared_pq_codes` entry. The encode: N×M×K
+    assignment rows stream through one (vec_id, m)-partitioned rank
+    window — 16 rows per partition, shuffle payload is 3 ints + one
+    nano-unit distance."""
     from pyspark.sql import Window
 
     e = load_table(spark, sf_dir, "embeddings")
@@ -967,6 +942,7 @@ def _pq_codes_build(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@shared_cache.artifact("shared_pq_codes_packed")
 def _pq_codes_packed(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(vec_id, codes): the PACKED index layout — one row per vector,
     codes as an M-element array of LOCAL anchor indices (0..K-1) in
@@ -978,23 +954,16 @@ def _pq_codes_packed(spark: SparkSession, sf_dir: str) -> DataFrame:
     broadcast LUT per vector) and the only shuffle left is the top-k.
     Derived from the session-shared skinny codes (one groupBy,
     amortized across every ADC consumer) and session-shared itself."""
-    from kafka_flink_streaming_pipeline_spark.operators.dedup import (
-        _session_shared,
-    )
-
-    def build() -> DataFrame:
-        return (
-            _pq_codes(spark, sf_dir)
-            .groupBy("vec_id")
-            .agg(
-                F.transform(
-                    F.array_sort(F.collect_list(F.struct("m", "code"))),
-                    lambda s: (s.code - _N_QUERIES).cast("int"),
-                ).alias("codes")
-            )
+    return (
+        _pq_codes(spark, sf_dir)
+        .groupBy("vec_id")
+        .agg(
+            F.transform(
+                F.array_sort(F.collect_list(F.struct("m", "code"))),
+                lambda s: (s.code - _N_QUERIES).cast("int"),
+            ).alias("codes")
         )
-
-    return _session_shared(spark, sf_dir, "pq_codes_packed", build)
+    )
 
 
 def _pq_query_lut_arrays(lut: DataFrame) -> DataFrame:
@@ -2552,6 +2521,7 @@ ORDER BY cid
 """
 
 
+@shared_cache.artifact("shared_ivf_trained_cells")
 def _ivf_trained_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(vec_id, cid): every vector's final-codebook cell — the trained
     index build, SESSION-SHARED + disk-cached (r12, extending r11
@@ -2563,15 +2533,8 @@ def _ivf_trained_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
     PROCESS entries (`sim_kmeans_train` / `sim_kmeans_centroids`)
     deliberately keep calling `_km_train` — the iteration log IS their
     output; this cache holds only the payoff assignment."""
-    from kafka_flink_streaming_pipeline_spark.operators.dedup import (
-        _session_shared,
-    )
-
-    def build() -> DataFrame:
-        _, cent, _, pts = _km_train(spark, sf_dir)
-        return _km_assign(pts, cent).select("vec_id", "cid")
-
-    return _session_shared(spark, sf_dir, "ivf_trained_cells", build)
+    _, cent, _, pts = _km_train(spark, sf_dir)
+    return _km_assign(pts, cent).select("vec_id", "cid")
 
 
 def ann_ivf_trained(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -134,7 +134,8 @@ def produce_topic_log(
         dest = os.path.join(log_dir, f"p={pid}")
         os.makedirs(dest, exist_ok=True)
         files = sorted(glob.glob(os.path.join(pdir, "*.parquet")))
-        assert len(files) == 1, f"expected one segment file per pid, got {files}"
+        if len(files) != 1:  # RuntimeError, not assert: must survive -O
+            raise RuntimeError(f"expected one segment file per pid, got {files}")
         shutil.move(files[0], os.path.join(dest, f"segment_{segment:06d}.parquet"))
     shutil.rmtree(staged, ignore_errors=True)
 

@@ -5,8 +5,8 @@ SPARK_GRAFT_BENCH_PREV unset it compared against the lexicographically
 LAST BENCH_DETAIL_r*.json — during an rN session that is an rN-family
 file (self-comparison, drift ~1x) or an other-sf variant (prev={}),
 so the min-of-3 policy could never fire against the previous round.
-These tests pin the fixed selection rule plus the pre-build skip
-fail-fast and the exact-anchor auto-skip set.
+These tests pin the fixed selection rule plus the refusal of skipped
+shared artifacts and the exact-anchor auto-skip set.
 """
 
 from __future__ import annotations
@@ -59,39 +59,86 @@ def test_round_env_override(monkeypatch):
     assert bench._current_round() == 7
 
 
-def test_prebuild_skip_fail_fast():
-    # skipping a pre-build without its consumers must refuse to run;
-    # RuntimeError (not assert) so the check survives python -O
+def test_prebuild_skip_fail_fast(tmp_path, monkeypatch):
+    """A skipped shared artifact is refused: its consumer raises before
+    anything is built, naming both the entry and the artifact, and
+    leaves no memo entry and no cache directory behind. RuntimeError
+    (not assert) so the refusal survives python -O."""
+    from types import SimpleNamespace
+
+    from kafka_flink_streaming_pipeline_spark.operators import shared_cache
+
+    monkeypatch.setenv("SPARK_GRAFT_SHARED_CACHE", "1")
+    monkeypatch.setattr(shared_cache, "_ROOT", tmp_path / "shared_cache")
+    monkeypatch.setattr(shared_cache, "SHARED", {})
+    monkeypatch.setattr(shared_cache, "_MEMO", {})
+    built = []
+
+    @shared_cache.artifact("shared_probe_vector", kind="json")
+    def probe(spark, sf_dir):
+        built.append(1)
+        return [1, 2, 3]
+
+    spark = SimpleNamespace(sparkContext=SimpleNamespace(applicationId="app-1"))
+    with shared_cache.recording("probe_consumer", refuse={"shared_probe_vector"}):
+        with pytest.raises(RuntimeError) as e:
+            probe(spark, str(tmp_path))
+    assert "probe_consumer" in str(e.value)
+    assert "shared_probe_vector" in str(e.value)
+    assert not built and not shared_cache._MEMO
+    assert not (tmp_path / "shared_cache").exists()
+    # unrefused, the same access builds once and records what happened
+    with shared_cache.recording("probe_consumer") as rec:
+        assert probe(spark, str(tmp_path)) == [1, 2, 3]
+        assert probe(spark, str(tmp_path)) == [1, 2, 3]
+    assert rec == {"shared_probe_vector": "build"} and built == [1]
+    shared_cache.clear()
+    with shared_cache.recording("probe_consumer") as rec:
+        probe(spark, str(tmp_path))
+    assert rec == {"shared_probe_vector": "disk"} and built == [1]
+
+
+def test_exact_anchor_set_closed_under_prebuild_consumers(spark):
+    """The sf>=1 auto-skip must itself be legal: with every
+    EXACT_ANCHORS name skipped, no other shared artifact or battery
+    entry may need a skipped artifact. Each is built the way bench.py
+    builds it, under `recording(name, refuse=...)`, so a consumer
+    missing from EXACT_ANCHORS raises."""
+    from kafka_flink_streaming_pipeline_spark.operators import shared_cache
+    from kafka_flink_streaming_pipeline_spark.plans import merged
+
+    from tests.conftest import SF_SMOKE
+
+    plans = merged()
+    skip = set(bench.EXACT_ANCHORS)
+    refused = skip & set(shared_cache.SHARED)
+    assert refused
+    for name in shared_cache.SHARED:
+        if name not in skip:
+            with shared_cache.recording(name, refused):
+                shared_cache.get(spark, SF_SMOKE, name)
+    for name in bench.HEADLINE:
+        if name in plans and name not in skip:
+            with shared_cache.recording(name, refused):
+                plans[name].build(spark, SF_SMOKE)
+    # the refusal is live: a skipped consumer of the exact graph is refused
     with pytest.raises(RuntimeError, match="dedup_components"):
-        bench._check_prebuild_skips({"shared_exact_graph_build"})
-    with pytest.raises(RuntimeError, match="dedup_minhash_lsh"):
-        bench._check_prebuild_skips({"shared_lsh_graph_build"})
-    with pytest.raises(RuntimeError, match="sim_ann_recall_report"):
-        bench._check_prebuild_skips(
-            {"shared_pq_codes_build", "embedding_pq_codes", "sim_topk_cosine_pq",
-             "sim_ann_ivfpq", "hybrid_retrieval_mmr_ann", "hybrid_retrieval_rrf_ann"}
-        )
-    # the full consumer set makes it legal
-    ok = {"shared_exact_graph_build", *bench.PREBUILD_CONSUMERS["shared_exact_graph_build"]}
-    bench._check_prebuild_skips(ok)
-    bench._check_prebuild_skips(set())
+        with shared_cache.recording("dedup_components", refused):
+            plans["dedup_components"].build(spark, SF_SMOKE)
 
 
-def test_exact_anchor_set_closed_under_prebuild_consumers():
-    # the sf>=1 auto-skip must itself satisfy the fail-fast invariant
-    bench._check_prebuild_skips(set(bench.EXACT_ANCHORS))
-
-
-def test_prebuild_consumers_are_registry_entries():
+def test_exact_anchors_and_artifact_names_resolve():
+    """Every EXACT_ANCHORS name is a registry entry or a declared
+    shared artifact, and no artifact name shadows a registry entry
+    (the name doubles as a bench pseudo-entry and skip token)."""
+    from kafka_flink_streaming_pipeline_spark.operators import shared_cache
     from kafka_flink_streaming_pipeline_spark.plans import merged
 
     plans = merged()
-    for build, consumers in bench.PREBUILD_CONSUMERS.items():
-        for c in consumers:
-            assert c in plans, f"{build} consumer {c} not in registry"
+    assert shared_cache.SHARED
+    assert not set(shared_cache.SHARED) & set(plans)
     for n in bench.EXACT_ANCHORS:
-        if not n.startswith("shared_"):
-            assert n in plans
+        assert n in plans or n in shared_cache.SHARED, n
 
 
 def test_dirty_start_warning_fires_only_on_contaminated_start():
@@ -124,30 +171,25 @@ def test_bench_headline_line_carries_canary_stable(tmp_path):
     entry skipped: the battery degenerates to warmup + canaries, and
     BOTH emitted JSON documents must carry the canary_stable verdict."""
     import os
+    import shutil
     import subprocess
 
+    from kafka_flink_streaming_pipeline_spark.operators import shared_cache
     from kafka_flink_streaming_pipeline_spark.plans import merged
 
-    skip = sorted(
-        set(merged())
-        | {
-            "shared_exact_graph_build",
-            "shared_lsh_graph_build",
-            "shared_ann_index_build",
-            "shared_pq_codes_build",
-            "shared_kmeans_cells_build",
-            "shared_exact_topk_build",
-            "shared_power_iteration",
-        }
-    )
+    # run a copy: bench.py writes BENCH_DETAIL.json next to itself, and
+    # the repo-root file holds the last real battery
+    shutil.copy(REPO / "bench.py", tmp_path / "bench.py")
+    skip = sorted(set(merged()) | set(shared_cache.SHARED))
     env = dict(
         os.environ,
+        PYTHONPATH=str(REPO),
         SPARK_GRAFT_SF_DIR="/root/testdata/sf0.001",
         SPARK_GRAFT_BENCH_SKIP=",".join(skip),
         SPARK_GRAFT_SHUFFLE="8",
     )
     out = subprocess.run(
-        [sys.executable, str(REPO / "bench.py")],
+        [sys.executable, str(tmp_path / "bench.py")],
         capture_output=True,
         text=True,
         env=env,
@@ -163,6 +205,7 @@ def test_bench_headline_line_carries_canary_stable(tmp_path):
     assert detail and all(
         isinstance(d.get("canary_stable"), bool) for d in detail
     )
+    assert json.loads((tmp_path / "BENCH_DETAIL.json").read_text())["shared"] == {}
 
 
 def test_bench_diff_min_abs_is_canary_normalized(tmp_path):

@@ -15,10 +15,13 @@ Representatives cover each device family rather than all 212 entries
 (runtime budget): the token-budget chain (LSH closure + quality gate +
 ppm division), the DSIR race (transcendentals rounded once +
 integer sums), k-means (iterative integer means), power iteration
-(iterative integer matvec — module memo cleared so both runs actually
-iterate), BPE training (string-fold merge loop), exact decimal moments
-(z-scores), and the islands window. A failure here is a determinism
-BUG even if the DuckDB oracle happens to agree on the default width.
+(iterative integer matvec), BPE training (string-fold merge loop), exact decimal moments
+(z-scores), and the islands window. Every session-shared
+artifact (operators/shared_cache.py) is cleared before each run, so the
+LSH closure and the power iteration are rebuilt under both widths
+rather than served from the first run's memo. A failure here is a
+determinism BUG even if the DuckDB oracle happens to agree on the
+default width.
 """
 
 from __future__ import annotations
@@ -53,15 +56,15 @@ def _value_multiset(df) -> list[tuple]:
 
 @pytest.mark.parametrize("name", REPRESENTATIVES)
 def test_values_invariant_under_shuffle_width(spark, name):
-    from kafka_flink_streaming_pipeline_spark.operators import linalg
+    from kafka_flink_streaming_pipeline_spark.operators import shared_cache
 
     spec = merged()[name]
     default_width = spark.conf.get("spark.sql.shuffle.partitions")
-    linalg._PI_CACHE.clear()  # force the iterative path in BOTH runs
+    shared_cache.clear()  # rebuild every shared artifact in BOTH runs
     base = _value_multiset(spec.build(spark, SF_CORRECT))
     try:
         spark.conf.set("spark.sql.shuffle.partitions", "7")
-        linalg._PI_CACHE.clear()
+        shared_cache.clear()
         hostile = _value_multiset(spec.build(spark, SF_CORRECT))
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", default_width)

@@ -14,24 +14,16 @@ import re
 import pytest
 from pyspark.sql import functions as F
 
+from kafka_flink_streaming_pipeline_spark.operators import shared_cache
 from kafka_flink_streaming_pipeline_spark.plans import merged
 
 from tests.conftest import SF_CORRECT, SF_SMOKE
 
 
-def _fresh_subtrees() -> None:
-    """Drop the session-shared dedup pair-graph materializations so a
-    plan-shape or determinism check exercises the real build pipeline,
-    not a checkpoint scan of a previous test's result."""
-    from kafka_flink_streaming_pipeline_spark.operators.dedup import (
-        _SHARED_SUBTREES,
-    )
-
-    _SHARED_SUBTREES.clear()
-
-
 def _plan(spark, name: str) -> str:
-    _fresh_subtrees()
+    # drop the session-shared artifacts so a plan-shape check exercises
+    # the real build pipeline, not a checkpoint scan of an earlier result
+    shared_cache.clear()
     df = merged()[name].build(spark, SF_CORRECT)
     return df._jdf.queryExecution().executedPlan().toString()
 
@@ -122,7 +114,7 @@ def test_results_invariant_to_shuffle_partitioning(spark):
         "sim_topk_cosine",           # float fold + rank frontier
     ]
     specs = merged()
-    _fresh_subtrees()
+    shared_cache.clear()
     baseline = {
         n: sorted(map(tuple, specs[n].build(spark, SF_CORRECT).collect()))
         for n in names
@@ -130,7 +122,7 @@ def test_results_invariant_to_shuffle_partitioning(spark):
     old = spark.conf.get("spark.sql.shuffle.partitions")
     try:
         spark.conf.set("spark.sql.shuffle.partitions", "7")
-        _fresh_subtrees()  # force a REAL rebuild under the hostile width
+        shared_cache.clear()  # force a REAL rebuild under the hostile width
         for n in names:
             again = sorted(map(tuple, specs[n].build(spark, SF_CORRECT).collect()))
             assert again == baseline[n], f"{n} changed under repartitioning"
@@ -471,22 +463,36 @@ def test_no_cartesian_product_in_battery(spark):
     CartesianProduct (both-sides-big unpartitioned cross join — the
     plan that cannot survive any scale-up). Deliberate 1-row broadcasts
     (max-ts scalars, bounds, corpus stats) compile to
-    BroadcastNestedLoopJoin, which is fine and excluded here."""
+    BroadcastNestedLoopJoin, which is fine and excluded here.
+
+    The same sweep records which shared artifacts each entry touches:
+    every entry reaching an artifact in `bench.EXACT_ANCHORS` (the
+    exact pair graph) must be listed there too, or the sf>=1 auto-skip
+    would refuse it the skipped artifact mid-battery."""
     import bench
 
     offenders = []
+    touched = {}
     for name in bench.HEADLINE:
         spec = merged()[name]
         try:
-            plan = (
-                spec.build(spark, SF_CORRECT)._jdf.queryExecution().executedPlan().toString()
-            )
+            with shared_cache.recording(name) as rec:
+                df = spec.build(spark, SF_CORRECT)
+            plan = df._jdf.queryExecution().executedPlan().toString()
         except Exception as e:
             offenders.append(f"{name}: build failed: {e}")
             continue
         if "CartesianProduct" in plan:
             offenders.append(f"{name}: CartesianProduct")
+        touched[name] = set(rec)
     assert not offenders, offenders
+    # the artifacts are declared on import, so read the table after the sweep
+    exact = set(bench.EXACT_ANCHORS) & set(shared_cache.SHARED)
+    touches_exact = {name for name, used in touched.items() if used & exact}
+    assert exact and touches_exact
+    assert touches_exact <= set(bench.EXACT_ANCHORS), touches_exact - set(
+        bench.EXACT_ANCHORS
+    )
 
 
 def test_prefix_jaccard_equals_naive(spark):
@@ -694,8 +700,7 @@ def test_real_image_decode_when_pillow_exists(spark):
     Pillow is installed, `make_decode_batches(real=True)` must decode
     an actual PNG through the SAME mapInPandas plumbing as the fake
     path and report the image's true dimensions; self-skips where the
-    container ships no image libraries (the same gate treatment as
-    streaming/stateful_v2's protobuf dependency)."""
+    container ships no image libraries)."""
     pytest.importorskip("PIL")
     import io
 
@@ -727,11 +732,7 @@ def test_persisted_ann_probe_prunes_partitions(spark):
     PartitionFilters on centroid_id — reading nprobe/K of the corpus,
     not all of it. That pruning IS the index; without it the 'probe'
     is a table scan."""
-    from kafka_flink_streaming_pipeline_spark.operators.similarity import (
-        _ANN_INDEX_PATHS,
-    )
-
-    _ANN_INDEX_PATHS.clear()  # force a fresh build in this session
+    shared_cache.clear()  # force a fresh index build in this session
     df = merged()["sim_ann_ivf_persisted"].build(spark, SF_CORRECT)
     plan = df._jdf.queryExecution().executedPlan().toString()
     filters = re.findall(r"PartitionFilters: \[([^\]]*)\]", plan)

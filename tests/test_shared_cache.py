@@ -50,7 +50,7 @@ def test_df_round_trip_and_disk_serving(spark, cache, sf_copy):
     second = {(r["source"], r["n"]) for r in
               cache.get_or_build_df(spark, sf_copy, "t1", build).collect()}
     assert first == second and len(builds) == 1
-    assert (cache.artifact_dir("t1", sf_copy, build) / "_SUCCESS").exists()
+    assert (cache.artifact_dir("t1", sf_copy) / "_SUCCESS").exists()
 
 
 def test_mtime_invalidation(spark, cache, sf_copy):
@@ -58,11 +58,11 @@ def test_mtime_invalidation(spark, cache, sf_copy):
         return spark.range(3).withColumnRenamed("id", "x")
 
     cache.get_or_build_df(spark, sf_copy, "t2", build).collect()
-    d1 = cache.artifact_dir("t2", sf_copy, build)
+    d1 = cache.artifact_dir("t2", sf_copy)
     # regenerate the source table → new mtime → new fingerprint
     time.sleep(0.01)
     Path(sf_copy, "documents.parquet").touch()
-    d2 = cache.artifact_dir("t2", sf_copy, build)
+    d2 = cache.artifact_dir("t2", sf_copy)
     assert d1 != d2 and d1.exists() and not d2.exists()
 
 
@@ -72,7 +72,7 @@ def test_empty_result_not_cached(spark, cache, sf_copy):
 
     out = cache.get_or_build_df(spark, sf_copy, "t3", build)
     assert out.count() == 0
-    assert not cache.artifact_dir("t3", sf_copy, build).exists()
+    assert not cache.artifact_dir("t3", sf_copy).exists()
 
 
 def test_json_artifact(cache, sf_copy):
@@ -100,58 +100,64 @@ def test_path_artifact_promotion(spark, cache, sf_copy):
 # --- r9: cache-poisoning coverage (VERDICT ask #3, ADVICE medium) ----------
 
 
-def test_builder_source_change_invalidates(spark, cache, sf_copy):
-    """Same key + same data, DIFFERENT builder logic → different
-    artifact (the r8 design served the stale one until CACHE_VERSION
-    was hand-bumped)."""
+def _index_dir_around_edit(tmp_path, head: str) -> tuple[str, str]:
+    """The on-disk IVF index's cache directory name before and after
+    tagging the `def` line `head` in a copy of operators/similarity.py,
+    each taken in a fresh interpreter (the code fingerprint is computed
+    once per process)."""
+    import subprocess
+    import sys
 
-    def build_a():
-        return spark.range(3).withColumnRenamed("id", "x")
+    from kafka_flink_streaming_pipeline_spark.operators import similarity
 
-    def build_b():
-        return spark.range(3).selectExpr("id * 10 AS x")
-
-    a = cache.get_or_build_df(spark, sf_copy, "same_key", build_a)
-    b = cache.get_or_build_df(spark, sf_copy, "same_key", build_b)
-    assert {r["x"] for r in a.collect()} == {0, 1, 2}
-    assert {r["x"] for r in b.collect()} == {0, 10, 20}
-    assert cache.artifact_dir("same_key", sf_copy, build_a) != cache.artifact_dir(
-        "same_key", sf_copy, build_b
+    pkg = "kafka_flink_streaming_pipeline_spark"
+    shutil.copytree(
+        Path(similarity.__file__).resolve().parents[1],
+        tmp_path / pkg,
+        ignore=shutil.ignore_patterns("__pycache__"),
     )
 
+    def index_dir() -> str:
+        code = (
+            f"from {pkg}.operators import shared_cache; "
+            f"print(shared_cache.artifact_dir('shared_ann_index', {SF_SMOKE!r}).name)"
+        )
+        return subprocess.run(
+            [sys.executable, "-c", code], cwd=tmp_path, capture_output=True,
+            text=True, check=True,
+        ).stdout.strip()
 
-def _helper_v1():
-    return 1
+    before = index_dir()
+    src = tmp_path / pkg / "operators" / "similarity.py"
+    text = src.read_text()
+    assert text.count(head) == 1
+    src.write_text(text.replace(head, head + "  # edited\n", 1))
+    after = index_dir()
+    assert before.startswith("shared_ann_index__")
+    return before, after
 
 
-def _helper_v2():
-    return 2
+def test_builder_source_change_invalidates(tmp_path):
+    """Same key + same data, DIFFERENT builder logic → different
+    artifact: editing the on-disk IVF index builder itself must move
+    the index's cache directory."""
+    before, after = _index_dir_around_edit(tmp_path, "def ann_index_path(")
+    assert before != after
 
 
-def test_referenced_helper_change_invalidates(cache, sf_copy, monkeypatch):
-    """The fingerprint folds in package-local functions the builder
-    directly references (one level): a thin `lambda p: real_builder(p)`
-    wrapper — the `ann_ivf_index` shape — must invalidate when the real
-    builder's source changes. Helpers here live in the tests package,
-    so widen the prefix for the probe."""
-    monkeypatch.setattr(cache, "_PKG_PREFIX", "")
+def test_referenced_helper_change_invalidates(tmp_path):
+    """An edit two calls below a builder invalidates its artifact: the
+    IVF index builder calls `build_ann_index`, which calls
+    `_ivf_assign`, and editing `_ivf_assign` alone must move the
+    index's cache directory."""
+    import inspect
 
-    def build():
-        return helper()  # noqa: F821 — resolved via __globals__
+    from kafka_flink_streaming_pipeline_spark.operators import similarity
 
-    g1 = dict(build.__globals__, helper=_helper_v1)
-    g2 = dict(build.__globals__, helper=_helper_v2)
-    import types
-
-    b1 = types.FunctionType(build.__code__, g1, "build")
-    b2 = types.FunctionType(build.__code__, g2, "build")
-    fp1 = cache.sf_fingerprint(sf_copy, b1)
-    fp2 = cache.sf_fingerprint(sf_copy, b2)
-    assert fp1 != fp2  # identical build source, different helper source
-    # source-less callables must not crash the fingerprint
-    exec_ns: dict = {}
-    exec("def srcless():\n    return 3\n", exec_ns)
-    assert len(cache.sf_fingerprint(sf_copy, exec_ns["srcless"])) == 16
+    assert "build_ann_index(" in inspect.getsource(similarity.ann_index_path)
+    assert "_ivf_assign(" in inspect.getsource(similarity.build_ann_index)
+    before, after = _index_dir_around_edit(tmp_path, "def _ivf_assign(")
+    assert before != after
 
 
 def test_torn_publish_rebuilds(spark, cache, sf_copy):
@@ -164,7 +170,7 @@ def test_torn_publish_rebuilds(spark, cache, sf_copy):
         return spark.range(4).withColumnRenamed("id", "x")
 
     cache.get_or_build_df(spark, sf_copy, "torn", build).collect()
-    final = cache.artifact_dir("torn", sf_copy, build)
+    final = cache.artifact_dir("torn", sf_copy)
     (final / "_SUCCESS").unlink()  # simulate the torn write
     out = cache.get_or_build_df(spark, sf_copy, "torn", build)
     assert out.count() == 4
@@ -197,7 +203,7 @@ def test_crashed_build_leaves_no_tmp_and_dead_tmp_swept(spark, cache, sf_copy):
     def build_into(p: str) -> None:
         spark.range(2).write.mode("overwrite").parquet(p)
 
-    final = cache.artifact_dir("crash2", sf_copy, build_into)
+    final = cache.artifact_dir("crash2", sf_copy)
     dead = final.with_name(final.name + ".tmp.999999999")
     dead.mkdir(parents=True)
     cache.get_or_build_path("crash2", sf_copy, build_into)
@@ -211,7 +217,6 @@ def test_enabled_cache_parity_real_operator(spark, cache, monkeypatch):
     LSH-graph consumer three ways — cache OFF, cache cold (builds +
     publishes), cache warm (served from disk) — and demand identical
     rows."""
-    from kafka_flink_streaming_pipeline_spark.operators import dedup
     from kafka_flink_streaming_pipeline_spark.plans import merged
 
     spec = merged()["dedup_minhash_lsh"]
@@ -220,13 +225,13 @@ def test_enabled_cache_parity_real_operator(spark, cache, monkeypatch):
         return sorted(tuple(r) for r in spec.build(spark, SF_SMOKE).collect())
 
     monkeypatch.setenv("SPARK_GRAFT_SHARED_CACHE", "0")
-    dedup._SHARED_SUBTREES.clear()
+    cache.clear()
     baseline = rows()
     monkeypatch.setenv("SPARK_GRAFT_SHARED_CACHE", "1")
-    dedup._SHARED_SUBTREES.clear()
+    cache.clear()
     cold = rows()  # builds, publishes into the tmp root
-    dedup._SHARED_SUBTREES.clear()
+    cache.clear()
     warm = rows()  # must be served from disk
-    dedup._SHARED_SUBTREES.clear()
+    cache.clear()
     assert baseline == cold == warm
     assert list(cache._ROOT.glob("*__*"))  # something was actually cached

@@ -543,91 +543,6 @@ def test_hop_window_streaming_matches_batch(spark, tmp_path, chunks):
     assert streamed == batch
 
 
-def test_stateful_v2_sessionizer_matches_batch_lag(spark, tmp_path):
-    """The transformWithStateInPandas (state-v2) sessionizer must emit
-    exactly the sessions the batch LAG formulation produces — the same
-    acceptance bar as the applyInPandasWithState operator, on the
-    current-generation API (typed ValueState + explicit timers +
-    RocksDB provider).
-
-    transformWithState's Python state server speaks protobuf; the
-    driver container ships pyspark without the protobuf package (and
-    installs are off-limits), so this test self-skips where the
-    worker would crash on `import google.protobuf` — the same
-    environment-gap treatment as the Kafka connector jar."""
-    import glob
-    import shutil
-
-    pytest.importorskip(
-        "google.protobuf",
-        reason="transformWithState state server needs protobuf (not in container)",
-    )
-
-    from pyspark.sql import Window
-
-    from kafka_flink_streaming_pipeline_spark.streaming.stateful_v2 import (
-        stateful_session_v2_job,
-    )
-
-    events = load_table(spark, SF_SMOKE, "events")
-    chunk_dir = str(tmp_path / "chunks")
-    prepare_replay_chunks(spark, events, chunk_dir, n_chunks=4)
-    max_ts = events.agg(F.max("ts")).collect()[0][0]
-    staging = str(tmp_path / "staging")
-    for i, days in enumerate((10, 20), start=1):
-        row = [(10**12 + i, max_ts + datetime.timedelta(days=days), -1, "view", 0.0, "{}")]
-        spark.createDataFrame(row, WIRE_SCHEMA).coalesce(1).write.mode(
-            "overwrite"
-        ).parquet(staging)
-        shutil.copy(
-            glob.glob(f"{staging}/part-*.parquet")[0],
-            f"{chunk_dir}/zz_sentinel_{i}.parquet",
-        )
-
-    out = str(tmp_path / "sessions_v2")
-    old = spark.conf.get("spark.sql.streaming.stateStore.providerClass", None)
-    try:
-        q = stateful_session_v2_job(
-            replay_stream(spark, chunk_dir), out, str(tmp_path / "ckpt")
-        )
-        q.awaitTermination(300)
-    finally:
-        if old is not None:
-            spark.conf.set("spark.sql.streaming.stateStore.providerClass", old)
-        else:
-            spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-    streamed = {
-        (r.uuid, r.session_start, r.session_end, r.n_events, r.n_clicks)
-        for r in spark.read.parquet(out).filter(F.col("uuid") != -1).collect()
-    }
-
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    marks = events.withColumn(
-        "new_session",
-        F.when(
-            F.lag("ts").over(w).isNull()
-            | (F.unix_micros("ts") - F.unix_micros(F.lag("ts").over(w)) > 30 * 60 * 1_000_000),
-            1,
-        ).otherwise(0),
-    )
-    sess = marks.withColumn(
-        "session_id", F.sum("new_session").over(w.rowsBetween(Window.unboundedPreceding, 0))
-    )
-    batch = {
-        (r.uuid, r.session_start, r.session_end, r.n_events, r.n_clicks)
-        for r in sess.groupBy(F.col("user_id").alias("uuid"), "session_id")
-        .agg(
-            F.min("ts").alias("session_start"),
-            F.max("ts").alias("session_end"),
-            F.count("*").alias("n_events"),
-            F.count(F.when(F.col("event_type") == "click", 1)).alias("n_clicks"),
-        )
-        .collect()
-    }
-    assert len(streamed) > 0
-    assert streamed == batch
-
-
 def test_stream_stream_outer_join_emits_unmatched(spark, tmp_path):
     """LEFT OUTER stream-stream interval join: matched clicks pair
     eagerly; unmatched clicks are withheld until the watermark proves no
@@ -934,49 +849,6 @@ def test_checkpoint_restart_resumes_exactly_once(spark, tmp_path):
     txn_append_sink(table)(some_batch, 0)
     txn_append_sink(table)(some_batch, 0)
     assert read_append_table(spark, table).drop("batch_id").count() == n_events
-
-
-def test_python_datasource_replay_source(spark, tmp_path):
-    """The replay producer as a first-class Python Data Source: register
-    by name, readStream.format("clickstream_replay"), run the same
-    downstream pipeline — output must equal the batch table exactly
-    (every row, no dupes), with offsets checkpointed by the engine."""
-    from kafka_flink_streaming_pipeline_spark.sources.replay_datasource import (
-        register_replay_source,
-    )
-
-    events = load_table(spark, SF_SMOKE, "events")
-    n_events = events.count()
-    chunk_dir = str(tmp_path / "chunks")
-    prepare_replay_chunks(spark, events, chunk_dir, n_chunks=4)
-
-    register_replay_source(spark)
-    stream = (
-        spark.readStream.format("clickstream_replay")
-        .option("path", chunk_dir)
-        .load()
-        .withColumn("event_time", F.col("ts"))
-        .withWatermark("event_time", "5 seconds")
-    )
-    out = str(tmp_path / "out")
-    q = (
-        stream.writeStream.outputMode("append")
-        .format("parquet")
-        .option("path", out)
-        .option("checkpointLocation", str(tmp_path / "ck"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(300)
-
-    got = spark.read.parquet(out)
-    assert got.count() == n_events
-    assert got.select("event_id").subtract(events.select("event_id")).count() == 0
-    assert events.select("event_id").subtract(got.select("event_id")).count() == 0
-    # value columns survive the wire intact (spot-check an aggregate)
-    a = got.agg(F.sum("value"), F.count_distinct("user_id")).collect()[0]
-    b = events.agg(F.sum("value"), F.count_distinct("user_id")).collect()[0]
-    assert abs(a[0] - b[0]) < 1e-6 and a[1] == b[1]
 
 
 def test_fanout_one_read_two_sinks(spark, tmp_path, chunks):

@@ -1,7 +1,7 @@
 """Compare two bench result files (BENCH_DETAIL.json / BENCH_r{N}.json
 shape: {"value": total, "loadavg_1m": ..., "queries": {name: sec}})
 and print the per-query delta story the round verdicts reconstruct by
-hand: added/removed entries, one-time `shared_*_build` accounting, and
+hand: added/removed entries, one-time `shared_*` build accounting, and
 regressions beyond a noise ratio — with both runs' loadavg so ambient
 contention is separable from real change.
 
@@ -119,7 +119,7 @@ def main() -> int:
         print(f"removed ({len(removed)}, {tot:.2f} s): "
               + ", ".join(f"{k}={qa[k]}" for k in removed))
 
-    builds = [k for k in qb if k.startswith("shared_") and k.endswith("_build")]
+    builds = [k for k in qb if k.startswith("shared_")]
     if builds:
         print("one-time builds (explicit entries): "
               + ", ".join(f"{k}={qb[k]}" for k in sorted(builds))

@@ -17,6 +17,7 @@ Prints one line per entry and a summary; exit 1 on any mismatch.
 
 from __future__ import annotations
 
+import os
 import sys
 import time
 from pathlib import Path
@@ -25,8 +26,10 @@ sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
 
 def main() -> int:
+    # rebuild shared artifacts under each width, never read them from disk
+    os.environ["SPARK_GRAFT_SHARED_CACHE"] = "0"
     from kafka_flink_streaming_pipeline_spark import get_spark
-    from kafka_flink_streaming_pipeline_spark.operators import linalg
+    from kafka_flink_streaming_pipeline_spark.operators import shared_cache
     from kafka_flink_streaming_pipeline_spark.plans import merged
 
     sf_dir = "/root/testdata/sf0.01"
@@ -47,10 +50,10 @@ def main() -> int:
         spec = plans[name]
         t0 = time.time()
         try:
-            linalg._PI_CACHE.clear()
+            shared_cache.clear()
             base = values(spec)
             spark.conf.set("spark.sql.shuffle.partitions", "7")
-            linalg._PI_CACHE.clear()
+            shared_cache.clear()
             hostile = values(spec)
         except Exception as e:  # noqa: BLE001 — audit must keep going
             print(f"ERR  {name}: {type(e).__name__}: {str(e)[:100]}", flush=True)

@@ -75,15 +75,13 @@ def main() -> None:
     names = [n for n in bench.HEADLINE if n in plans]
     names += [n for n in plans if n not in set(names)]
 
-    from kafka_flink_streaming_pipeline_spark.operators.dedup import (
-        _SHARED_SUBTREES,
-    )
+    from kafka_flink_streaming_pipeline_spark.operators import shared_cache
 
     rows = []
     for name in names:
         # audit the real build pipeline, not a cache hit on the
-        # session-shared pair-graph materializations
-        _SHARED_SUBTREES.clear()
+        # session-shared artifact materializations
+        shared_cache.clear()
         df = plans[name].build(spark, sf_dir)
         df.collect()  # materialize so AQE finalizes: the audited plan is the
         # one that actually ran (runtime-coalesced exchanges, broadcast
