@@ -52,11 +52,13 @@ swept before each build. `try/finally` removes this process's temp
 dir on any build failure.
 
 Set SPARK_GRAFT_SHARED_CACHE=0 to disable the disk cache (the memo
-stays on).
+stays on); path artifacts then live in temp dirs removed at
+interpreter exit.
 """
 
 from __future__ import annotations
 
+import atexit
 import functools
 import hashlib
 import json
@@ -279,11 +281,14 @@ def get_or_build_json(sf_dir: str, key: str, build):
 def get_or_build_path(key: str, sf_dir: str, build_into) -> str:
     """Path-valued artifact (the partitioned IVF inverted file):
     `build_into(tmp_path)` writes the artifact, which is then promoted
-    into the cache; returns the final directory path."""
+    into the cache; returns the final directory path. With the disk
+    cache off the artifact is built into a fresh temp dir, removed
+    when the interpreter exits."""
     if not enabled():
         import tempfile
 
         path = tempfile.mkdtemp(prefix=f"{key}_")
+        atexit.register(shutil.rmtree, path, ignore_errors=True)
         build_into(path)
         return path
     final = artifact_dir(key, sf_dir)

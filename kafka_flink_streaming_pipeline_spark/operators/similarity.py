@@ -1,33 +1,48 @@
 """Similarity search over the `embeddings` table (array<float>, 64-dim).
 
-Standard public methods: sign-random-projection LSH (Charikar 2002),
-inverted-file coarse quantization (IVF — Jegou, Douze & Schmid, "Product
-quantization for nearest neighbor search", TPAMI 2011, minus the PQ
-residual codes), and exact brute force as ground truth.
+Every top-k entry here is one pipeline, candidate → score → rank
+(`_topk`), the partition → local index → prune/verify shape of
+distributed top-k (REPOSE, ICDE 2021). A method only decides how
+candidates are generated: a query side and a candidate side that
+share a join key.
 
-Plans:
-- brute-force cosine top-k: broadcast the query vectors, scan all
-  candidates once, per-partition partial top-k via rank window. The
-  correct-by-construction baseline; at 100 TB this is one full scan
-  per query batch — still the right tool for small query sets.
-- LSH-bucketed ANN: 8 deterministic sign-random-hyperplanes (entries
-  ±1 from md5 parity) hash every vector to an 8-bit bucket; queries
-  only score candidates in their own bucket. Bucket assignment is one
-  narrow aggregation; the candidate join shuffles bucket keys only —
-  the scale path when the query set is itself huge.
+- brute force (`sim_topk_cosine`, its pandas-UDF and int8 twins,
+  the Matryoshka prefixes): no key — the broadcast query vectors
+  meet every candidate once. The exactness anchor; at 100 TB one
+  full scan per query batch.
+- LSH (Charikar 2002): 8 deterministic sign-random hyperplanes
+  (entries ±1 from md5 parity) hash every vector to an 8-bit
+  `bucket`; multi-probe (Lv et al., VLDB 2007) also probes the 8
+  buckets at Hamming distance 1.
+- IVF (Jégou, Douze & Schmid, TPAMI 2011): the cell of a coarse
+  quantizer — fixed seed centroids (nprobe 1 or 2, in memory or
+  persisted as centroid-partitioned parquet) or the k-means-trained
+  codebook.
+- PQ / IVFPQ: product-quantization codes score candidates by
+  asymmetric distance (ADC) against a per-query lookup table; the
+  top-50 shortlist `cand_id` is the key of an exact refine.
+
+The scorer is a column over the joined row: exact cosine by default,
+the pandas UDF, the int8 codes or the integer ADC fold. Ranking is
+one `(score desc, cand_id asc)` row_number cut (`_rank_topk`).
+
+Also here: the int8 and PQ encodings, recall reports against the
+exact anchor, hybrid lexical+vector retrieval (rerank, RRF, MMR),
+embedding near-dup pairs (the fifth dedup modality), SemDeDup,
+Lloyd's k-means, and the int8 IVF cell scorers behind
+`knn_label_agreement` and `split_leakage_semantic`.
 
 Determinism: dot products are computed with `F.zip_with` +
 `F.aggregate` (sequential double fold, fixed order) on the Spark side
-and with an explicit ordered-index join in DuckDB; cosine =
-dot/sqrt(n1)/sqrt(n2) with the same expression shape in both engines,
-rounded to 6 decimals before ranking, with vec_id tiebreaks — so the
-top-k frontier is identical across engines.
-
-Also here: embedding-cosine near-dup pairs (the fifth dedup modality).
+and with `list_dot_product` in DuckDB; cosine = dot/sqrt(n1)/sqrt(n2)
+with the same expression shape in both engines, rounded to 6 decimals
+before ranking, with vec_id tiebreaks — so the top-k frontier is
+identical across engines.
 """
 
 from __future__ import annotations
 
+import functools
 import math
 
 import pandas as pd  # module-global so stringified pandas_udf type
@@ -56,23 +71,70 @@ def _dot(a: Column, b: Column) -> Column:
     )
 
 
-def _cosine(va: Column, vb: Column) -> Column:
-    return det_round(_dot(va, vb) / F.sqrt(_dot(va, va)) / F.sqrt(_dot(vb, vb)), 6)
-
-
-def _with_norm(e: DataFrame, id_alias: str, vec_alias: str) -> DataFrame:
-    """Precompute sqrt(dot(v,v)) once per vector — the pairwise scorer
-    then does ONE array fold per pair instead of three. Same arithmetic
+def _vectors(e: DataFrame) -> DataFrame:
+    """(vec_id, embedding, nrm): every vector with sqrt(dot(v, v)),
+    the one place the norm is computed. The pairwise scorer then does
+    ONE array fold per pair instead of three, with the same arithmetic
     (dot / sqrt(na) / sqrt(nb)), so oracle values are unchanged."""
     return e.select(
-        F.col("vec_id").alias(id_alias),
-        F.col("embedding").alias(vec_alias),
-        F.sqrt(_dot(F.col("embedding"), F.col("embedding"))).alias(f"{id_alias}_nrm"),
+        "vec_id",
+        "embedding",
+        F.sqrt(_dot(F.col("embedding"), F.col("embedding"))).alias("nrm"),
     )
 
 
 def _pair_cosine(qv: Column, cv: Column, q_nrm: Column, c_nrm: Column) -> Column:
     return det_round(_dot(qv, cv) / q_nrm / c_nrm, 6)
+
+
+def _side(v: DataFrame, side: str, *keys: str) -> DataFrame:
+    """One side of the candidate join, from a `_vectors`-shaped frame:
+    side "q" gives (query_id, *keys, qv, q_nrm), side "c" gives
+    (cand_id, *keys, cv, c_nrm)."""
+    return v.select(
+        F.col("vec_id").alias("query_id" if side == "q" else "cand_id"),
+        *keys,
+        F.col("embedding").alias(f"{side}v"),
+        F.col("nrm").alias(f"{side}_nrm"),
+    )
+
+
+def _queries(v: DataFrame, *keys: str) -> DataFrame:
+    """The query side of the fixed query vectors (vec_id < _N_QUERIES)."""
+    return _side(v.filter(F.col("vec_id") < _N_QUERIES), "q", *keys)
+
+
+def _side_cosine() -> Column:
+    """Exact cosine of a joined (qv, q_nrm) × (cv, c_nrm) row."""
+    return _pair_cosine(F.col("qv"), F.col("cv"), F.col("q_nrm"), F.col("c_nrm"))
+
+
+def _rank_topk(scored: DataFrame, score: str, k: int = _TOP_K) -> DataFrame:
+    """The per-query top-`k` cut: row_number over (`score` desc,
+    cand_id asc). The cand_id tiebreak makes the frontier identical in
+    both engines."""
+    w = Window.partitionBy("query_id").orderBy(F.desc(score), F.asc("cand_id"))
+    return scored.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
+
+
+def _topk(
+    q: DataFrame,
+    c: DataFrame,
+    on: str | None = None,
+    score: Column | None = None,
+    name: str = "cosine",
+    k: int = _TOP_K,
+) -> DataFrame:
+    """Candidate → score → rank: join the query side `q` to the
+    candidate side `c` on their shared key `on` (every pair when None),
+    drop self-pairs, score each pair as `name` (exact cosine unless
+    `score` is given) and keep the top `k` per query:
+    (query_id, cand_id, `name`, rank), unordered."""
+    pairs = q.crossJoin(c) if on is None else q.join(c, on)
+    scored = pairs.filter(F.col("query_id") != F.col("cand_id")).select(
+        "query_id", "cand_id", (_side_cosine() if score is None else score).alias(name)
+    )
+    return _rank_topk(scored, name, k)
 
 
 # DuckDB: same formula over DOUBLE[] lists (list_dot_product folds in
@@ -105,30 +167,8 @@ def topk_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @shared_cache.artifact("shared_exact_topk")
 def _topk_cosine_shared(spark: SparkSession, sf_dir: str) -> DataFrame:
-    e = load_table(spark, sf_dir, "embeddings")
-    queries = F.broadcast(
-        _with_norm(e.filter(F.col("vec_id") < _N_QUERIES), "query_id", "qv")
-    )
-    cands = _with_norm(e, "cand_id", "cv")
-    scored = (
-        queries.crossJoin(cands)
-        .filter(F.col("query_id") != F.col("cand_id"))
-        .select(
-            "query_id",
-            "cand_id",
-            _pair_cosine(
-                F.col("qv"), F.col("cv"), F.col("query_id_nrm"), F.col("cand_id_nrm")
-            ).alias("cosine"),
-        )
-    )
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("cand_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= _TOP_K)
-        .orderBy("query_id", "rank")
-    )
+    v = _vectors(load_table(spark, sf_dir, "embeddings"))
+    return _topk(F.broadcast(_queries(v)), _side(v, "c")).orderBy("query_id", "rank")
 
 
 TOPK_ORACLE = f"""
@@ -153,17 +193,14 @@ ORDER BY query_id, rank
 
 
 def embedding_near_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
-    e = load_table(spark, sf_dir, "embeddings")
-    a = _with_norm(e, "v1", "e1")
-    b = _with_norm(e, "v2", "e2")
+    v = _vectors(load_table(spark, sf_dir, "embeddings"))
     return (
-        a.join(b, F.col("v1") < F.col("v2"))
+        _side(v, "q")
+        .join(_side(v, "c"), F.col("query_id") < F.col("cand_id"))
         .select(
-            "v1",
-            "v2",
-            _pair_cosine(F.col("e1"), F.col("e2"), F.col("v1_nrm"), F.col("v2_nrm")).alias(
-                "cosine"
-            ),
+            F.col("query_id").alias("v1"),
+            F.col("cand_id").alias("v2"),
+            _side_cosine().alias("cosine"),
         )
         .filter(F.col("cosine") >= _NEAR_DUP_T)
         .orderBy("v1", "v2")
@@ -233,46 +270,16 @@ def _buckets(e: DataFrame, spark: SparkSession) -> DataFrame:
     )
 
 
-def ann_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
+def _lsh_vectors(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """`_vectors` plus each vector's LSH `bucket`."""
     e = load_table(spark, sf_dir, "embeddings")
-    buckets = _buckets(e, spark)
-    vecs = e.select("vec_id", "embedding")
-    with_norm = buckets.join(vecs, "vec_id").select(
-        "vec_id",
-        "bucket",
-        "embedding",
-        F.sqrt(_dot(F.col("embedding"), F.col("embedding"))).alias("nrm"),
-    )
-    q = with_norm.filter(F.col("vec_id") < _N_QUERIES).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("bucket"),
-        F.col("embedding").alias("qv"),
-        F.col("nrm").alias("q_nrm"),
-    )
-    c = with_norm.select(
-        F.col("vec_id").alias("cand_id"),
-        F.col("bucket"),
-        F.col("embedding").alias("cv"),
-        F.col("nrm").alias("c_nrm"),
-    )
-    scored = (
-        q.join(c, "bucket")
-        .filter(F.col("query_id") != F.col("cand_id"))
-        .select(
-            "query_id",
-            "cand_id",
-            _pair_cosine(F.col("qv"), F.col("cv"), F.col("q_nrm"), F.col("c_nrm")).alias(
-                "cosine"
-            ),
-        )
-    )
-    from pyspark.sql import Window
+    return _buckets(e, spark).join(_vectors(e), "vec_id")
 
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("cand_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= _TOP_K)
-        .orderBy("query_id", "rank")
+
+def ann_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
+    v = _lsh_vectors(spark, sf_dir)
+    return _topk(_queries(v, "bucket"), _side(v, "c", "bucket"), "bucket").orderBy(
+        "query_id", "rank"
     )
 
 
@@ -338,50 +345,15 @@ def ann_lsh_multiprobe(spark: SparkSession, sf_dir: str) -> DataFrame:
     scanned once. At 100 TB that is the difference between re-hashing
     the corpus into more tables and replicating a handful of query
     rows."""
-    from pyspark.sql import Window
-
-    e = load_table(spark, sf_dir, "embeddings")
-    buckets = _buckets(e, spark)
-    vecs = e.select("vec_id", "embedding")
-    with_norm = buckets.join(vecs, "vec_id").select(
-        "vec_id",
-        "bucket",
-        "embedding",
-        F.sqrt(_dot(F.col("embedding"), F.col("embedding"))).alias("nrm"),
-    )
-    q = (
-        with_norm.filter(F.col("vec_id") < _N_QUERIES)
+    v = _lsh_vectors(spark, sf_dir)
+    probes = (
+        v.filter(F.col("vec_id") < _N_QUERIES)
         .withColumn("j", F.explode(F.sequence(F.lit(0), F.lit(_N_PLANES))))
-        .select(
-            F.col("vec_id").alias("query_id"),
-            F.expr(_PROBE_EXPR).alias("probe"),
-            F.col("embedding").alias("qv"),
-            F.col("nrm").alias("q_nrm"),
-        )
+        .withColumn("bucket", F.expr(_PROBE_EXPR))
     )
-    c = with_norm.select(
-        F.col("vec_id").alias("cand_id"),
-        F.col("bucket"),
-        F.col("embedding").alias("cv"),
-        F.col("nrm").alias("c_nrm"),
-    )
-    scored = (
-        q.join(c, F.col("probe") == F.col("bucket"))
-        .filter(F.col("query_id") != F.col("cand_id"))
-        .select(
-            "query_id",
-            "cand_id",
-            _pair_cosine(F.col("qv"), F.col("cv"), F.col("q_nrm"), F.col("c_nrm")).alias(
-                "cosine"
-            ),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("cand_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= _TOP_K)
-        .orderBy("query_id", "rank")
-    )
+    return _topk(
+        _side(probes, "q", "bucket"), _side(v, "c", "bucket"), "bucket"
+    ).orderBy("query_id", "rank")
 
 
 ANN_LSH_MULTIPROBE_ORACLE = f"""
@@ -466,33 +438,11 @@ def topk_cosine_pandas(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Same query as `topk_cosine`, scored through the Arrow/pandas
     path — the shape to reach for when the per-pair math outgrows
     Catalyst expressions (learned metrics, quantized dot products)."""
-    from pyspark.sql import Window
-
-    e = load_table(spark, sf_dir, "embeddings")
-    queries = F.broadcast(
-        _with_norm(e.filter(F.col("vec_id") < _N_QUERIES), "query_id", "qv")
-    )
-    cands = _with_norm(e, "cand_id", "cv")
+    v = _vectors(load_table(spark, sf_dir, "embeddings"))
     cos_udf = make_cosine_pandas_udf()
-    scored = (
-        queries.crossJoin(cands)
-        .filter(F.col("query_id") != F.col("cand_id"))
-        .select(
-            "query_id",
-            "cand_id",
-            det_round(
-                cos_udf(
-                    F.col("qv"), F.col("cv"), F.col("query_id_nrm"), F.col("cand_id_nrm")
-                ),
-                6,
-            ).alias("cosine"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("cand_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= _TOP_K)
-        .orderBy("query_id", "rank")
+    score = det_round(cos_udf(F.col("qv"), F.col("cv"), F.col("q_nrm"), F.col("c_nrm")), 6)
+    return _topk(F.broadcast(_queries(v)), _side(v, "c"), score=score).orderBy(
+        "query_id", "rank"
     )
 
 
@@ -501,10 +451,18 @@ def topk_cosine_pandas(spark: SparkSession, sf_dir: str) -> DataFrame:
 _IVF_K = 8  # coarse-quantizer cells; centroids = vec_ids [_N_QUERIES, _N_QUERIES+K)
 
 
-def _ivf_assign(with_norm: DataFrame, nprobe: int = 1, k: int = _IVF_K) -> DataFrame:
+def _ivf_assign(
+    with_norm: DataFrame,
+    nprobe: int = 1,
+    k: int = _IVF_K,
+    seeds: DataFrame | None = None,
+) -> DataFrame:
     """(vec_id, centroid_id): the `nprobe` nearest of `k` seed
     centroids by cosine — nprobe=1 is cell MEMBERSHIP (each vector
     lives in one cell); nprobe>1 is the query-side PROBE LIST.
+    `with_norm` is a `_vectors` frame; the seed rows are read from
+    `seeds` (same columns, e.g. the persisted index), by default from
+    `with_norm` itself.
 
     The coarse quantizer uses K fixed seed vectors as centroids
     (training-free IVF — at 100 TB you'd k-means a sample, but the
@@ -514,10 +472,8 @@ def _ivf_assign(with_norm: DataFrame, nprobe: int = 1, k: int = _IVF_K) -> DataF
     shuffle of the vectors themselves. K is the cost knob for every
     downstream within-cell stage (candidates ∝ N²/K): size it with
     the corpus (K ≈ N / target_cell_size), not as a constant."""
-    from pyspark.sql import Window
-
     cents = F.broadcast(
-        with_norm.filter(
+        (with_norm if seeds is None else seeds).filter(
             (F.col("vec_id") >= _N_QUERIES) & (F.col("vec_id") < _N_QUERIES + k)
         ).select(
             F.col("vec_id").alias("centroid_id"),
@@ -540,48 +496,34 @@ def _ivf_assign(with_norm: DataFrame, nprobe: int = 1, k: int = _IVF_K) -> DataF
     )
 
 
+def _ivf_cells(v: DataFrame, nprobe: int) -> tuple[DataFrame, DataFrame]:
+    """IVF candidate generation over a `_vectors` frame: (probes,
+    members), both (vec_id, centroid_id) — each query's `nprobe`
+    nearest cells and every vector's one cell. A (query, candidate)
+    pair is scored when they share a centroid_id, so the probe
+    expansion multiplies only the tiny query side."""
+    members = _ivf_assign(v)
+    probes = members if nprobe == 1 else _ivf_assign(v, nprobe=nprobe)
+    return probes.filter(F.col("vec_id") < _N_QUERIES), members
+
+
+def _ivf_topk(spark: SparkSession, sf_dir: str, nprobe: int) -> DataFrame:
+    """IVF top-k: each query scores only the members of its `nprobe`
+    nearest cells."""
+    v = _vectors(load_table(spark, sf_dir, "embeddings"))
+    probes, members = _ivf_cells(v, nprobe)
+    return _topk(
+        _side(probes.join(v, "vec_id"), "q", "centroid_id"),
+        _side(members.join(v, "vec_id"), "c", "centroid_id"),
+        "centroid_id",
+    ).orderBy("query_id", "rank")
+
+
 def ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF ANN with nprobe=1: queries score only their own cell — the
     inverted-file scale path (cells partition the corpus; each query
     touches |corpus|/K candidates instead of all of them)."""
-    from pyspark.sql import Window
-
-    e = load_table(spark, sf_dir, "embeddings")
-    with_norm = e.select(
-        "vec_id",
-        "embedding",
-        F.sqrt(_dot(F.col("embedding"), F.col("embedding"))).alias("nrm"),
-    )
-    assigned = _ivf_assign(with_norm).join(with_norm, "vec_id")
-    q = assigned.filter(F.col("vec_id") < _N_QUERIES).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("centroid_id"),
-        F.col("embedding").alias("qv"),
-        F.col("nrm").alias("q_nrm"),
-    )
-    c = assigned.select(
-        F.col("vec_id").alias("cand_id"),
-        F.col("centroid_id"),
-        F.col("embedding").alias("cv"),
-        F.col("nrm").alias("c_nrm"),
-    )
-    scored = (
-        q.join(c, "centroid_id")
-        .filter(F.col("query_id") != F.col("cand_id"))
-        .select(
-            "query_id",
-            "cand_id",
-            _pair_cosine(F.col("qv"), F.col("cv"), F.col("q_nrm"), F.col("c_nrm")).alias(
-                "cosine"
-            ),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("cand_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= _TOP_K)
-        .orderBy("query_id", "rank")
-    )
+    return _ivf_topk(spark, sf_dir, 1)
 
 
 # --- persisted IVF index (inverted file on disk) ---------------------------
@@ -598,14 +540,11 @@ def build_ann_index(embeddings: DataFrame, index_path: str) -> None:
     100 TB this is the difference between an ANN lookup and a table
     scan; cell files are also contiguous, so each probe is a handful of
     sequential reads."""
-    with_norm = embeddings.select(
-        "vec_id",
-        "embedding",
-        F.sqrt(_dot(F.col("embedding"), F.col("embedding"))).alias("nrm"),
-    )
-    assigned = _ivf_assign(with_norm).join(with_norm, "vec_id")
+    v = _vectors(embeddings)
     (
-        assigned.repartition("centroid_id")  # one writer task per cell
+        _ivf_assign(v)
+        .join(v, "vec_id")
+        .repartition("centroid_id")  # one writer task per cell
         .write.mode("overwrite")
         .partitionBy("centroid_id")
         .parquet(index_path)
@@ -631,65 +570,15 @@ def probe_ann_index(
     partitions (PartitionFilters, asserted in tests) and rank within
     them. Works identically from the batch query entry and from each
     foreachBatch of the streaming probe job."""
-    from pyspark.sql import Window
-
     idx = spark.read.parquet(index_path)
-    cents = F.broadcast(
-        idx.filter(
-            (F.col("vec_id") >= _N_QUERIES) & (F.col("vec_id") < _N_QUERIES + _IVF_K)
-        ).select(
-            # a centroid's cell is itself (self-cosine 1.0 is maximal),
-            # but vec_id is the DEFINITION of its cell id — use it
-            F.col("vec_id").alias("cent_id"),
-            F.col("embedding").alias("cent"),
-            F.col("nrm").alias("cent_nrm"),
-        )
-    )
-    qn = queries.select(
-        "query_id",
-        F.col("embedding").alias("qv"),
-        F.sqrt(_dot(F.col("embedding"), F.col("embedding"))).alias("q_nrm"),
-    )
-    w_assign = Window.partitionBy("query_id").orderBy(
-        F.desc("ccos"), F.asc("cent_id")
-    )
-    probes = (
-        qn.crossJoin(cents)
-        .select(
-            "query_id",
-            "qv",
-            "q_nrm",
-            "cent_id",
-            _pair_cosine(
-                F.col("qv"), F.col("cent"), F.col("q_nrm"), F.col("cent_nrm")
-            ).alias("ccos"),
-        )
-        .withColumn("rn", F.row_number().over(w_assign))
-        .filter(F.col("rn") <= nprobe)
-        .select("query_id", F.col("cent_id").alias("centroid_id"), "qv", "q_nrm")
-    )
+    qv = _vectors(queries.select(F.col("query_id").alias("vec_id"), "embedding"))
+    probes = _ivf_assign(qv, nprobe=nprobe, seeds=idx).join(qv, "vec_id")
     cells = [r.centroid_id for r in probes.select("centroid_id").distinct().collect()]
-    cands = idx.filter(F.col("centroid_id").isin(cells)).select(
-        F.col("vec_id").alias("cand_id"),
+    return _topk(
+        _side(probes, "q", "centroid_id"),
+        _side(idx.filter(F.col("centroid_id").isin(cells)), "c", "centroid_id"),
         "centroid_id",
-        F.col("embedding").alias("cv"),
-        F.col("nrm").alias("c_nrm"),
-    )
-    scored = (
-        probes.join(cands, "centroid_id")
-        .filter(F.col("query_id") != F.col("cand_id"))
-        .select(
-            "query_id",
-            "cand_id",
-            _pair_cosine(
-                F.col("qv"), F.col("cv"), F.col("q_nrm"), F.col("c_nrm")
-            ).alias("cosine"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("cand_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= top_k)
+        k=top_k,
     )
 
 
@@ -769,49 +658,7 @@ def ann_ivf_nprobe2(spark: SparkSession, sf_dir: str) -> DataFrame:
     Candidates still live in exactly one cell, so the probe expansion
     duplicates only the tiny query side of the join — the candidate
     stream is scanned once regardless of nprobe."""
-    from pyspark.sql import Window
-
-    e = load_table(spark, sf_dir, "embeddings")
-    with_norm = e.select(
-        "vec_id",
-        "embedding",
-        F.sqrt(_dot(F.col("embedding"), F.col("embedding"))).alias("nrm"),
-    )
-    membership = _ivf_assign(with_norm)
-    probes = _ivf_assign(with_norm, nprobe=_NPROBE)
-    q = (
-        probes.filter(F.col("vec_id") < _N_QUERIES)
-        .join(with_norm, "vec_id")
-        .select(
-            F.col("vec_id").alias("query_id"),
-            F.col("centroid_id"),
-            F.col("embedding").alias("qv"),
-            F.col("nrm").alias("q_nrm"),
-        )
-    )
-    c = membership.join(with_norm, "vec_id").select(
-        F.col("vec_id").alias("cand_id"),
-        F.col("centroid_id"),
-        F.col("embedding").alias("cv"),
-        F.col("nrm").alias("c_nrm"),
-    )
-    scored = (
-        q.join(c, "centroid_id")
-        .filter(F.col("query_id") != F.col("cand_id"))
-        .select(
-            "query_id",
-            "cand_id",
-            _pair_cosine(F.col("qv"), F.col("cv"), F.col("q_nrm"), F.col("c_nrm")).alias(
-                "cosine"
-            ),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("cand_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= _TOP_K)
-        .orderBy("query_id", "rank")
-    )
+    return _ivf_topk(spark, sf_dir, _NPROBE)
 
 
 ANN_IVF_NPROBE2_ORACLE = f"""
@@ -915,8 +762,6 @@ def _pq_codes(spark: SparkSession, sf_dir: str) -> DataFrame:
     assignment rows stream through one (vec_id, m)-partitioned rank
     window — 16 rows per partition, shuffle payload is 3 ints + one
     nano-unit distance."""
-    from pyspark.sql import Window
-
     e = load_table(spark, sf_dir, "embeddings")
     sub = _pq_subvecs(_pq_normalized(e))
     a = _pq_anchors(spark, sf_dir)
@@ -966,6 +811,26 @@ def _pq_codes_packed(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _pq_query_luts(spark: SparkSession, sf_dir: str, is_query: Column) -> DataFrame:
+    """(query_id, lut): the ADC lookup table of every vector selected
+    by `is_query` — its M×K subvector · anchor dot products, floored to
+    integer micro-units so each ADC score is an exact integer sum, as
+    one `_pq_query_lut_arrays` array per query."""
+    e = load_table(spark, sf_dir, "embeddings")
+    qsub = _pq_subvecs(_pq_normalized(e).filter(is_query)).select(
+        F.col("vec_id").alias("query_id"), "m", F.col("sv").alias("qv")
+    )
+    lut = qsub.join(_pq_anchors(spark, sf_dir), "m").select(
+        "query_id",
+        "m",
+        "anchor_id",
+        F.floor(_dot(F.col("qv"), F.col("av")) * F.lit(1_000_000.0) + F.lit(0.5))
+        .cast("long")
+        .alias("dot_micro"),
+    )
+    return _pq_query_lut_arrays(lut)
+
+
 def _pq_query_lut_arrays(lut: DataFrame) -> DataFrame:
     """Fold a skinny per-query LUT (query_id, m, anchor_id, dot_micro)
     into one M·K-element array per query, indexed m·K + local_code —
@@ -987,27 +852,29 @@ def _pq_query_lut_arrays(lut: DataFrame) -> DataFrame:
     )
 
 
+def _adc_micro() -> Column:
+    """The ADC score of a joined (codes, lut) row: one exact-integer
+    fold of M lookups into the query's LUT array — identical sums to
+    the skinny join+groupBy formulation (same ints, same adds), so
+    every oracle stays valid."""
+    return F.aggregate(
+        F.zip_with(
+            F.col("codes"),
+            F.sequence(F.lit(0), F.lit(_PQ_M - 1)),
+            lambda c, m: F.element_at(F.col("lut"), m * _PQ_K + c + 1),
+        ),
+        F.lit(0).cast("long"),
+        lambda acc, x: acc + x,
+    )
+
+
 def _packed_adc_scores(packed: DataFrame, lut_arrays: DataFrame) -> DataFrame:
     """(query_id, vec_id, adc_micro) via the packed layout: broadcast
-    the per-query LUT arrays, one exact-integer fold per (vec, query) —
-    identical sums to the skinny join+groupBy formulation (same ints,
-    same adds), so every oracle stays valid."""
+    the per-query LUT arrays, one `_adc_micro` fold per (vec, query)."""
     return (
         packed.crossJoin(F.broadcast(lut_arrays))
         .filter(F.col("vec_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            "vec_id",
-            F.aggregate(
-                F.zip_with(
-                    F.col("codes"),
-                    F.sequence(F.lit(0), F.lit(_PQ_M - 1)),
-                    lambda c, m: F.element_at(F.col("lut"), m * _PQ_K + c + 1),
-                ),
-                F.lit(0).cast("long"),
-                lambda acc, x: acc + x,
-            ).alias("adc_micro"),
-        )
+        .select("query_id", "vec_id", _adc_micro().alias("adc_micro"))
     )
 
 
@@ -1041,29 +908,21 @@ def _adc_shortlist_ids(spark: SparkSession, sf_dir: str) -> DataFrame:
     consumer) so the shortlist definition cannot drift between them;
     `hybrid_retrieval_rrf_ann` keeps its own single-query
     (vec_id == 0) TakeOrdered variant of the same stages."""
-    e = load_table(spark, sf_dir, "embeddings")
-    qsub = _pq_subvecs(
-        _pq_normalized(e).filter(F.col("vec_id") < _N_QUERIES)
-    ).select(F.col("vec_id").alias("query_id"), "m", F.col("sv").alias("qv"))
-    lut = qsub.join(_pq_anchors(spark, sf_dir), "m").select(
-        "query_id",
-        "m",
-        "anchor_id",
-        F.floor(_dot(F.col("qv"), F.col("av")) * F.lit(1_000_000.0) + F.lit(0.5))
-        .cast("long")
-        .alias("dot_micro"),
-    )
     scored = _packed_adc_scores(
-        _pq_codes_packed(spark, sf_dir), _pq_query_lut_arrays(lut)
-    ).select("query_id", F.col("vec_id").alias("cand_id"), "adc_micro")
-    w_adc = Window.partitionBy("query_id").orderBy(
-        F.desc("adc_micro"), F.asc("cand_id")
-    )
-    return (
-        scored.withColumn("rn", F.row_number().over(w_adc))
-        .filter(F.col("rn") <= _PQ_SHORTLIST)
-        .select("query_id", "cand_id")
-    )
+        _pq_codes_packed(spark, sf_dir),
+        _pq_query_luts(spark, sf_dir, F.col("vec_id") < _N_QUERIES),
+    ).withColumnRenamed("vec_id", "cand_id")
+    return _rank_topk(scored, "adc_micro", _PQ_SHORTLIST).select("query_id", "cand_id")
+
+
+def _refine(v: DataFrame, shortlist: DataFrame) -> DataFrame:
+    """Exact refine of a (query_id, cand_id) shortlist: only the
+    shortlisted candidates are decoded (a key-lookup join into the
+    full-precision `_vectors` store, never a corpus scan), keyed by
+    query_id against the broadcast query vectors, and re-ranked to the
+    exact-cosine top-{_TOP_K}."""
+    c = shortlist.select("query_id", "cand_id").join(_side(v, "c"), "cand_id")
+    return _topk(F.broadcast(_queries(v)), c, "query_id").orderBy("query_id", "rank")
 
 
 #: the shortlist's DuckDB twin (lut → adc → ``adc_shortlist``) —
@@ -1114,31 +973,8 @@ def topk_cosine_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
     formulation scanning M× the rows and losing to the linear scan it
     replaces; the packed sums are the identical integers, so the
     oracle is unchanged."""
-    from pyspark.sql import Window
-
-    e = load_table(spark, sf_dir, "embeddings")
-    shortlist = _adc_shortlist_ids(spark, sf_dir)
-    # exact refine: decode ONLY the shortlist (key-lookup join into the
-    # full-precision store), never the corpus
-    cands = _with_norm(e, "cand_id", "cv")
-    queries = _with_norm(e.filter(F.col("vec_id") < _N_QUERIES), "query_id", "qv")
-    refined = (
-        shortlist.join(cands, "cand_id")
-        .join(F.broadcast(queries), "query_id")
-        .select(
-            "query_id",
-            "cand_id",
-            _pair_cosine(
-                F.col("qv"), F.col("cv"), F.col("query_id_nrm"), F.col("cand_id_nrm")
-            ).alias("cosine"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("cand_id"))
-    return (
-        refined.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= _TOP_K)
-        .orderBy("query_id", "rank")
-    )
+    v = _vectors(load_table(spark, sf_dir, "embeddings"))
+    return _refine(v, _adc_shortlist_ids(spark, sf_dir))
 
 
 _PQ_SUB_SQL = f"""
@@ -1259,33 +1095,14 @@ def topk_cosine_int8(spark: SparkSession, sf_dir: str) -> DataFrame:
     scoring time. Candidate codes are exact integers, so cross-engine
     determinism is strictly better than the float path."""
     e = load_table(spark, sf_dir, "embeddings")
-    cands = _int8_scoring_codes(e).select(
-        F.col("vec_id").alias("cand_id"),
-        F.col("c8").alias("cv8"),
-        F.col("nrm8").alias("c_nrm8"),
+    # the int8 codes stand in for the candidate vectors: same cosine
+    # expression, dot(q, c8) / ‖q‖ / sqrt(dot(c8, c8))
+    codes = _int8_scoring_codes(e).select(
+        "vec_id", F.col("c8").alias("embedding"), F.col("nrm8").alias("nrm")
     )
-    queries = F.broadcast(
-        _with_norm(e.filter(F.col("vec_id") < _N_QUERIES), "query_id", "qv")
-    )
-    scored = (
-        queries.crossJoin(cands)
-        .filter(F.col("query_id") != F.col("cand_id"))
-        .select(
-            "query_id",
-            "cand_id",
-            det_round(
-                _dot(F.col("qv"), F.col("cv8")) / F.col("query_id_nrm") / F.col("c_nrm8"), 6
-            ).alias("cosine8"),
-        )
-    )
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine8"), F.asc("cand_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= _TOP_K)
-        .orderBy("query_id", "rank")
-    )
+    return _topk(
+        F.broadcast(_queries(_vectors(e))), _side(codes, "c"), name="cosine8"
+    ).orderBy("query_id", "rank")
 
 
 TOPK_INT8_ORACLE = f"""
@@ -1427,24 +1244,20 @@ def hybrid_retrieval_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
         .orderBy(F.desc("bm25"), "doc_id")
         .limit(_HYBRID_RECALL)
     )
-    e = load_table(spark, sf_dir, "embeddings")
-    qv = _with_norm(e.filter(F.col("vec_id") == 0), "query_id", "qv").select(
-        "qv", "query_id_nrm"
-    )
-    cv = _with_norm(e, "cand_id", "cv")
+    v = _vectors(load_table(spark, sf_dir, "embeddings"))
+    cv = _side(v, "c")
     return (
         cands.join(cv, cands["doc_id"] == cv["cand_id"])
-        .crossJoin(F.broadcast(qv))
-        .select(
-            "doc_id",
-            "bm25",
-            _pair_cosine(
-                F.col("qv"), F.col("cv"), F.col("query_id_nrm"), F.col("cand_id_nrm")
-            ).alias("cosine"),
-        )
+        .crossJoin(F.broadcast(_query0(v)))
+        .select("doc_id", "bm25", _side_cosine().alias("cosine"))
         .orderBy(F.desc("cosine"), "doc_id")
         .limit(_HYBRID_K)
     )
+
+
+def _query0(v: DataFrame) -> DataFrame:
+    """(qv, q_nrm): the hybrid retrievers' single query, vec_id 0."""
+    return _side(v.filter(F.col("vec_id") == 0), "q").select("qv", "q_nrm")
 
 
 def _hybrid_oracle() -> str:
@@ -1483,6 +1296,21 @@ def hybrid_retrieval_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
     double. Scale shape: each list is TakeOrdered (distributed top-50)
     and only the two 50-row lists meet in the fusion join; the final
     window runs over ≤100 rows."""
+    v = _vectors(load_table(spark, sf_dir, "embeddings"))
+    cos = (
+        _side(v, "c")
+        .crossJoin(F.broadcast(_query0(v)))
+        .select(F.col("cand_id").alias("doc_id"), _side_cosine().alias("cosine"))
+        .orderBy(F.desc("cosine"), "doc_id")
+        .limit(_HYBRID_RECALL)
+    )
+    return _rrf_fuse(spark, sf_dir, cos)
+
+
+def _rrf_fuse(spark: SparkSession, sf_dir: str, cos: DataFrame) -> DataFrame:
+    """Fuse the BM25 top-{_HYBRID_RECALL} arm with a vector arm `cos`
+    (doc_id, cosine) by reciprocal rank: (fused_rank, doc_id, r_bm25,
+    r_cosine), top-{_HYBRID_K}."""
     from kafka_flink_streaming_pipeline_spark.operators.text import bm25_scores
 
     bm = (
@@ -1496,22 +1324,6 @@ def hybrid_retrieval_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
         .over(Window.orderBy(F.desc("bm25"), "doc_id"))
         .cast("bigint")
         .alias("r_bm25"),
-    )
-    e = load_table(spark, sf_dir, "embeddings")
-    qv = _with_norm(e.filter(F.col("vec_id") == 0), "query_id", "qv").select(
-        "qv", "query_id_nrm"
-    )
-    cos = (
-        _with_norm(e, "cand_id", "cv")
-        .crossJoin(F.broadcast(qv))
-        .select(
-            F.col("cand_id").alias("doc_id"),
-            _pair_cosine(
-                F.col("qv"), F.col("cv"), F.col("query_id_nrm"), F.col("cand_id_nrm")
-            ).alias("cosine"),
-        )
-        .orderBy(F.desc("cosine"), "doc_id")
-        .limit(_HYBRID_RECALL)
     )
     r_c = cos.select(
         "doc_id",
@@ -1595,81 +1407,25 @@ def ann_ivfpq(spark: SparkSession, sf_dir: str) -> DataFrame:
     witness one half; this entry witnesses the composition, with the
     same fixed-seed determinism devices so both engines hash
     identically."""
-    e = load_table(spark, sf_dir, "embeddings")
-    with_norm = e.select(
-        "vec_id",
-        "embedding",
-        F.sqrt(_dot(F.col("embedding"), F.col("embedding"))).alias("nrm"),
-    )
-    member = _ivf_assign(with_norm, nprobe=1)
-    probe = _ivf_assign(with_norm, nprobe=_NPROBE).filter(
-        F.col("vec_id") < _N_QUERIES
-    )
-    cands = (
-        probe.select(F.col("vec_id").alias("query_id"), "centroid_id")
+    v = _vectors(load_table(spark, sf_dir, "embeddings"))
+    probes, members = _ivf_cells(v, _NPROBE)
+    pairs = (
+        probes.select(F.col("vec_id").alias("query_id"), "centroid_id")
         .join(
-            member.select(F.col("vec_id").alias("cand_id"), "centroid_id"),
+            members.select(F.col("vec_id").alias("cand_id"), "centroid_id"),
             "centroid_id",
         )
-        .filter(F.col("query_id") != F.col("cand_id"))
         .select("query_id", "cand_id")
-    )
-    qsub = _pq_subvecs(
-        _pq_normalized(e).filter(F.col("vec_id") < _N_QUERIES)
-    ).select(F.col("vec_id").alias("query_id"), "m", F.col("sv").alias("qv"))
-    lut = qsub.join(_pq_anchors(spark, sf_dir), "m").select(
-        "query_id",
-        "m",
-        "anchor_id",
-        F.floor(_dot(F.col("qv"), F.col("av")) * F.lit(1_000_000.0) + F.lit(0.5))
-        .cast("long")
-        .alias("dot_micro"),
     )
     packed = _pq_codes_packed(spark, sf_dir)
+    luts = _pq_query_luts(spark, sf_dir, F.col("vec_id") < _N_QUERIES)
     scored = (
-        cands.join(packed, cands["cand_id"] == packed["vec_id"])
-        .join(F.broadcast(_pq_query_lut_arrays(lut)), "query_id")
-        .select(
-            "query_id",
-            "cand_id",
-            F.aggregate(
-                F.zip_with(
-                    F.col("codes"),
-                    F.sequence(F.lit(0), F.lit(_PQ_M - 1)),
-                    lambda c, m: F.element_at(F.col("lut"), m * _PQ_K + c + 1),
-                ),
-                F.lit(0).cast("long"),
-                lambda acc, x: acc + x,
-            ).alias("adc_micro"),
-        )
+        pairs.filter(F.col("query_id") != F.col("cand_id"))
+        .join(packed, pairs["cand_id"] == packed["vec_id"])
+        .join(F.broadcast(luts), "query_id")
+        .select("query_id", "cand_id", _adc_micro().alias("adc_micro"))
     )
-    w_adc = Window.partitionBy("query_id").orderBy(
-        F.desc("adc_micro"), F.asc("cand_id")
-    )
-    shortlist = (
-        scored.withColumn("rn", F.row_number().over(w_adc))
-        .filter(F.col("rn") <= _PQ_SHORTLIST)
-        .select("query_id", "cand_id")
-    )
-    cv = _with_norm(e, "cand_id", "cv")
-    queries = _with_norm(e.filter(F.col("vec_id") < _N_QUERIES), "query_id", "qv")
-    refined = (
-        shortlist.join(cv, "cand_id")
-        .join(F.broadcast(queries), "query_id")
-        .select(
-            "query_id",
-            "cand_id",
-            _pair_cosine(
-                F.col("qv"), F.col("cv"), F.col("query_id_nrm"), F.col("cand_id_nrm")
-            ).alias("cosine"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("cand_id"))
-    return (
-        refined.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= _TOP_K)
-        .orderBy("query_id", "rank")
-    )
+    return _refine(v, _rank_topk(scored, "adc_micro", _PQ_SHORTLIST))
 
 
 ANN_IVFPQ_ORACLE = f"""
@@ -1768,81 +1524,24 @@ def hybrid_retrieval_rrf_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
     scanned vs 512, full-precision store touched only by a 50-row
     lookup — and materializes when the embedding store stops fitting
     in memory, not at this testbed's scale."""
-    from kafka_flink_streaming_pipeline_spark.operators.text import bm25_scores
-
-    bm = (
-        bm25_scores(spark, sf_dir)
-        .orderBy(F.desc("bm25"), "doc_id")
-        .limit(_HYBRID_RECALL)
-    )
-    r_b = bm.select(
-        "doc_id",
-        F.row_number()
-        .over(Window.orderBy(F.desc("bm25"), "doc_id"))
-        .cast("bigint")
-        .alias("r_bm25"),
-    )
-    e = load_table(spark, sf_dir, "embeddings")
-    qsub = _pq_subvecs(_pq_normalized(e).filter(F.col("vec_id") == 0)).select(
-        F.col("vec_id").alias("query_id"), "m", F.col("sv").alias("qv")
-    )
-    lut = qsub.join(_pq_anchors(spark, sf_dir), "m").select(
-        "query_id",
-        "m",
-        "anchor_id",
-        F.floor(_dot(F.col("qv"), F.col("av")) * F.lit(1_000_000.0) + F.lit(0.5))
-        .cast("long")
-        .alias("dot_micro"),
-    )
     shortlist = (
         _packed_adc_scores(
-            _pq_codes_packed(spark, sf_dir), _pq_query_lut_arrays(lut)
+            _pq_codes_packed(spark, sf_dir),
+            _pq_query_luts(spark, sf_dir, F.col("vec_id") == 0),
         )
         .select(F.col("vec_id").alias("doc_id"), "adc_micro")
         .orderBy(F.desc("adc_micro"), "doc_id")
         .limit(_PQ_SHORTLIST)
         .select("doc_id")
     )
-    qv = _with_norm(e.filter(F.col("vec_id") == 0), "query_id", "qv").select(
-        "qv", "query_id_nrm"
-    )
-    cv = _with_norm(e, "cand_id", "cv")
-    r_c = (
+    v = _vectors(load_table(spark, sf_dir, "embeddings"))
+    cv = _side(v, "c")
+    cos = (
         shortlist.join(cv, shortlist["doc_id"] == cv["cand_id"])
-        .crossJoin(F.broadcast(qv))
-        .select(
-            "doc_id",
-            _pair_cosine(
-                F.col("qv"), F.col("cv"), F.col("query_id_nrm"), F.col("cand_id_nrm")
-            ).alias("cosine"),
-        )
-        .select(
-            "doc_id",
-            F.row_number()
-            .over(Window.orderBy(F.desc("cosine"), "doc_id"))
-            .cast("bigint")
-            .alias("r_cosine"),
-        )
+        .crossJoin(F.broadcast(_query0(v)))
+        .select("doc_id", _side_cosine().alias("cosine"))
     )
-    score = F.coalesce(F.lit(1.0) / (F.lit(60.0) + F.col("r_bm25")), F.lit(0.0)) + (
-        F.coalesce(F.lit(1.0) / (F.lit(60.0) + F.col("r_cosine")), F.lit(0.0))
-    )
-    fused = r_b.join(r_c, "doc_id", "full_outer").select(
-        "doc_id", "r_bm25", "r_cosine", score.alias("rrf")
-    )
-    return (
-        fused.orderBy(F.desc("rrf"), "doc_id")
-        .limit(_HYBRID_K)
-        .select(
-            F.row_number()
-            .over(Window.orderBy(F.desc("rrf"), "doc_id"))
-            .cast("bigint")
-            .alias("fused_rank"),
-            "doc_id",
-            "r_bm25",
-            "r_cosine",
-        )
-    )
+    return _rrf_fuse(spark, sf_dir, cos)
 
 
 def _rrf_ann_oracle() -> str:
@@ -1919,32 +1618,38 @@ def sim_ann_recall_report(spark: SparkSession, sf_dir: str) -> DataFrame:
         ("lsh_multiprobe", ann_lsh_multiprobe),
         ("pq_adc_refine", topk_cosine_pq),
     ]
-    parts = []
-    for name, fn in methods:
-        m = fn(spark, sf_dir).select(
-            "query_id", "cand_id", F.lit(1).alias("hit")
+    return functools.reduce(
+        DataFrame.unionAll,
+        [
+            _recall(exact, fn(spark, sf_dir), F.lit(name).alias("method"))
+            for name, fn in methods
+        ],
+    ).orderBy("method")
+
+
+def _recall(truth: DataFrame, found: DataFrame, label: Column) -> DataFrame:
+    """One recall row, (label, n_queries, total_truth, total_hits,
+    recall_ppm): the micro-averaged recall of `found`'s (query_id,
+    cand_id) pairs against `truth`'s, in integer ppm
+    (Σhits·10⁶ DIV Σtruth)."""
+    hits = found.select("query_id", "cand_id", F.lit(1).alias("hit"))
+    return (
+        truth.join(hits, ["query_id", "cand_id"], "left")
+        .agg(
+            F.countDistinct("query_id").alias("n_queries"),
+            F.count("*").alias("total_truth"),
+            F.sum(F.coalesce("hit", F.lit(0))).cast("bigint").alias("total_hits"),
         )
-        parts.append(
-            exact.join(m, ["query_id", "cand_id"], "left")
-            .agg(
-                F.countDistinct("query_id").alias("n_queries"),
-                F.count("*").alias("total_truth"),
-                F.sum(F.coalesce("hit", F.lit(0))).cast("bigint").alias("total_hits"),
-            )
-            .select(
-                F.lit(name).alias("method"),
-                "n_queries",
-                "total_truth",
-                "total_hits",
-                F.expr(
-                    "CAST(total_hits * 1000000 DIV total_truth AS BIGINT)"
-                ).alias("recall_ppm"),
-            )
+        .select(
+            label,
+            "n_queries",
+            "total_truth",
+            "total_hits",
+            F.expr("CAST(total_hits * 1000000 DIV total_truth AS BIGINT)").alias(
+                "recall_ppm"
+            ),
         )
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionAll(p)
-    return out.orderBy("method")
+    )
 
 
 def _recall_report_oracle() -> str:
@@ -2002,53 +1707,12 @@ def matryoshka_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     already documents."""
     truth = topk_cosine(spark, sf_dir).select("query_id", "cand_id")
     e = load_table(spark, sf_dir, "embeddings")
-    from pyspark.sql import Window
-
     parts = []
     for d in _MRL_DIMS:
-        t = e.select("vec_id", F.slice("embedding", 1, d).alias("v"))
-        q = F.broadcast(
-            t.filter(F.col("vec_id") < _N_QUERIES).select(
-                F.col("vec_id").alias("query_id"), F.col("v").alias("qv")
-            )
-        )
-        c = t.select(F.col("vec_id").alias("cand_id"), F.col("v").alias("cv"))
-        scored = (
-            q.crossJoin(c)
-            .filter(F.col("query_id") != F.col("cand_id"))
-            .select(
-                "query_id",
-                "cand_id",
-                _cosine(F.col("qv"), F.col("cv")).alias("cosine"),
-            )
-        )
-        w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("cand_id"))
-        topd = (
-            scored.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= _TOP_K)
-            .select("query_id", "cand_id", F.lit(1).alias("hit"))
-        )
-        parts.append(
-            truth.join(topd, ["query_id", "cand_id"], "left")
-            .agg(
-                F.countDistinct("query_id").alias("n_queries"),
-                F.count("*").alias("total_truth"),
-                F.sum(F.coalesce("hit", F.lit(0))).cast("bigint").alias("total_hits"),
-            )
-            .select(
-                F.lit(d).cast("bigint").alias("dim"),
-                "n_queries",
-                "total_truth",
-                "total_hits",
-                F.expr("CAST(total_hits * 1000000 DIV total_truth AS BIGINT)").alias(
-                    "recall_ppm"
-                ),
-            )
-        )
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionAll(p)
-    return out.orderBy("dim")
+        v = _vectors(e.select("vec_id", F.slice("embedding", 1, d).alias("embedding")))
+        topd = _topk(F.broadcast(_queries(v)), _side(v, "c"))
+        parts.append(_recall(truth, topd, F.lit(d).cast("bigint").alias("dim")))
+    return functools.reduce(DataFrame.unionAll, parts).orderBy("dim")
 
 
 def _matryoshka_oracle() -> str:
@@ -2183,12 +1847,8 @@ def dedup_semantic_clusters(
     if n_cells is None:
         n_vecs = e.count()
         n_cells = int(min(65536, max(1, math.ceil(math.sqrt(n_vecs / _SEM_PAIR_WEIGHT)))))
-    with_norm = e.select(
-        "vec_id",
-        "embedding",
-        F.sqrt(_dot(F.col("embedding"), F.col("embedding"))).alias("nrm"),
-    )
-    m = _ivf_assign(with_norm, k=n_cells).join(with_norm, "vec_id")
+    v = _vectors(e)
+    m = _ivf_assign(v, k=n_cells).join(v, "vec_id")
     # cap enforcement: K-row size table broadcast back onto the
     # assignment, then a pure-BIGINT hash split — no extra shuffle of
     # the vectors (the pair join's shuffle key just widens to include
@@ -2202,36 +1862,17 @@ def dedup_semantic_clusters(
     m = m.join(F.broadcast(sizes), "centroid_id").withColumn(
         "sub_id", F.shiftright(x, 16) % F.col("n_sub")
     )
-    a = m.select(
-        F.col("vec_id").alias("v1"),
-        "centroid_id",
-        "sub_id",
-        F.col("embedding").alias("e1"),
-        F.col("nrm").alias("n1"),
-    )
-    b = m.select(
-        F.col("vec_id").alias("v2"),
-        "centroid_id",
-        "sub_id",
-        F.col("embedding").alias("e2"),
-        F.col("nrm").alias("n2"),
-    )
+    keys = ("centroid_id", "sub_id")
     return (
-        a.join(b, ["centroid_id", "sub_id"])
-        .filter(F.col("v1") < F.col("v2"))
-        .select(
-            "centroid_id",
-            "v1",
-            "v2",
-            _pair_cosine(F.col("e1"), F.col("e2"), F.col("n1"), F.col("n2")).alias(
-                "cosine"
-            ),
-        )
+        _side(m, "q", *keys)
+        .join(_side(m, "c", *keys), list(keys))
+        .filter(F.col("query_id") < F.col("cand_id"))
+        .select("centroid_id", "query_id", "cand_id", _side_cosine().alias("cosine"))
         .filter(F.col("cosine") >= _NEAR_DUP_T)
-        .groupBy(F.col("v2").alias("vec_id"))
+        .groupBy(F.col("cand_id").alias("vec_id"))
         .agg(
             F.first("centroid_id").alias("centroid_id"),
-            F.min("v1").alias("dup_of"),
+            F.min("query_id").alias("dup_of"),
             F.count("*").alias("n_similar"),
         )
     )  # dropped-vector list: corpus-sized at scale, unsorted
@@ -2551,40 +2192,9 @@ def ann_ivf_trained(spark: SparkSession, sf_dir: str) -> DataFrame:
     like `build_ann_index`); per query the candidate set is one cell,
     ~|corpus|/K rows."""
     cells = _ivf_trained_cells(spark, sf_dir)
-    e = load_table(spark, sf_dir, "embeddings")
-    with_norm = e.select(
-        "vec_id",
-        "embedding",
-        F.sqrt(_dot(F.col("embedding"), F.col("embedding"))).alias("nrm"),
-    ).join(cells, "vec_id")
-    q = with_norm.filter(F.col("vec_id") < _N_QUERIES).select(
-        F.col("vec_id").alias("query_id"),
-        "cid",
-        F.col("embedding").alias("qv"),
-        F.col("nrm").alias("q_nrm"),
-    )
-    c = with_norm.select(
-        F.col("vec_id").alias("cand_id"),
-        "cid",
-        F.col("embedding").alias("cv"),
-        F.col("nrm").alias("c_nrm"),
-    )
-    scored = (
-        q.join(c, "cid")
-        .filter(F.col("query_id") != F.col("cand_id"))
-        .select(
-            "query_id",
-            "cand_id",
-            _pair_cosine(
-                F.col("qv"), F.col("cv"), F.col("q_nrm"), F.col("c_nrm")
-            ).alias("cosine"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("cand_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= _TOP_K)
-        .orderBy("query_id", "rank")
+    v = _vectors(load_table(spark, sf_dir, "embeddings")).join(cells, "vec_id")
+    return _topk(_queries(v, "cid"), _side(v, "c", "cid"), "cid").orderBy(
+        "query_id", "rank"
     )
 
 

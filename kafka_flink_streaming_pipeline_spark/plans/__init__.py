@@ -24,124 +24,17 @@ class QuerySpec:
 
 
 #: Names emitted FIRST from `merged()`, in this order. The grading
-#: driver oracle-checks a prefix window of the registry (50 entries),
-#: so the window rotates per round toward cumulative full coverage:
-#:   r1 window: reference parity + TPC-H head (50/50 recorded).
-#:   r2 window: full SURVEY §2 parity surface + one representative per
-#:     LLM-pipeline family (49 green + the then-no-oracle HLL rollup).
-#:   r3 window: the 4 retry entries + the 46 never-driver-checked
-#:     (50/50 green; cumulative 131/143 unique).
-#: r4 window: the last 12 never-driver-checked entries + the 13
-#: round-4 additions + 25 parity regression re-checks (49/50 green;
-#: the one red — curation_token_budget — is fixed and fronted below).
-#: r5 window: fronted the r4 red row's fix, the rounding-sweep
-#: value-changed entries, the post-r4-rotation gaps, the r5 additions
-#: and reworks, then sweep-touched entries oldest-witness-first —
-#: 49/50 green (the red: curation_token_budget, again).
-#: r6 window: the token-budget bisect block + the 32 never-checked
-#: round-6 additions + the 10 fillers displaced from r5 + oldest
-#: r1-era witnesses (48/50 green; reds: curation_token_budget and its
-#: new division-free parts twin — proving the divergence is
-#: composition-level, not arithmetic).
-#: r7 window (this one): (a) the token-budget STRUCTURAL-FIX block —
-#: both r6 reds rewritten on the flattened oracle (single linear CTE
-#: chain: one QUALITY_ORACLE instantiation, the LSH closure as K
-#: unrolled single-reference label-propagation passes with an in-chain
-#: convergence guard), the NEW per-row survivor witness
-#: curation_token_budget_rows (never driver-checked), and the two
-#: lineage companions the r6 verdict named (text_quality_scores,
-#: curation_filter_audit) so a fourth red localizes to exact rows;
-#: (b) witness refresh, oldest-first per verdict ask #2: all 27
-#: remaining r1-era witnesses, all 12 r2-era, and the six
-#: never-checked r7 additions, which outrank stale-green re-checks
-#: (the r3-era refreshes sketch_rollup_active_users,
-#: customer_order_dates_array, range_band_join_tiers, tpch_q12/q13/q14
-#: rotate to r8): the DSIR end-to-end composite, the power-iteration
-#: top-PC pair, the shuffle manifest, the semantic split-leakage
-#: histogram, and the maximal duplicated-region report. The r6 additions all have fresh r6 witnesses and rotate
-#: out (attrib_click_to_view_5m and asof_feature_join rotate to r8
-#: for the seventh and eighth never-checked additions: the
-#: release-manifest digest and its streaming twin, the SEVENTH
-#: writeStream artifact); values are
-#: unchanged this round except the three token-budget
-#: entries (the flatten is oracle-side only — Spark plans untouched,
-#: so their r6-green companions curation_pipeline_v2/dedup_keep_best_lsh
-#: keep their witnesses).
-#: r8 window: (a) the two never-driver-checked r7 entries the verdict
-#: fronted (`knn_label_agreement` — also VALUE-CHANGED by the
-#: symmetric-int8 scoring rewrite, new oracle pinned to the int8
-#: arithmetic — and `embedding_norm_profile`); (b) value-changed:
-#: `split_leakage_semantic` (no-candidate sentinel −100 → −999, the
-#: advisor's bucket-collision fix) and `profile_source_mix`
-#: (lang-mode branch re-rooted off the quality subtree — values
-#: identical, re-witnessed because both plan sides changed); (c) the
-#: five never-checked r8 additions (`sim_int8_topk_agreement`,
-#: `text_ngram_novelty`, `curation_diversity_sample`,
-#: `profile_source_vocab_overlap` — windowing every same-round
-#: addition is the r7 lesson: post-close-out entries stayed
-#: never-checked a full round); (d) witness refresh, oldest-first per
-#: the standing rule: both r2-era stragglers, all 33 r3-era, and 6
-#: r4-era — preferring the entries the r8 shared-disk-cache change
-#: touches (`dedup_minhash_lsh`, `dedup_components`,
-#: `sim_ann_ivf_persisted`). Done-criterion from the verdict: all
-#: eight named rotations green ⇒ cumulative 216/216 (+5 r8 additions
-#: = 221/221) driver-witnessed, witness-age floor at r4.
-#: r9 window: (a) the one never-driver-checked r9 addition
-#: (`dedup_exactsubstr_scrub` — windowing every same-round addition is
-#: the standing r7 lesson); (b) no value-changed entries this round
-#: (the shared-cache rework changes artifact addressing, not values;
-#: the int8_assign2 k==0 guard is unreachable on real testdata);
-#: (c) witness refresh, oldest-first per the standing rule: ALL 30
-#: remaining r4-era entries — this is the verdict's #1 ask (the eight
-#: named core parity witnesses q2/q3/q4/q6/q7/q8/preprocess_clean_events/
-#: kafka_wire_frame are here, plus the rest of the r4 stratum, raising
-#: the witness-age floor to r5) — then (d) 19 r5-era entries,
-#: preferring the consumers of the reworked shared-cache layer
-#: (sim_topk_cosine — the r8 flagged mover, re-witnessed under the new
-#: cache — the ANN/PQ/LSH families, both streaming twins) and the
-#: exactsubstr sibling `dedup_span_scrub`.
-#: r10 window: (a) value-changed `cohort_retention_matrix` (user-week
-#: grain rewrite) fronted; (b) all 28 remaining r5-era witnesses —
-#: the oldest cohort, so the witness-age floor rises to r6 (verdict
-#: ask #4); (c) 21 of the 48 r6-era entries, preferring shared-layer
-#: consumers (ANN/PQ/kmeans, LSH dedup composites, all four r6
-#: streaming twins) and the correctness rows behind the two r9 bench
-#: movers. No never-checked entries exist (226/226 witnessed).
-#: r11 window: (a) VALUE-CHANGED `dedup_semantic_clusters` fronted
-#: (per-cell cap + id-hash re-split, the r10 verdict's scale ask #3 —
-#: drop list changed at every SF) and the one NEW entry
-#: `dedup_containment_profile` (estimated-containment decile rollup,
-#: ask #4 — same-round windowing is the standing r7 lesson); (b) ALL
-#: 27 remaining r6-era witnesses — the oldest cohort, raising the
-#: official witness-age floor to r7 (the r10 verdict's #1 ask: these
-#: include the tokenizer/curation/leakage families whose shared
-#: subtrees churned r7–r10); (c) the 21 stalest r7-era entries as
-#: emitted by `tools/witness_report.py --emit-window` (the TPC-H
-#: parity block + join-shape family), truncated to keep the window at
-#: 50 (rolling_revenue_30d and tpch_q2_max_balance_supplier rotate
-#: into r12's window).
-#: r12 window: (a) the one NEW entry `dedup_containment_bounded`
-#: (estimate-screened exact containment, r11 verdict ask #3) plus the
-#: four consumers of the newly session-shared/disk-cached exact top-k
-#: anchor and the trained-cells consumer `sim_ann_ivf_trained`
-#: (ask #5 — values are unchanged by construction, but their
-#: materialization path now crosses the parquet cache round-trip, so
-#: they get fresh witnesses under the new plumbing, the standing r7
-#: lesson); (b) ALL 28 remaining r7-era witnesses — the oldest cohort,
-#: raising the official witness-age floor to r8 (verdict ask #1:
-#: these sit on the shared subtrees — disk cache, int8 layout, DSIR
-#: chain — that churned r8–r11); (c) the 16 stalest r8-era entries as
-#: emitted by `tools/witness_report.py --emit-window`, truncated to
-#: keep the window at 50 (fp_geo_top_5m rotates to r13).
+#: driver oracle-checks only the first 50 names `merged()` emits, so
+#: this tuple is the set it witnesses. `python tools/witness_report.py
+#: --emit-window` regenerates it, never-checked and stalest witnesses
+#: first; entries whose output values changed are fronted by hand.
 PRIORITY_WINDOW: tuple[str, ...] = (
-    # (a) new this round + shared-exact-anchor consumers
     "dedup_containment_bounded",
     "sim_topk_cosine",
     "sim_int8_topk_agreement",
     "sim_ann_recall_report",
     "sim_matryoshka_recall",
     "sim_ann_ivf_trained",
-    # (b) the 28 remaining r7-era witnesses (oldest cohort)
     "rolling_revenue_30d",
     "tpch_q2_max_balance_supplier",
     "set_ops_customer_cohorts",
@@ -170,7 +63,6 @@ PRIORITY_WINDOW: tuple[str, ...] = (
     "user_event_sequences",
     "decontaminate_against_eval",
     "sketch_cms_heavy_hitters",
-    # (c) the 17 stalest r8-era entries (registry order)
     "range_band_join_tiers",
     "customer_order_dates_array",
     "tpch_q12_priority_mix",

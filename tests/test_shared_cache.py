@@ -97,6 +97,31 @@ def test_path_artifact_promotion(spark, cache, sf_copy):
     assert spark.read.parquet(p1).count() == 4
 
 
+def test_uncached_path_artifact_removed_at_exit(tmp_path):
+    """With the disk cache off, a path artifact lives in a fresh temp
+    dir for the life of the process and is removed when it exits."""
+    import os
+    import subprocess
+    import sys
+
+    code = (
+        "from pathlib import Path\n"
+        "from kafka_flink_streaming_pipeline_spark.operators import shared_cache\n"
+        "def build_into(p):\n"
+        "    Path(p, 'part-0').write_text('x')\n"
+        "p = shared_cache.get_or_build_path('idx', '.', build_into)\n"
+        "assert Path(p, 'part-0').exists()\n"
+        "print(p)\n"
+    )
+    env = dict(os.environ, SPARK_GRAFT_SHARED_CACHE="0", TMPDIR=str(tmp_path))
+    built = subprocess.run(
+        [sys.executable, "-c", code], cwd=Path(__file__).resolve().parents[1],
+        env=env, capture_output=True, text=True, check=True,
+    ).stdout.strip()
+    assert Path(built).parent == tmp_path
+    assert not Path(built).exists()
+
+
 # --- r9: cache-poisoning coverage (VERDICT ask #3, ADVICE medium) ----------
 
 

@@ -22,6 +22,20 @@ from kafka_flink_streaming_pipeline_spark.streaming.jobs import (
 from tests.conftest import SF_CORRECT, SF_SMOKE
 
 
+def assert_no_watermark_drops(*queries) -> None:
+    """Fail on late data directly: no stateful operator of these
+    finished queries may have dropped a row behind the watermark
+    (`stateOperators[*].numRowsDroppedByWatermark`, summed over every
+    progress update), rather than surfacing later as missing rows."""
+    dropped = sum(
+        op["numRowsDroppedByWatermark"]
+        for q in queries
+        for p in q.recentProgress
+        for op in p["stateOperators"]
+    )
+    assert dropped == 0, f"{dropped} rows dropped behind the watermark"
+
+
 @pytest.fixture(scope="module")
 def chunks(spark, tmp_path_factory):
     d = str(tmp_path_factory.mktemp("chunks"))
@@ -66,6 +80,7 @@ def test_fp2_streaming_equals_batch(spark, tmp_path, chunks):
         replay_stream(spark, chunks), table, str(tmp_path / "ckpt")
     )
     q.awaitTermination(300)
+    assert_no_watermark_drops(q)
 
     from kafka_flink_streaming_pipeline_spark.plans.clickstream import _fp2
 
@@ -127,6 +142,7 @@ def test_session_window_streaming_matches_batch(spark, tmp_path, chunks):
         .start()
     )
     q.awaitTermination(300)
+    assert_no_watermark_drops(q)
     streamed = {
         (r.uuid, r.s, r.n) for r in spark.read.parquet(out).collect()
     }
@@ -192,6 +208,7 @@ def test_global_features_streaming_matches_batch(spark, tmp_path, chunks):
     )
     for q in qs:
         q.awaitTermination(300)
+    assert_no_watermark_drops(*qs)
 
     actives = spark.read.parquet(actives_p)
     geo = spark.read.parquet(geo_p).drop("batch_seq")
@@ -238,6 +255,7 @@ def test_stream_stream_interval_join_matches_batch(spark, tmp_path, chunks):
         .start()
     )
     q.awaitTermination(300)
+    assert_no_watermark_drops(q)
     streamed = {
         (r.uuid, r.click_id, r.view_id, r.lag_ms)
         for r in spark.read.parquet(out).collect()
@@ -527,6 +545,7 @@ def test_hop_window_streaming_matches_batch(spark, tmp_path, chunks):
         replay_stream(spark, chunk_dir), out, str(tmp_path / "ckpt")
     )
     q.awaitTermination(300)
+    assert_no_watermark_drops(q)
 
     # hop windows close up to 10 min after the last event's slide bucket
     horizon = max_ts + datetime.timedelta(minutes=15)
@@ -673,6 +692,7 @@ def test_stream_stream_full_outer_join_matches_batch(spark, tmp_path):
         .start()
     )
     q.awaitTermination(300)
+    assert_no_watermark_drops(q)
     streamed = {
         (r.uuid, r.click_id, r.view_id, r.lag_ms)
         for r in spark.read.parquet(out).filter(F.col("uuid") != -1).collect()

@@ -11,6 +11,13 @@ Usage:
     python tools/driver_sim.py                  # all registry entries
     python tools/driver_sim.py name [name ...]  # focused re-check
 Exit 0 = all compared clean.
+
+Every `OK`/`OK-rows-only` line ends with the entry's row count and
+value hash, and per-entry timings go to stderr, so the stdout of two
+checkouts compares with a plain `diff`:
+
+    python tools/driver_sim.py > a.txt   # in each checkout, then
+    diff a.txt b.txt
 """
 
 from __future__ import annotations
@@ -71,6 +78,7 @@ def main() -> int:
         try:
             sdf = qs[name](spark, SF)
             srows = [tuple(r) for r in sdf.collect()]
+            h = vhash(sdf.columns, srows)
             if name in osql:
                 res = con.execute(osql[name])
                 dcols = [d[0] for d in res.description]
@@ -78,17 +86,17 @@ def main() -> int:
                 ok = (
                     len(srows) == len(drows)
                     and sorted(sdf.columns) == sorted(dcols)
-                    and vhash(sdf.columns, srows) == vhash(dcols, drows)
+                    and h == vhash(dcols, drows)
                 )
                 print(
-                    ("OK  " if ok else "FAIL")
-                    + f" {name} ({time.time() - t0:.1f}s, {len(srows)} rows)",
+                    ("OK  " if ok else "FAIL") + f" {name} {len(srows)} rows {h}",
                     flush=True,
                 )
                 n_fail += 0 if ok else 1
             else:
                 assert len(sdf.columns) > 0
-                print(f"OK-rows-only {name} ({time.time() - t0:.1f}s)", flush=True)
+                print(f"OK-rows-only {name} {len(srows)} rows {h}", flush=True)
+            print(f"{name} {time.time() - t0:.1f}s", file=sys.stderr, flush=True)
         except Exception as e:  # noqa: BLE001 — report every entry
             print(f"ERR {name}: {type(e).__name__}: {str(e)[:200]}", flush=True)
             n_fail += 1
