@@ -208,7 +208,7 @@ HEADLINE = [
     "curation_moore_lewis_select",
     # round-9 late additions (dedup_exactsubstr_scrub is already listed
     # above; kafka_roundtrip_stream_materialized is a writeStream twin
-    # and stays out of the battery like its six siblings)
+    # and stays out of the battery like its eight siblings)
     "hybrid_retrieval_mmr",
     "dedup_soft_reweight",
     "hybrid_retrieval_mmr_ann",

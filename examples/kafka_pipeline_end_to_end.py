@@ -54,7 +54,10 @@ def main() -> None:
         kafka_replay_stream,
         produce_topic_log,
     )
-    from kafka_flink_streaming_pipeline_spark.streaming.jobs import fanout_stream_job
+    from kafka_flink_streaming_pipeline_spark.streaming.jobs import (
+        drain,
+        fanout_stream_job,
+    )
     from kafka_flink_streaming_pipeline_spark.streaming.txn_sink import (
         read_append_table,
     )
@@ -115,8 +118,7 @@ def main() -> None:
         return fanout_stream_job(stream, raw_p, rollup_p, ck)
 
     # ---- consume run 1: drains segment 0, then terminates ------------
-    q = consume()
-    assert q.awaitTermination(600), "consumer run 1 did not drain"
+    drain(consume(), "consumer run 1")
     print(f"consumer run 1 drained {read_append_table(spark, raw_p).count()} rows")
 
     # ---- more production while the consumer is DOWN -------------------
@@ -127,8 +129,7 @@ def main() -> None:
     print(f"produced segment 1 while consumer down: {late.count()} frames")
 
     # ---- consume run 2: same group resumes from the group cursor ------
-    q = consume()
-    assert q.awaitTermination(600), "consumer run 2 did not drain"
+    drain(consume(), "consumer run 2")
 
     # ---- verify: the pipeline is lossless and the rollup exact --------
     raw = read_append_table(spark, raw_p).drop("batch_id")

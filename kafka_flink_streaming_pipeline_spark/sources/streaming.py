@@ -1,6 +1,6 @@
 """Streaming sources (reference S1/S2/S10/S11 — SURVEY.md §2.1).
 
-Three ways to get the clickstream as a streaming DataFrame:
+Ways to get a streaming DataFrame:
 
 - `kafka_stream`: the production path, mapping the reference's Flink
   Kafka source DDL (events_postgres_sink.sql:14-32) option-for-option:
@@ -16,6 +16,8 @@ Three ways to get the clickstream as a streaming DataFrame:
   timestamp-ordered chunk files for `replay_stream` to consume —
   timestamp-ordered merge replay like the reference producer (without
   the wall-clock sleeps; correctness tests don't need pacing).
+- `file_batches`: any bounded frame (documents, vectors, forget
+  requests) replayed as N files, one per micro-batch.
 """
 
 from __future__ import annotations
@@ -191,4 +193,19 @@ def replay_stream(
         .parquet(chunk_dir)
         .withColumn("event_time", F.col("ts"))
         .withWatermark("event_time", watermark)
+    )
+
+
+def file_batches(
+    spark: SparkSession, frame: DataFrame, in_dir: str, n: int
+) -> DataFrame:
+    """Write `frame` as `n` parquet files under `in_dir` and return a
+    file stream over them that admits one file per trigger: a bounded
+    input that replays as n micro-batches (unordered — for jobs whose
+    result does not depend on how rows are batched)."""
+    frame.repartition(n).write.parquet(in_dir)
+    return (
+        spark.readStream.schema(frame.schema)
+        .option("maxFilesPerTrigger", "1")
+        .parquet(in_dir)
     )

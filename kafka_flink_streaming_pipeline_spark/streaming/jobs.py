@@ -17,16 +17,78 @@ window operator exactly as Flink drops them.
 
 State at scale: per-(user, 5-min-window) counters, evicted when the
 watermark passes — bounded by active users per window, not by history.
+
+Bounded runs: the reference runs each job as a long-lived Flink job;
+here every job is started by `start_bounded` (checkpointed, trigger
+`availableNow`: drain what the source holds at start, then stop) and
+finished by `drain`, which bounds the wait and turns the engine's own
+progress reports into loud failures (timeout, rows dropped behind the
+watermark) instead of a silently short sink.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
-from pyspark.sql.streaming import StreamingQuery
+import shutil
+from typing import Callable
 
-from kafka_flink_streaming_pipeline_spark.functions import redis_feature_key
-from kafka_flink_streaming_pipeline_spark.streaming.upsert import upsert_sink
+from pyspark.sql import DataFrame, Window
+from pyspark.sql import functions as F
+from pyspark.sql.streaming import DataStreamWriter, StreamingQuery
+
+from kafka_flink_streaming_pipeline_spark.functions import redis_feature_key, synth_geo
+from kafka_flink_streaming_pipeline_spark.streaming.txn_sink import (
+    read_append_table,
+    txn_append_sink,
+)
+from kafka_flink_streaming_pipeline_spark.streaming.upsert import merge_upsert, upsert_sink
+
+#: How long `drain` waits for a bounded run before stopping it.
+DRAIN_TIMEOUT_S = 600
+
+
+def start_bounded(writer: DataStreamWriter, checkpoint: str) -> StreamingQuery:
+    """Start `writer` as a bounded run: checkpointed at `checkpoint`,
+    trigger availableNow (every offset the source holds at start, in
+    its own rate-limited micro-batches, then the query terminates)."""
+    return (
+        writer.option("checkpointLocation", checkpoint)
+        .trigger(availableNow=True)
+        .start()
+    )
+
+
+def drain(q: StreamingQuery, what: str) -> None:
+    """Wait for the bounded run `q` (named `what` in errors) to finish.
+
+    Still running after `DRAIN_TIMEOUT_S`: stop it and raise
+    TimeoutError — its sink is incomplete and must not be read. Any
+    stateful operator that dropped rows behind the watermark
+    (`stateOperators[*].numRowsDroppedByWatermark` over the query's
+    progress) raises too: late data fails here, not later as missing
+    rows. A failed query re-raises its own error."""
+    if not q.awaitTermination(DRAIN_TIMEOUT_S):
+        q.stop()
+        raise TimeoutError(
+            f"{what} did not finish within {DRAIN_TIMEOUT_S}s; its sink is "
+            "incomplete — not reading it"
+        )
+    dropped = sum(
+        op["numRowsDroppedByWatermark"]
+        for p in q.recentProgress
+        for op in p["stateOperators"]
+    )
+    if dropped:
+        raise RuntimeError(f"{what}: {dropped} rows dropped behind the watermark")
+
+
+def _parquet_job(frame: DataFrame, table_path: str, checkpoint: str) -> StreamingQuery:
+    """Bounded append-mode run of `frame` into a parquet table."""
+    return start_bounded(
+        frame.writeStream.outputMode("append")
+        .format("parquet")
+        .option("path", table_path),
+        checkpoint,
+    )
 
 
 def raw_passthrough(stream: DataFrame) -> DataFrame:
@@ -46,13 +108,11 @@ def raw_sink_job(stream: DataFrame, table_path: str, checkpoint: str) -> Streami
     """FP1 end-to-end: pass-through projection upserted on event_id —
     the S3 JDBC-upsert analogue, idempotent under redelivery."""
     spark = stream.sparkSession
-    return (
+    return start_bounded(
         raw_passthrough(stream)
         .writeStream.outputMode("append")
-        .foreachBatch(upsert_sink(spark, table_path, ["event_id"], "act_load_time"))
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
+        .foreachBatch(upsert_sink(spark, table_path, ["event_id"], "act_load_time")),
+        checkpoint,
     )
 
 
@@ -111,23 +171,17 @@ def global_features_stream_jobs(
         F.window("event_time", "5 minutes").alias("w"),
         synth_geo_from_stream().alias("geo_location"),
     )
-    actives_q = (
+    actives_q = _parquet_job(
         base.dropDuplicates(["uuid", "w"])
         .groupBy("w")
         .agg(F.count("*").alias("active_users"))
-        .select(F.col("w.end").alias("window_end"), "active_users")
-        .writeStream.outputMode("append")
-        .format("parquet")
-        .option("path", actives_path)
-        .option("checkpointLocation", f"{checkpoint_dir}/actives")
-        .trigger(availableNow=True)
-        .start()
+        .select(F.col("w.end").alias("window_end"), "active_users"),
+        actives_path,
+        f"{checkpoint_dir}/actives",
     )
 
     def top1_upsert(df: DataFrame, batch_id: int) -> None:
-        from pyspark.sql import Window as W
-
-        rnk = W.partitionBy("window_end").orderBy(
+        rnk = Window.partitionBy("window_end").orderBy(
             F.desc("total"), F.asc("geo_location")
         )
         top = (
@@ -139,16 +193,14 @@ def global_features_stream_jobs(
         )
         upsert_sink(spark, geo_path, ["window_end"], "batch_seq")(top, batch_id)
 
-    geo_q = (
+    geo_q = start_bounded(
         base.filter(F.col("geo_location").isNotNull())
         .groupBy("w", "geo_location")
         .agg(F.count("*").alias("total"))
         .select(F.col("w.end").alias("window_end"), "geo_location", "total")
         .writeStream.outputMode("append")
-        .foreachBatch(top1_upsert)
-        .option("checkpointLocation", f"{checkpoint_dir}/geo")
-        .trigger(availableNow=True)
-        .start()
+        .foreachBatch(top1_upsert),
+        f"{checkpoint_dir}/geo",
     )
     return [actives_q, geo_q]
 
@@ -156,8 +208,6 @@ def global_features_stream_jobs(
 def synth_geo_from_stream():
     """The enrichment geo expression over the wire columns (matches
     plans.clickstream._enriched's synth_geo mapping for view rows)."""
-    from kafka_flink_streaming_pipeline_spark.functions import synth_geo
-
     doc_id = F.get_json_object("props", "$.k").cast("bigint")
     return F.when(
         F.col("event_type") == "view",
@@ -165,19 +215,17 @@ def synth_geo_from_stream():
     )
 
 
-def stream_stream_attribution(
-    clicks: DataFrame, views: DataFrame, bound: str = "5 minutes"
+def _interval_join(
+    clicks: DataFrame, views: DataFrame, bound: str, how: str
 ) -> DataFrame:
-    """Native stream-stream interval join (Flink interval-join analogue,
-    batch form in operators/interval_join.py): every view by the same
-    user within `bound` after a click. Both sides carry watermarks and
-    the join has an event-time range condition, so Spark bounds the
-    join state to the interval — state evicts as the watermark moves.
-    Inner join emits matches eagerly (no withholding), so a bounded
-    replay yields the complete batch-equal pair set."""
-    # both inputs arrive from kafka_stream/replay_stream with the 5 s
-    # watermark already attached; it follows the renamed attributes
-    # (re-applying would be a disallowed watermark redefinition)
+    """(uuid, click_id, view_id, lag_ms): every view by the same user
+    within `bound` after a click, joined `how` (inner / leftOuter /
+    fullOuter). Both inputs arrive from kafka_stream/replay_stream with
+    the 5 s watermark already attached; it follows the renamed
+    attributes (re-applying would be a disallowed watermark
+    redefinition). The event-time range condition lets Spark bound
+    each side's join state to the interval, evicting as the watermark
+    moves."""
     c = clicks.select(
         F.col("user_id").alias("uuid"),
         F.col("event_id").alias("click_id"),
@@ -188,6 +236,8 @@ def stream_stream_attribution(
         F.col("event_id").alias("view_id"),
         F.col("event_time").alias("view_time"),
     )
+    # a full outer row may have survived from either side
+    uuid = F.coalesce("uuid", "v_uuid") if how == "fullOuter" else F.col("uuid")
     return c.join(
         v,
         F.expr(
@@ -195,99 +245,51 @@ def stream_stream_attribution(
                 AND view_time >= click_time
                 AND view_time <= click_time + INTERVAL {bound}"""
         ),
+        how,
     ).select(
-        "uuid",
+        uuid.alias("uuid"),
         "click_id",
         "view_id",
         ((F.unix_micros("view_time") - F.unix_micros("click_time")) / 1000)
         .cast("long")
         .alias("lag_ms"),
     )
+
+
+def stream_stream_attribution(
+    clicks: DataFrame, views: DataFrame, bound: str = "5 minutes"
+) -> DataFrame:
+    """Native stream-stream interval join (Flink interval-join analogue,
+    batch form in operators/interval_join.py), inner: matches emit
+    eagerly (no withholding), so a bounded replay yields the complete
+    batch-equal pair set."""
+    return _interval_join(clicks, views, bound, "inner")
 
 
 def stream_stream_attribution_outer(
     clicks: DataFrame, views: DataFrame, bound: str = "5 minutes"
 ) -> DataFrame:
-    """LEFT OUTER stream-stream interval join: every click, attributed
-    if a same-user view follows within `bound`, emitted with NULLs if
-    none ever does.
-
-    The outer side is the part the inner join can't show: Spark must
-    WITHHOLD an unmatched click until the watermark proves no matching
-    view can still arrive (wm > click_time + bound), then emit it with
-    a NULL view — Flink's interval join with outer emission. State
-    stays watermark-bounded exactly as in the inner case; the only
-    extra cost is the withheld rows' residence until their horizon
-    passes. Under availableNow replay the final unmatched clicks need
-    the watermark pushed past their horizon (sentinel rows in tests —
-    the same flush rule every bounded replay here follows)."""
-    c = clicks.select(
-        F.col("user_id").alias("uuid"),
-        F.col("event_id").alias("click_id"),
-        F.col("event_time").alias("click_time"),
-    )
-    v = views.select(
-        F.col("user_id").alias("v_uuid"),
-        F.col("event_id").alias("view_id"),
-        F.col("event_time").alias("view_time"),
-    )
-    return c.join(
-        v,
-        F.expr(
-            f"""uuid = v_uuid
-                AND view_time >= click_time
-                AND view_time <= click_time + INTERVAL {bound}"""
-        ),
-        "leftOuter",
-    ).select(
-        "uuid",
-        "click_id",
-        "view_id",
-        ((F.unix_micros("view_time") - F.unix_micros("click_time")) / 1000)
-        .cast("long")
-        .alias("lag_ms"),
-    )
+    """LEFT OUTER interval join: every click, attributed if a same-user
+    view follows within `bound`, emitted with NULLs if none ever does.
+    Spark WITHHOLDS an unmatched click until the watermark proves no
+    matching view can still arrive (wm > click_time + bound) — Flink's
+    interval join with outer emission. Under availableNow replay the
+    final unmatched clicks need the watermark pushed past their horizon
+    (sentinel rows in tests — the flush rule every bounded replay here
+    follows)."""
+    return _interval_join(clicks, views, bound, "leftOuter")
 
 
 def stream_stream_attribution_full(
     clicks: DataFrame, views: DataFrame, bound: str = "5 minutes"
 ) -> DataFrame:
-    """FULL OUTER stream-stream interval join — completes the join-mode
-    family (inner / leftOuter / fullOuter) over the same watermarked
-    interval condition: matched pairs emit eagerly, unmatched CLICKS
-    emit with NULL view once the watermark passes click_time + bound,
-    and unmatched VIEWS emit with NULL click once no click interval can
-    still cover them. Both sides' state stays watermark-bounded because
-    the range condition bounds each side's event time in terms of the
-    other's. The output key is COALESCEd from whichever side survived —
-    the streaming twin of the batch FULL OUTER + both-sides-COALESCE
-    canonicalization (`plans/tpch.py` `_cust_full_outer`)."""
-    c = clicks.select(
-        F.col("user_id").alias("uuid"),
-        F.col("event_id").alias("click_id"),
-        F.col("event_time").alias("click_time"),
-    )
-    v = views.select(
-        F.col("user_id").alias("v_uuid"),
-        F.col("event_id").alias("view_id"),
-        F.col("event_time").alias("view_time"),
-    )
-    return c.join(
-        v,
-        F.expr(
-            f"""uuid = v_uuid
-                AND view_time >= click_time
-                AND view_time <= click_time + INTERVAL {bound}"""
-        ),
-        "fullOuter",
-    ).select(
-        F.coalesce("uuid", "v_uuid").alias("uuid"),
-        "click_id",
-        "view_id",
-        ((F.unix_micros("view_time") - F.unix_micros("click_time")) / 1000)
-        .cast("long")
-        .alias("lag_ms"),
-    )
+    """FULL OUTER interval join: unmatched clicks emit with a NULL view
+    once the watermark passes click_time + bound, unmatched views with a
+    NULL click once no click interval can still cover them. The output
+    key is COALESCEd from whichever side survived — the streaming twin
+    of the batch FULL OUTER + COALESCE canonicalization
+    (`plans/tpch.py` `_cust_full_outer`)."""
+    return _interval_join(clicks, views, bound, "fullOuter")
 
 
 def feature_stream_job(stream: DataFrame, table_path: str, checkpoint: str) -> StreamingQuery:
@@ -296,17 +298,15 @@ def feature_stream_job(stream: DataFrame, table_path: str, checkpoint: str) -> S
     `feat:user:{uuid}:yyyyMMddHHmm`."""
     spark = stream.sparkSession
     feats = user_features_5m(stream)
-    return (
+    return start_bounded(
         feats.withColumn("batch_seq", F.lit(0).cast("long"))
         .writeStream.outputMode("update")
         .foreachBatch(
             lambda df, bid: upsert_sink(
                 spark, table_path, ["uuid", "window_end"], "batch_seq"
             )(df.withColumn("batch_seq", F.lit(bid)), bid)
-        )
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
+        ),
+        checkpoint,
     )
 
 
@@ -327,16 +327,12 @@ def dedup_stream_job(
     source's watermark delay (kafka_stream/replay_stream both assign
     one — redefining it here is disallowed by Spark)."""
     deduped = stream.dropDuplicatesWithinWatermark(["event_id"])
-    return (
+    return _parquet_job(
         deduped.select(
             "event_id", "user_id", "event_type", "event_time", "value", "props"
-        )
-        .writeStream.outputMode("append")
-        .format("parquet")
-        .option("path", table_path)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
+        ),
+        table_path,
+        checkpoint,
     )
 
 
@@ -360,17 +356,13 @@ def hop_active_users_stream_job(
         "event_time",
         F.window("event_time", "10 minutes", "5 minutes").alias("w"),
     )
-    return (
+    return _parquet_job(
         base.dropDuplicates(["uuid", "w"])
         .groupBy("w")
         .agg(F.count("*").alias("active_users"))
-        .select(F.col("w.end").alias("window_end"), "active_users")
-        .writeStream.outputMode("append")
-        .format("parquet")
-        .option("path", table_path)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
+        .select(F.col("w.end").alias("window_end"), "active_users"),
+        table_path,
+        checkpoint,
     )
 
 
@@ -388,8 +380,6 @@ def enrich_stream_job(
     watermark; append mode emits each (window, lang) row exactly once.
     Batch-equivalent plan: operators/datasets.py
     stream_enrich_lang_counts."""
-    from pyspark.sql import functions as F  # noqa: F811 (jobs module style)
-
     enriched = (
         stream.withColumn(
             "document_id", F.get_json_object("props", "$.k").cast("bigint")
@@ -402,14 +392,7 @@ def enrich_stream_job(
         .agg(F.count("*").alias("views"))
         .select(F.col("w.end").alias("window_end"), "lang", "views")
     )
-    return (
-        enriched.writeStream.outputMode("append")
-        .format("parquet")
-        .option("path", table_path)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _parquet_job(enriched, table_path, checkpoint)
 
 
 def fanout_stream_job(
@@ -434,12 +417,6 @@ def fanout_stream_job(
        pattern); counters-in-a-transaction (Delta MERGE +=) is the
        alternative when raw retention is shorter than the rollup's.
     """
-    from kafka_flink_streaming_pipeline_spark.streaming.txn_sink import (
-        read_append_table,
-        txn_append_sink,
-    )
-    from kafka_flink_streaming_pipeline_spark.streaming.upsert import merge_upsert
-
     raw_sink = txn_append_sink(raw_path)
 
     def _sink(batch_df: DataFrame, batch_id: int) -> None:
@@ -469,11 +446,27 @@ def fanout_stream_job(
         finally:
             batch_df.unpersist()
 
-    return (
-        stream.writeStream.foreachBatch(_sink)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
+    return start_bounded(stream.writeStream.foreachBatch(_sink), checkpoint)
+
+
+def _append_job(
+    stream: DataFrame,
+    transform: Callable[[DataFrame], DataFrame],
+    out_path: str,
+    checkpoint: str,
+) -> StreamingQuery:
+    """Bounded foreachBatch run appending `transform(batch)` to the
+    batch-addressed table at `out_path` (`txn_append_sink`: idempotent
+    under redelivery). The shape of the stateless ingest gates: each
+    input row arrives whole, and any index `transform` reads is re-read
+    per batch, so an index-extension job can grow it between triggers
+    (the stream-static contract)."""
+    write_batch = txn_append_sink(out_path)
+    return start_bounded(
+        stream.writeStream.foreachBatch(
+            lambda batch_df, batch_id: write_batch(transform(batch_df), batch_id)
+        ),
+        checkpoint,
     )
 
 
@@ -508,32 +501,19 @@ def ann_probe_stream_job(
     """Streaming vector search: every micro-batch of incoming query
     embeddings is probed against the persisted IVF index
     (`operators/similarity.build_ann_index`) and its top-k neighbor
-    lists appended batch-addressed (idempotent under redelivery) — the
-    embedding-side twin of `dedup_index_stream_job`. Stateless like the
-    text gate: each query arrives whole, and the index is re-read per
-    batch so an external index-extension job can grow it between
-    triggers (the stream-static contract). Each batch's scan touches
-    only the batch's probed cells (partition pruning), so probe cost is
+    lists appended batch-addressed — the embedding-side twin of
+    `dedup_index_stream_job`. Each batch's scan touches only the
+    batch's probed cells (partition pruning), so probe cost is
     batch-sized, never corpus-sized."""
     from kafka_flink_streaming_pipeline_spark.operators.similarity import (
         probe_ann_index,
     )
-    from kafka_flink_streaming_pipeline_spark.streaming.txn_sink import (
-        txn_append_sink,
-    )
 
-    write_batch = txn_append_sink(out_path)
-
-    def _probe(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        topk = probe_ann_index(spark, index_path, batch_df)
-        write_batch(topk, batch_id)
-
-    return (
-        stream.writeStream.foreachBatch(_probe)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
+    return _append_job(
+        stream,
+        lambda batch_df: probe_ann_index(batch_df.sparkSession, index_path, batch_df),
+        out_path,
+        checkpoint,
     )
 
 
@@ -560,40 +540,22 @@ def bloom_gate_stream_job(
 ) -> StreamingQuery:
     """Streaming exact-span contamination gate: every micro-batch of
     incoming documents is span-hashed (the same Catalyst pipeline as
-    the batch `dedup_bloom_gate`, running inside foreachBatch), probed
-    against the persisted Bloom filter (broadcast — 32 KiB), and only
-    bloom-hit spans pay the verify join against the persisted span key
-    set; per-doc verdicts go to a batch-addressed append table,
-    idempotent under redelivery.
-
-    The streaming half of `dedup_bloom_gate` (the oracled batch twin).
-    Stateless across batches — each document arrives whole; the
-    "state" is the index pair itself, re-read per batch so an
-    index-extension job can grow the corpus between triggers (the
-    stream-static contract `dedup_index_stream_job` established)."""
+    the batch `dedup_bloom_gate`, its oracled twin), probed against the
+    persisted Bloom filter (broadcast — 32 KiB), and only bloom-hit
+    spans pay the verify join against the persisted span key set;
+    per-doc verdicts are appended batch-addressed."""
     from kafka_flink_streaming_pipeline_spark.operators.dedup import (
         bloom_probe,
         doc_span_keys,
     )
-    from kafka_flink_streaming_pipeline_spark.streaming.txn_sink import (
-        txn_append_sink,
-    )
 
-    write_batch = txn_append_sink(out_path)
-
-    def _gate(batch_df: DataFrame, batch_id: int) -> None:
+    def _gate(batch_df: DataFrame) -> DataFrame:
         spark = batch_df.sparkSession
         bloom = spark.read.parquet(f"{index_path}/bloom")
         corpus_keys = spark.read.parquet(f"{index_path}/spans")
-        verdicts = bloom_probe(doc_span_keys(batch_df), bloom, corpus_keys)
-        write_batch(verdicts, batch_id)
+        return bloom_probe(doc_span_keys(batch_df), bloom, corpus_keys)
 
-    return (
-        stream.writeStream.foreachBatch(_gate)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _append_job(stream, _gate, out_path, checkpoint)
 
 
 def dedup_index_stream_job(
@@ -603,37 +565,22 @@ def dedup_index_stream_job(
     documents is minhash-signed (the same Catalyst pipeline as the
     batch `dedup_minhash_lsh`, running inside foreachBatch) and probed
     against the persisted corpus index; each doc gets an admission
-    verdict (is_dup, matched_doc, est_jaccard) written to a
-    batch-addressed append table — idempotent under redelivery, exactly
-    like the reference's upsert sinks are for keyed rows.
-
-    This is the streaming half of `dedup_incoming_vs_corpus` (the
-    oracled batch twin). Statewise the job is stateless — each document
-    arrives whole, so no cross-batch streaming state is needed; the
-    "state" is the index table itself, re-read per batch so an external
-    index-extension job can grow it between triggers (the stream-static
-    join contract)."""
+    verdict (is_dup, matched_doc, est_jaccard) appended batch-addressed
+    — idempotent under redelivery, exactly like the reference's upsert
+    sinks are for keyed rows. The streaming half of
+    `dedup_incoming_vs_corpus` (the oracled batch twin)."""
     from kafka_flink_streaming_pipeline_spark.operators.dedup import (
         incoming_flags,
         lsh_bands,
     )
-    from kafka_flink_streaming_pipeline_spark.streaming.txn_sink import (
-        txn_append_sink,
-    )
 
-    write_batch = txn_append_sink(out_path)
-
-    def _gate(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        index = spark.read.parquet(index_path)
-        flags = incoming_flags(index, lsh_bands(batch_df), batch_df)
-        write_batch(flags, batch_id)
-
-    return (
-        stream.writeStream.foreachBatch(_gate)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
+    return _append_job(
+        stream,
+        lambda batch_df: incoming_flags(
+            batch_df.sparkSession.read.parquet(index_path), lsh_bands(batch_df), batch_df
+        ),
+        out_path,
+        checkpoint,
     )
 
 
@@ -675,12 +622,7 @@ def rollup_stream_job(
         facts = spark.read.option("basePath", facts_path).parquet(facts_path)
         update_rollup(spark, facts, rollup_path, dates)
 
-    return (
-        stream.writeStream.foreachBatch(_maintain)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return start_bounded(stream.writeStream.foreachBatch(_maintain), checkpoint)
 
 
 # --- incremental release-manifest maintenance -------------------------------
@@ -709,32 +651,13 @@ def manifest_stream_job(
     from kafka_flink_streaming_pipeline_spark.operators.corpus import (
         manifest_partial,
     )
-    from kafka_flink_streaming_pipeline_spark.streaming.txn_sink import (
-        txn_append_sink,
-    )
 
-    write_batch = txn_append_sink(out_path)
-
-    def _maintain(batch_df: DataFrame, batch_id: int) -> None:
-        write_batch(manifest_partial(batch_df), batch_id)
-
-    return (
-        stream.writeStream.foreachBatch(_maintain)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _append_job(stream, manifest_partial, out_path, checkpoint)
 
 
 def read_manifest(spark, out_path: str) -> DataFrame:
     """Combine the batch-addressed partial manifests into the current
     manifest — sums for the additive columns, xor for the digest."""
-    from pyspark.sql import functions as F
-
-    from kafka_flink_streaming_pipeline_spark.streaming.txn_sink import (
-        read_append_table,
-    )
-
     return (
         read_append_table(spark, out_path)
         .groupBy("source", "split")
@@ -778,7 +701,6 @@ def erasure_stream_job(
 
     Deleting an already-deleted id is a no-op, so redelivered batches
     converge — the same idempotency contract as the upsert sink."""
-    import shutil
 
     def _erase(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
@@ -817,12 +739,7 @@ def erasure_stream_job(
             "overwrite"
         ).parquet(f"{ledger_path}/batch={batch_id}")
 
-    return (
-        forget_stream.writeStream.foreachBatch(_erase)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return start_bounded(forget_stream.writeStream.foreachBatch(_erase), checkpoint)
 
 
 # --- streaming vector ingest into the persisted IVF index ------------------
@@ -833,10 +750,11 @@ def ann_ingest_stream_job(
 ) -> StreamingQuery:
     """Streaming INDEX MAINTENANCE for the on-disk IVF inverted file —
     the ingest-side twin of `ann_probe_stream_job` (which only reads):
-    each micro-batch of new vectors is assigned to its coarse cell
-    against the centroids READ FROM THE INDEX ITSELF (broadcast — the
-    index stays self-contained, same device as the probe), normed, and
-    written to a batch-addressed subtree::
+    each micro-batch of new vectors is normed and assigned to its
+    coarse cell against the centroids READ FROM THE INDEX ITSELF
+    (`_ivf_assign(..., seeds=index)` — the index stays self-contained,
+    same device as the probe), then written to a batch-addressed
+    subtree::
 
         {index}/batch=<id>/centroid_id=<c>/...
 
@@ -848,56 +766,16 @@ def ann_ingest_stream_job(
     in their cells without touching existing files; a compaction pass
     (`compact_partitions`) folds small batch files when cells fragment."""
     from kafka_flink_streaming_pipeline_spark.operators.similarity import (
-        _IVF_K,
-        _N_QUERIES,
-        _dot,
-        _pair_cosine,
+        _ivf_assign,
+        _vectors,
     )
-    from pyspark.sql import Window
 
     def _ingest(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
         idx = spark.read.option("basePath", index_path).parquet(index_path)
-        cents = F.broadcast(
-            idx.filter(
-                (F.col("vec_id") >= _N_QUERIES)
-                & (F.col("vec_id") < _N_QUERIES + _IVF_K)
-            ).select(
-                F.col("vec_id").alias("cent_id"),
-                F.col("embedding").alias("cent"),
-                F.col("nrm").alias("cent_nrm"),
-            )
-        )
-        vn = batch_df.select(
-            "vec_id",
-            "embedding",
-            F.sqrt(_dot(F.col("embedding"), F.col("embedding"))).alias("nrm"),
-        )
-        w = Window.partitionBy("vec_id").orderBy(F.desc("ccos"), F.asc("cent_id"))
-        assigned = (
-            vn.crossJoin(cents)
-            .select(
-                "vec_id",
-                "embedding",
-                "nrm",
-                "cent_id",
-                _pair_cosine(
-                    F.col("embedding"), F.col("cent"), F.col("nrm"), F.col("cent_nrm")
-                ).alias("ccos"),
-            )
-            .withColumn("rn", F.row_number().over(w))
-            .filter(F.col("rn") == 1)
-            .select(
-                "vec_id", "embedding", "nrm", F.col("cent_id").alias("centroid_id")
-            )
-        )
-        assigned.write.mode("overwrite").partitionBy("centroid_id").parquet(
-            f"{index_path}/batch={batch_id}"
-        )
+        v = _vectors(batch_df).localCheckpoint()  # one read of the batch, used twice
+        _ivf_assign(v, seeds=idx).join(v, "vec_id").write.mode(
+            "overwrite"
+        ).partitionBy("centroid_id").parquet(f"{index_path}/batch={batch_id}")
 
-    return (
-        vector_stream.writeStream.foreachBatch(_ingest)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return start_bounded(vector_stream.writeStream.foreachBatch(_ingest), checkpoint)

@@ -35,6 +35,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from kafka_flink_streaming_pipeline_spark.streaming.jobs import _parquet_job
+
 #: Closed-session row emitted by the operator.
 SESSION_SCHEMA = T.StructType(
     [
@@ -172,12 +174,4 @@ def stateful_sessions(stream: DataFrame, gap: str = "30 minutes") -> DataFrame:
 
 def stateful_session_job(stream: DataFrame, out_path: str, checkpoint: str):
     """Run the sessionizer over a (replay) stream into a parquet table."""
-    return (
-        stateful_sessions(stream)
-        .writeStream.outputMode("append")
-        .format("parquet")
-        .option("path", out_path)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _parquet_job(stateful_sessions(stream), out_path, checkpoint)

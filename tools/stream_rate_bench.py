@@ -1,6 +1,6 @@
-"""Streaming sustained-throughput probe (r6 verdict ask #6).
+"""Streaming sustained-throughput probe.
 
-The six writeStream-produced driver artifacts are CORRECTNESS
+The nine writeStream-produced registry entries are CORRECTNESS
 witnesses at 4 micro-batches; this tool measures the heaviest
 foreachBatch jobs as a RATE: documents stream through
 `bloom_gate_stream_job` (exact-span contamination gate: span-hash →
@@ -36,10 +36,12 @@ def main() -> int:
 
     from kafka_flink_streaming_pipeline_spark import get_spark
     from kafka_flink_streaming_pipeline_spark.sources.batch import load_table
+    from kafka_flink_streaming_pipeline_spark.sources.streaming import file_batches
     from kafka_flink_streaming_pipeline_spark.streaming.jobs import (
         bloom_gate_stream_job,
         build_bloom_index,
         dedup_index_stream_job,
+        drain,
     )
     from kafka_flink_streaming_pipeline_spark.streaming.monitoring import (
         RateListener,
@@ -56,10 +58,7 @@ def main() -> int:
         spark.streams.addListener(listener)
         work = tempfile.mkdtemp(prefix=f"rate_{job_name}_")
         try:
-            q = start_job(work)
-            if not q.awaitTermination(600):
-                q.stop()
-                raise TimeoutError(f"{job_name} did not drain in 600s")
+            drain(start_job(work), job_name)
             # progress events are delivered asynchronously; drain them
             import time as _t
 
@@ -85,13 +84,11 @@ def main() -> int:
     def start_bloom(work: str):
         index_path = os.path.join(work, "index")
         build_bloom_index(docs.filter(F.col("doc_id") % 3 != 0), index_path)
-        incoming = docs.filter(F.col("doc_id") % 3 == 0)
-        in_dir = os.path.join(work, "incoming")
-        incoming.repartition(n_batches).write.parquet(in_dir)
-        stream = (
-            spark.readStream.schema(incoming.schema)
-            .option("maxFilesPerTrigger", "1")
-            .parquet(in_dir)
+        stream = file_batches(
+            spark,
+            docs.filter(F.col("doc_id") % 3 == 0),
+            os.path.join(work, "incoming"),
+            n_batches,
         )
         return bloom_gate_stream_job(
             stream,
@@ -105,13 +102,11 @@ def main() -> int:
 
         index_path = os.path.join(work, "index")
         lsh_bands(docs.filter(F.col("doc_id") % 3 != 0)).write.parquet(index_path)
-        incoming = docs.filter(F.col("doc_id") % 3 == 0)
-        in_dir = os.path.join(work, "incoming")
-        incoming.repartition(n_batches).write.parquet(in_dir)
-        stream = (
-            spark.readStream.schema(incoming.schema)
-            .option("maxFilesPerTrigger", "1")
-            .parquet(in_dir)
+        stream = file_batches(
+            spark,
+            docs.filter(F.col("doc_id") % 3 == 0),
+            os.path.join(work, "incoming"),
+            n_batches,
         )
         return dedup_index_stream_job(
             stream,
@@ -138,13 +133,11 @@ def main() -> int:
             emb.filter((F.col("vec_id") % 3 != 0) | (F.col("vec_id") < 64)),
             os.path.join(index_path, "batch=-1"),
         )
-        incoming = emb.filter((F.col("vec_id") % 3 == 0) & (F.col("vec_id") >= 64))
-        in_dir = os.path.join(work, "incoming")
-        incoming.repartition(n_batches).write.parquet(in_dir)
-        stream = (
-            spark.readStream.schema(incoming.schema)
-            .option("maxFilesPerTrigger", "1")
-            .parquet(in_dir)
+        stream = file_batches(
+            spark,
+            emb.filter((F.col("vec_id") % 3 == 0) & (F.col("vec_id") >= 64)),
+            os.path.join(work, "incoming"),
+            n_batches,
         )
         return ann_ingest_stream_job(
             stream, index_path, os.path.join(work, "ckpt")
@@ -196,7 +189,7 @@ def main() -> int:
         print(json.dumps(row), flush=True)
 
     def start_kafka_wire(work: str):
-        # r9: the Kafka-wire consume path as a RATE — producer frames
+        # the Kafka-wire consume path as a RATE — producer frames
         # through the kafka_replay source (offset-planned delivery,
         # maxOffsetsPerTrigger-capped micro-batches) and the S1 decode
         # stage into a parquet sink; compare against the reference
@@ -249,7 +242,7 @@ def main() -> int:
     jobs = [
         ("bloom_gate", start_bloom),
         ("dedup_gate", start_dedup),
-        # r8 (r7 verdict stretch ask #8): sustained-rate + per-trigger
+        # sustained-rate + per-trigger
         # index-maintenance latency for the streaming IVF ingest
         ("ann_ingest", start_ann_ingest),
     ]
