@@ -3,11 +3,25 @@
 Flink infers upsert mode from a PRIMARY KEY on the sink table
 (`page_views_postgres_sink.sql:47`: PK ⇒ upsert, no PK ⇒ append +
 duplicate-key errors). Spark has no such inference, so we implement
-MERGE semantics in `foreachBatch`: each micro-batch is deduplicated on
-the key (latest wins) and merged into a keyed parquet table.
+MERGE semantics in `foreachBatch`: each micro-batch is merged into a
+keyed parquet table, latest row per key wins.
 
-Idempotency: re-delivering a batch leaves the table unchanged (new rows
-win on identical keys), which is what makes checkpoint-replay
+One pass per call: the table's rows (tagged 0) and the micro-batch's
+rows (tagged 1) are unioned by name and `dedupe_latest` keeps one row
+per key, ordered by tag, then `order_col`, both descending. So a batch
+row always beats a table row on its key, and within a batch the highest
+`order_col` wins. The batch is referenced once, so a streaming source
+(and any stateful operator above it) runs once per trigger, and the
+merge is one exchange and one write — no driver collects.
+
+Swap: the merge is written to `<table>.next`, then `<table>` is renamed
+to `<table>.old`, `.next` to `<table>`, and `.old` is removed. A call
+that finds `.old` finishes the swap a crash interrupted: it restores
+`.old` when `<table>` is missing and removes it otherwise, so the table
+is never lost and a redelivered batch converges.
+
+Idempotency: re-delivering a batch leaves the table unchanged (batch
+rows win on identical keys), which is what makes checkpoint-replay
 effectively-once — the same property the reference leans on with
 PK-upserts into Postgres (README.md:43-47).
 
@@ -15,27 +29,38 @@ Scale notes: the local implementation rewrites the table (fine for
 feature tables ≤ memory; the test contract). At 100 TB the same
 `merge_upsert` call sites swap in Delta `MERGE INTO` or dynamic
 partition overwrite on the key's partition column — the surrounding
-job code (sinks receive (batch_df, batch_id)) is unchanged. We keep the
-merge relational: anti-join old-vs-new on the key, union — no driver
-collects.
+job code (sinks receive (batch_df, batch_id)) is unchanged.
 """
 
 from __future__ import annotations
 
 import os
+import shutil
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+_FROM_BATCH = "__from_batch"
 
-def dedupe_latest(df: DataFrame, keys: list[str], order_col: str) -> DataFrame:
-    """Keep one row per key — the one with the highest `order_col`
-    (ties broken arbitrarily-but-deterministically by the remaining
-    columns' row_number order)."""
-    w = Window.partitionBy(*keys).orderBy(F.desc(order_col))
+
+def dedupe_latest(df: DataFrame, keys: list[str], *order_cols: str) -> DataFrame:
+    """Keep one row per key — the one highest on `order_cols`, compared
+    in turn (ties broken arbitrarily-but-deterministically by the
+    remaining columns' row_number order)."""
+    w = Window.partitionBy(*keys).orderBy(*(F.desc(c) for c in order_cols))
     return (
         df.withColumn("__rn", F.row_number().over(w)).filter(F.col("__rn") == 1).drop("__rn")
     )
+
+
+def _finish_swap(table: str, old: str) -> None:
+    """Complete a swap that died part-way: restore `old` if the table
+    was renamed away, else drop the stale copy."""
+    if os.path.exists(old):
+        if os.path.exists(table):
+            shutil.rmtree(old)
+        else:
+            os.replace(old, table)
 
 
 def merge_upsert(
@@ -52,18 +77,21 @@ def merge_upsert(
     (events_postgres_sink.sql:37-57) and to `MERGE INTO t USING b ON
     keys WHEN MATCHED THEN UPDATE SET * WHEN NOT MATCHED THEN INSERT *`.
     """
-    fresh = dedupe_latest(batch, keys, order_col)
-    if os.path.exists(table_path):
-        current = spark.read.parquet(table_path)
-        kept = current.join(fresh.select(*keys).distinct(), keys, "left_anti")
-        merged = kept.unionByName(fresh)
-    else:
-        merged = fresh
-    # materialize before overwriting the path we just read from
-    tmp = table_path.rstrip("/") + ".tmp"
-    merged.write.mode("overwrite").parquet(tmp)
-    final = spark.read.parquet(tmp)
-    final.write.mode("overwrite").parquet(table_path)
+    table = table_path.rstrip("/")
+    staged, old = table + ".next", table + ".old"
+    _finish_swap(table, old)
+    existed = os.path.exists(table)
+    rows = batch.withColumn(_FROM_BATCH, F.lit(1))
+    if existed:
+        current = spark.read.parquet(table).withColumn(_FROM_BATCH, F.lit(0))
+        rows = current.unionByName(rows)
+    merged = dedupe_latest(rows, keys, _FROM_BATCH, order_col).drop(_FROM_BATCH)
+    merged.write.mode("overwrite").parquet(staged)
+    if existed:
+        os.replace(table, old)
+    os.replace(staged, table)
+    if existed:
+        shutil.rmtree(old)
 
 
 def upsert_sink(spark: SparkSession, table_path: str, keys: list[str], order_col: str):

@@ -293,9 +293,9 @@ def test_ingest_rate_exceeds_reference_baseline(spark, tmp_path):
     """BASELINE.md ingest target: the reference's producers sustained
     ~536 msg/s aggregate (README.md:84). The FP1 ingest path (replay →
     watermark → projection → keyed upsert) must beat that end-to-end,
-    including all micro-batch and MERGE overhead. Measured ~2000 msg/s
-    on local[8] at sf0.01; the 536 threshold leaves margin for a loaded
-    machine."""
+    including all micro-batch and MERGE overhead; the 536 threshold
+    leaves margin for a loaded machine. The upsert must reference each
+    micro-batch once, so the progress rows sum to the event count."""
     import time
 
     from kafka_flink_streaming_pipeline_spark.sources.batch import load_table as lt
@@ -311,6 +311,8 @@ def test_ingest_rate_exceeds_reference_baseline(spark, tmp_path):
     q.awaitTermination(300)
     rate = n / (time.time() - t0)
     assert rate > 536, f"ingest rate {rate:.0f} msg/s below reference baseline"
+    per_batch = [p["numInputRows"] for p in q.recentProgress]
+    assert sum(per_batch) == n, f"micro-batches read {per_batch} rows for {n} events"
 
 
 def test_stateful_sessionizer_matches_batch_lag(spark, tmp_path):
