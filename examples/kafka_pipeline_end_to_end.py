@@ -111,7 +111,8 @@ def main() -> None:
         # where the engine captures latestOffset once (see
         # sources/kafka_replay.py docstring) — rate-capped draining
         # under a processing-time trigger is demonstrated by
-        # tools/stream_rate_bench.py and the source's tests
+        # tests/test_kafka_replay_source.py, and perfbench stream_ingest
+        # measures the sustained rate
         stream = kafka_replay_stream(
             spark, log, payload_ddl, group_id="pipeline"
         ).drop("kafka_key")

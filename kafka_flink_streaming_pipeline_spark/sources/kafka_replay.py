@@ -33,8 +33,8 @@ admission-control handshake), so a cap makes an availableNow run
 drain at most ``cap`` records before terminating — the real Kafka
 source instead runs MULTIPLE capped batches to the captured end. Use
 a processing-time trigger for rate-capped draining (what
-tests/test_kafka_replay_source.py and tools/stream_rate_bench.py do),
-or leave the cap unset under availableNow.
+tests/test_kafka_replay_source.py does; perfbench `stream_ingest`
+measures the sustained rate), or leave the cap unset under availableNow.
 
 `KafkaReplaySource` implements all of the above over a partitioned parquet
 "topic log" directory written by `produce_topic_log` (key-hash

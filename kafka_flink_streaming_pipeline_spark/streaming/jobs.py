@@ -36,6 +36,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming import DataStreamWriter, StreamingQuery
 
 from kafka_flink_streaming_pipeline_spark.functions import redis_feature_key, synth_geo
+from kafka_flink_streaming_pipeline_spark.streaming.monitoring import late_rows_dropped
 from kafka_flink_streaming_pipeline_spark.streaming.txn_sink import (
     read_append_table,
     txn_append_sink,
@@ -63,20 +64,15 @@ def drain(q: StreamingQuery, what: str) -> None:
     Still running after `DRAIN_TIMEOUT_S`: stop it and raise
     TimeoutError — its sink is incomplete and must not be read. Any
     stateful operator that dropped rows behind the watermark
-    (`stateOperators[*].numRowsDroppedByWatermark` over the query's
-    progress) raises too: late data fails here, not later as missing
-    rows. A failed query re-raises its own error."""
+    (`late_rows_dropped`) raises too: late data fails here, not later
+    as missing rows. A failed query re-raises its own error."""
     if not q.awaitTermination(DRAIN_TIMEOUT_S):
         q.stop()
         raise TimeoutError(
             f"{what} did not finish within {DRAIN_TIMEOUT_S}s; its sink is "
             "incomplete — not reading it"
         )
-    dropped = sum(
-        op["numRowsDroppedByWatermark"]
-        for p in q.recentProgress
-        for op in p["stateOperators"]
-    )
+    dropped = late_rows_dropped(q)
     if dropped:
         raise RuntimeError(f"{what}: {dropped} rows dropped behind the watermark")
 

@@ -15,7 +15,7 @@ trigger cadence; custom business metrics ride `df.observe(...)` and
 arrive in `progress.observedMetrics` — computed ON the executors as an
 aggregate piggybacked on the running query, never a second scan.
 
-Two pieces:
+Three pieces:
 - `RateListener` — a `StreamingQueryListener` that accumulates per-batch
   progress (rows, rates, observed metrics) in memory; `throughput()`
   gives the job-lifetime rate, the per-batch list is the scrape surface
@@ -24,6 +24,8 @@ Two pieces:
   (row count, distinct-key-bearing rows, max event_time) to any
   streaming or batch DataFrame under the well-known name
   ``kfsp_ingest``. For batch, pair with `pyspark.sql.Observation`.
+- `late_rows_dropped(*queries)` — rows the queries' stateful operators
+  dropped behind the watermark, read from their progress.
 
 At scale this is the operationally correct design: metrics are
 aggregates computed inside the job's own stages (zero extra scans, no
@@ -36,7 +38,7 @@ from typing import Any
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.streaming import StreamingQueryListener
+from pyspark.sql.streaming import StreamingQuery, StreamingQueryListener
 
 OBSERVATION_NAME = "kfsp_ingest"
 
@@ -50,6 +52,18 @@ def observe_ingest(df: DataFrame, time_col: str = "event_time") -> DataFrame:
         OBSERVATION_NAME,
         F.count(F.lit(1)).alias("rows"),
         F.max(F.col(time_col)).alias("max_event_time"),
+    )
+
+
+def late_rows_dropped(*queries: StreamingQuery) -> int:
+    """Rows dropped behind the watermark by the queries' stateful
+    operators: `stateOperators[*].numRowsDroppedByWatermark`, summed
+    over every progress update the queries still hold."""
+    return sum(
+        op["numRowsDroppedByWatermark"]
+        for q in queries
+        for p in q.recentProgress
+        for op in p["stateOperators"]
     )
 
 

@@ -1,12 +1,6 @@
-"""Bench-harness measurement-policy tests (no Spark needed).
-
-The r9 verdict found the mover re-measure policy self-defeating: with
-SPARK_GRAFT_BENCH_PREV unset it compared against the lexicographically
-LAST BENCH_DETAIL_r*.json — during an rN session that is an rN-family
-file (self-comparison, drift ~1x) or an other-sf variant (prev={}),
-so the min-of-3 policy could never fire against the previous round.
-These tests pin the fixed selection rule plus the refusal of skipped
-shared artifacts and the exact-anchor auto-skip set.
+"""Bench-harness measurement-policy tests: the materialization probe,
+the refusal of skipped shared artifacts, the exact-anchor auto-skip
+set, the canary verdicts and the emitted JSON documents.
 """
 
 from __future__ import annotations
@@ -23,40 +17,22 @@ sys.path.insert(0, str(REPO))
 import bench
 
 
-def test_prev_snapshot_is_prior_round_same_sf(tmp_path, monkeypatch):
-    # build a fake repo root with mixed snapshots and point bench at it
-    def snap(name: str, sf: float) -> None:
-        (tmp_path / name).write_text(json.dumps({"sf": sf, "queries": {}}))
+def test_materialize_raises_on_execution_failure(spark):
+    """Only an analysis-time rejection of the hash probe (a VARIANT
+    column) falls back to count(). A column that fails while executing
+    must fail the entry: count() could prune that column and time the
+    broken entry as if it worked."""
+    from pyspark.sql import functions as F
 
-    snap("BENCH_DETAIL_r8.json", 0.1)
-    snap("BENCH_DETAIL_r9.json", 0.1)
-    snap("BENCH_DETAIL_r9_sf10.json", 10.0)
-    snap("BENCH_DETAIL_r9_honest.json", 0.1)
-    snap("BENCH_DETAIL_r9_cold.json", 0.1)
-    snap("BENCH_DETAIL_r10.json", 0.1)  # same-round: must never be picked
-    (tmp_path / "CORRECTNESS_r09.json").write_text("{}")
-    monkeypatch.setattr(bench, "__file__", str(tmp_path / "bench.py"))
-
-    # current round = 10 (newest CORRECTNESS is r09): r10 excluded,
-    # plain r9 outranks its _honest variant, _cold excluded, sf matched
-    assert bench._current_round() == 10
-    assert Path(bench._prev_snapshot(0.1)).name == "BENCH_DETAIL_r9.json"
-    assert Path(bench._prev_snapshot(10.0)).name == "BENCH_DETAIL_r9_sf10.json"
-    assert bench._prev_snapshot(1.0) == ""  # no sf1 snapshot at all
-
-
-def test_prev_snapshot_never_self_round(tmp_path, monkeypatch):
-    (tmp_path / "BENCH_DETAIL_r10.json").write_text(
-        json.dumps({"sf": 0.1, "queries": {}})
+    broken = spark.range(3).withColumn(
+        "bad", F.expr("if(id > 1, raise_error('boom'), id)")
     )
-    (tmp_path / "CORRECTNESS_r09.json").write_text("{}")
-    monkeypatch.setattr(bench, "__file__", str(tmp_path / "bench.py"))
-    assert bench._prev_snapshot(0.1) == ""
-
-
-def test_round_env_override(monkeypatch):
-    monkeypatch.setenv("SPARK_GRAFT_ROUND", "7")
-    assert bench._current_round() == 7
+    assert broken.count() == 3  # the pruned count never evaluates `bad`
+    with pytest.raises(Exception, match="boom"):
+        bench._materialize(broken)
+    assert bench._materialize(spark.range(3)) == 3
+    variant = spark.range(2).selectExpr("parse_json(cast(id AS string)) AS v")
+    assert bench._materialize(variant) == 2
 
 
 def test_prebuild_skip_fail_fast(tmp_path, monkeypatch):

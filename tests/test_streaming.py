@@ -18,6 +18,7 @@ from kafka_flink_streaming_pipeline_spark.streaming.jobs import (
     feature_stream_job,
     raw_sink_job,
 )
+from kafka_flink_streaming_pipeline_spark.streaming.monitoring import late_rows_dropped
 
 from tests.conftest import SF_CORRECT, SF_SMOKE
 
@@ -25,14 +26,8 @@ from tests.conftest import SF_CORRECT, SF_SMOKE
 def assert_no_watermark_drops(*queries) -> None:
     """Fail on late data directly: no stateful operator of these
     finished queries may have dropped a row behind the watermark
-    (`stateOperators[*].numRowsDroppedByWatermark`, summed over every
-    progress update), rather than surfacing later as missing rows."""
-    dropped = sum(
-        op["numRowsDroppedByWatermark"]
-        for q in queries
-        for p in q.recentProgress
-        for op in p["stateOperators"]
-    )
+    (`late_rows_dropped`), rather than surfacing later as missing rows."""
+    dropped = late_rows_dropped(*queries)
     assert dropped == 0, f"{dropped} rows dropped behind the watermark"
 
 
