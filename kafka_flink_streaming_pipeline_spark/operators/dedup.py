@@ -1,15 +1,19 @@
 """Deduplication operators over the `documents` table.
 
-The five standard near-dup strategies for large-scale training-data
-curation, each expressed as a shuffle-friendly relational plan (no
-pairwise O(n^2) arrays on the driver, no Python in the row path):
-
-- exact         : hash-groupBy on the content fingerprint.
-- word jaccard  : inverted-index self-join on distinct words.
-- n-gram jaccard: same, over 3-word shingles (more discriminative).
-- MinHash + LSH : banded minhash signatures; candidates join on band
-                  key — the O(n) scale path for 100 TB corpora.
-- SimHash       : per-hex-position majority vote over word hashes.
+The near-dup PAIR family is one candidate filter then one exact refine
+(or estimate), each step written once and composed by every pair entry:
+token postings (`_doc_words`, `_doc_shingles`, `_shingles_from`) →
+candidates, from the inverted-index token join (`_common_counts`,
+prefix-filtered in `_jaccard_pairs_prefix`) or banded MinHash-LSH
+(`lsh_bands` → `_band_est`: band-collision join + estimated jaccard;
+`lsh_pairs` self-joins a corpus, `incoming_flags` probes a batch against
+a corpus index) → exact verify `_verified_counts` (`array_intersect` of
+shingle sets) or the estimate `_est_common`, sized by `_doc_counts` +
+`_sized` → cut, `_jaccard_cut` or both containment directions
+`_containment_dirs`. Beside it: exact fingerprint dedup, SimHash,
+blocked fuzzy matching, span-level substring dedup (`span_*`,
+`_scrub_*`), the LSH calibration and b-bit reports, and the
+Bloom-filter span gate.
 
 Algorithms are the standard public ones: MinHash resemblance sketches
 (Broder, "On the resemblance and containment of documents", 1997) with
@@ -128,11 +132,23 @@ _DOC_SHINGLES_SQL = f"""
 """
 
 
+def _doc_counts(tokens: DataFrame) -> DataFrame:
+    """(doc_id, c): the size of each doc's token set."""
+    return tokens.groupBy("doc_id").agg(F.count(F.lit(1)).alias("c"))
+
+
+def _sized(pairs: DataFrame, per_doc: DataFrame, col: str = "c") -> DataFrame:
+    """Attach a per-doc (doc_id, `col`) value to both sides of (d1, d2,
+    ...) pairs as `col`1, `col`2 — by default the `_doc_counts` c1, c2."""
+    return pairs.join(
+        per_doc.select(F.col("doc_id").alias("d1"), F.col(col).alias(col + "1")), "d1"
+    ).join(per_doc.select(F.col("doc_id").alias("d2"), F.col(col).alias(col + "2")), "d2")
+
+
 def _common_counts(tokens: DataFrame, token_col: str) -> DataFrame:
     """Inverted-index common-count join shared by the jaccard and
     containment operators: (d1, d2, common, c1, c2) per unordered
     pair (d1 < d2) with any shared token."""
-    cnt = tokens.groupBy("doc_id").agg(F.count("*").alias("c"))
     a = tokens.select(F.col("doc_id").alias("d1"), F.col(token_col).alias("t"))
     b = tokens.select(F.col("doc_id").alias("d2"), F.col(token_col).alias("t"))
     common = (
@@ -140,23 +156,26 @@ def _common_counts(tokens: DataFrame, token_col: str) -> DataFrame:
         .groupBy("d1", "d2")
         .agg(F.count("*").alias("common"))
     )
-    c1 = cnt.select(F.col("doc_id").alias("d1"), F.col("c").alias("c1"))
-    c2 = cnt.select(F.col("doc_id").alias("d2"), F.col("c").alias("c2"))
-    return common.join(c1, "d1").join(c2, "d2")
+    return _sized(common, _doc_counts(tokens))
+
+
+def _jaccard_cut(counts: DataFrame, threshold: float) -> DataFrame:
+    """(d1, d2, common, c1, c2) → (d1, d2, jaccard) with jaccard ≥
+    `threshold`, |A∪B| = |A|+|B|-common. No trailing global sort: pair
+    output is corpus-sized at scale and the oracle compare is
+    order-insensitive."""
+    jac = det_round(
+        F.col("common").cast("double") / (F.col("c1") + F.col("c2") - F.col("common")), 6
+    )
+    return counts.select("d1", "d2", jac.alias("jaccard")).filter(
+        F.col("jaccard") >= threshold
+    )
 
 
 def _jaccard_pairs(tokens: DataFrame, token_col: str, threshold: float) -> DataFrame:
     """Inverted-index exact jaccard: join token postings, count common
-    tokens per pair, |A∪B| = |A|+|B|-common."""
-    jac = det_round(
-        F.col("common").cast("double") / (F.col("c1") + F.col("c2") - F.col("common")), 6
-    )
-    return (
-        _common_counts(tokens, token_col)
-        .select("d1", "d2", jac.alias("jaccard"))
-        .filter(F.col("jaccard") >= threshold)
-    )  # no trailing global sort: pair output is corpus-sized at scale
-    #    and the oracle compare is order-insensitive
+    tokens per pair, cut at `threshold`."""
+    return _jaccard_cut(_common_counts(tokens, token_col), threshold)
 
 
 def _jaccard_oracle(postings_sql: str, token_col: str, threshold: float) -> str:
@@ -199,7 +218,7 @@ def _jaccard_pairs_prefix(
     Output is identical to `_jaccard_pairs` (asserted by
     `test_prefix_jaccard_equals_naive`), so the same DuckDB oracle
     verifies both."""
-    cnt = tokens.groupBy("doc_id").agg(F.count("*").alias("c"))
+    cnt = _doc_counts(tokens)
     dfreq = tokens.groupBy(token_col).agg(F.count("*").alias("df"))
     w = Window.partitionBy("doc_id").orderBy("df", token_col)
     ranked = (
@@ -244,17 +263,7 @@ def _jaccard_pairs_prefix(
         .groupBy("d1", "d2")
         .agg(F.count("*").alias("common"))
     )
-    c1 = cnt.select(F.col("doc_id").alias("d1"), F.col("c").alias("c1"))
-    c2 = cnt.select(F.col("doc_id").alias("d2"), F.col("c").alias("c2"))
-    jac = det_round(
-        F.col("common").cast("double") / (F.col("c1") + F.col("c2") - F.col("common")), 6
-    )
-    return (
-        common.join(c1, "d1")
-        .join(c2, "d2")
-        .select("d1", "d2", jac.alias("jaccard"))
-        .filter(F.col("jaccard") >= threshold)
-    )  # no trailing global sort: pair output is corpus-sized at scale
+    return _jaccard_cut(_sized(common, cnt), threshold)
 
 
 # --- exact dedup ----------------------------------------------------------
@@ -330,7 +339,8 @@ def exact_ngram_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --- MinHash + LSH --------------------------------------------------------
 
 _N_PERM = 12
-_BAND_SIZE = 4  # -> 3 bands
+_BAND_SIZE = 4
+_N_BANDS = _N_PERM // _BAND_SIZE
 
 
 def _minhash_sigs_columnar(shingles: DataFrame) -> DataFrame:
@@ -358,6 +368,56 @@ def _minhash_sigs_columnar(shingles: DataFrame) -> DataFrame:
     )
 
 
+def lsh_bands(docs: DataFrame) -> DataFrame:
+    """(doc_id, sig ARRAY, band, band_key) for any (doc_id, text) frame:
+    the LSH index rows `lsh_pairs` self-joins and the streaming gate
+    persists and probes (`incoming_flags`). Band key b = concat of the
+    signature values whose perm % _N_BANDS == b (same grouping as the
+    oracle's perm % 3 with ORDER BY perm). The carried signature is
+    UNHEXED to array<binary(8)>: the minima are 16 hex chars = 64 bits,
+    the estimate only needs element EQUALITY, and halving the per-row
+    payload halves the candidate join's shuffle (what spills at high
+    duplication density — PERF.md round-2 scaling notes) and the
+    persisted index width."""
+    sigs = _minhash_sigs_columnar(_shingles_from(docs, distinct=False))
+    sig_arr = F.array(*[F.unhex(F.col(f"h{p}")) for p in range(_N_PERM)]).alias("sig")
+    band_structs = [
+        F.struct(
+            F.lit(b).alias("band"),
+            F.concat_ws(
+                ",", *[F.col(f"h{p}") for p in range(_N_PERM) if p % _N_BANDS == b]
+            ).alias("band_key"),
+        )
+        for b in range(_N_BANDS)
+    ]
+    return sigs.select(
+        "doc_id", sig_arr, F.explode(F.array(*band_structs)).alias("bk")
+    ).select("doc_id", "sig", "bk.band", "bk.band_key")
+
+
+def _band_est(a: DataFrame, b: DataFrame) -> DataFrame:
+    """Band-collision join of two `lsh_bands` frames → (d1, d2,
+    est_jaccard), d1 from `a` and d2 from `b`, one row per colliding
+    pair; est_jaccard is the share of the `_N_PERM` minima that agree,
+    det-rounded to 6 dp. The signature ARRAY rides along into the join,
+    so the estimate is computed on the joined rows — no second and
+    third join back to a signature table (the naive 3-use plan
+    recomputed the whole md5 pipeline per use)."""
+    l = a.select(F.col("doc_id").alias("d1"), F.col("sig").alias("sig1"), "band", "band_key")
+    r = b.select(F.col("doc_id").alias("d2"), F.col("sig").alias("sig2"), "band", "band_key")
+    matches = F.size(F.filter(F.zip_with("sig1", "sig2", lambda x, y: x == y), lambda m: m))
+    return (
+        l.join(r, ["band", "band_key"])
+        .select("d1", "d2", "sig1", "sig2")
+        .distinct()  # sig arrays are functions of the doc ids — safe in the key
+        .select(
+            "d1",
+            "d2",
+            det_round(matches.cast("double") / _N_PERM, 6).alias("est_jaccard"),
+        )
+    )  # unsorted candidate pairs
+
+
 #: serialized width of one candidate row in the band self-join shuffle:
 #: two binary(8)x12 signature arrays + two doc ids + row overhead
 _CAND_ROW_BYTES = 300
@@ -365,7 +425,7 @@ _CAND_ROW_BYTES = 300
 _CAND_PARTITION_BYTES = 64 << 20
 
 
-def _band_join_partitions(bands: DataFrame, lo: int) -> int:
+def _band_join_partitions(bands: DataFrame) -> int:
     """Derive the band self-join's shuffle width from the band-bucket
     histogram instead of hand-tuning `spark.sql.shuffle.partitions`.
 
@@ -385,73 +445,35 @@ def _band_join_partitions(bands: DataFrame, lo: int) -> int:
         F.sum(F.col("n").cast("double") * F.col("n")).alias("pairs")
     ).collect()[0][0] or 0
     need = (est * _CAND_ROW_BYTES + _CAND_PARTITION_BYTES - 1) // _CAND_PARTITION_BYTES
+    lo = bands.sparkSession.sparkContext.defaultParallelism
     return int(max(lo, min(4096, need)))
+
+
+def lsh_pairs(docs: DataFrame) -> DataFrame:
+    """Banded-LSH candidate pairs (d1 < d2) with estimated jaccard over
+    one (doc_id, text) frame: `_band_est` of its band rows with
+    themselves. The band rows are persisted — the partition sizing and
+    the join both read them, and at 100 TB they are |docs| x bands
+    skinny rows, always worth caching, never worth recomputing from the
+    shingle stream. The self-join's shuffle width is derived from the
+    band-bucket histogram (`_band_join_partitions`), not hand-tuned."""
+    bands = lsh_bands(docs).persist()
+    parted = bands.repartition(_band_join_partitions(bands), "band", "band_key")
+    return _band_est(parted, parted).filter(F.col("d1") < F.col("d2"))
 
 
 @shared_cache.artifact("shared_lsh_pairs")
 def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Session-shared banded-LSH candidate pairs with estimated jaccard
-    (see `_lsh_est_build` for the plan): the subtree every LSH-edged
+    over the corpus (`lsh_pairs`): the subtree every LSH-edged
     composite (`dedup_components_lsh`, `dedup_keep_best_lsh`,
-    `split_leakage_check_lsh`, `dedup_containment_lsh`) composes, so it
+    `split_leakage_check_lsh`, the containment family) composes, so it
     is built once per session and persisted (`operators/shared_cache.py`)
     — the round-3 battery showed the components family re-running
     this pipeline per query."""
-    return _lsh_est_build(spark, sf_dir)
+    return lsh_pairs(_docs_parallel(spark, sf_dir))
 
 
-def _lsh_est_build(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """One-pass banded LSH: the signature ARRAY rides along into the
-    band self-join, so the estimated jaccard is computed directly on
-    the joined rows — no second and third join back to the signature
-    table (the naive 3-use plan recomputed the whole md5 pipeline per
-    use; Catalyst has no exchange to reuse across differing
-    projections). The tiny per-doc signature table is persisted: at
-    100 TB it is |docs| x 200 bytes — always worth caching, never worth
-    recomputing from the shingle stream. The self-join's shuffle width
-    is derived from the band-bucket histogram (`_band_join_partitions`),
-    not hand-tuned."""
-    sigs = _minhash_sigs_columnar(_doc_shingles(spark, sf_dir, distinct=False)).persist()
-    n_bands = _N_PERM // _BAND_SIZE
-    # band key b = concat of the signature values whose perm % n_bands == b
-    # (same grouping as the oracle's perm % 3 with ORDER BY perm)
-    # the carried signature is UNHEXED to array<binary(8)>: the minima
-    # are 16 hex chars = 64 bits, est_jaccard only needs element
-    # EQUALITY, and halving the per-row payload halves the candidate
-    # join's shuffle (the spill driver at high duplication density —
-    # PERF.md round-2 scaling notes)
-    sig_arr = F.array(*[F.unhex(F.col(f"h{p}")) for p in range(_N_PERM)]).alias("sig")
-    band_structs = [
-        F.struct(
-            F.lit(b).alias("band"),
-            F.concat_ws(
-                ",", *[F.col(f"h{p}") for p in range(_N_PERM) if p % n_bands == b]
-            ).alias("band_key"),
-        )
-        for b in range(n_bands)
-    ]
-    bands = sigs.select(
-        "doc_id", sig_arr, F.explode(F.array(*band_structs)).alias("bk")
-    ).select("doc_id", "sig", "bk.band", "bk.band_key")
-    n_part = _band_join_partitions(bands, lo=spark.sparkContext.defaultParallelism)
-    b1 = bands.select(F.col("doc_id").alias("d1"), F.col("sig").alias("sig1"), "band", "band_key")
-    b2 = bands.select(F.col("doc_id").alias("d2"), F.col("sig").alias("sig2"), "band", "band_key")
-    cand = (
-        b1.repartition(n_part, "band", "band_key")
-        .join(b2.repartition(n_part, "band", "band_key"), ["band", "band_key"])
-        .filter(F.col("d1") < F.col("d2"))
-        .select("d1", "d2", "sig1", "sig2")
-        .distinct()  # sig arrays are functions of the doc ids — safe in the key
-    )
-    matches = F.size(F.filter(F.zip_with("sig1", "sig2", lambda x, y: x == y), lambda m: m))
-    return cand.select(
-        "d1",
-        "d2",
-        det_round(matches.cast("double") / _N_PERM, 6).alias("est_jaccard"),
-    )  # unsorted candidate pairs
-
-
-_N_BANDS = _N_PERM // _BAND_SIZE
 DEDUP_MINHASH_ORACLE = f"""
 WITH sh AS ({_DOC_SHINGLES_SQL}),
 sigs AS (
@@ -527,31 +549,6 @@ est AS (
 lsh_pairs AS (SELECT d1, d2 FROM est WHERE est_jaccard >= {_DUP_THRESH})"""
 
 
-def lsh_bands(docs: DataFrame) -> DataFrame:
-    """(doc_id, sig ARRAY, band, band_key) for any (doc_id, text) frame —
-    the persistable LSH index rows. Same signature pipeline as
-    `dedup_minhash_lsh` (6 md5 calls → 12 permutations, one
-    map-side-combinable min aggregate), with the signature array carried
-    so candidate verification never joins back to a signature table.
-    The sig is array<binary(8)> (unhexed minima) — equality-only use,
-    half the persisted index width and probe-join payload."""
-    sigs = _minhash_sigs_columnar(_shingles_from(docs, distinct=False))
-    n_bands = _N_PERM // _BAND_SIZE
-    sig_arr = F.array(*[F.unhex(F.col(f"h{p}")) for p in range(_N_PERM)]).alias("sig")
-    band_structs = [
-        F.struct(
-            F.lit(b).alias("band"),
-            F.concat_ws(
-                ",", *[F.col(f"h{p}") for p in range(_N_PERM) if p % n_bands == b]
-            ).alias("band_key"),
-        )
-        for b in range(n_bands)
-    ]
-    return sigs.select(
-        "doc_id", sig_arr, F.explode(F.array(*band_structs)).alias("bk")
-    ).select("doc_id", "sig", "bk.band", "bk.band_key")
-
-
 def incoming_flags(
     corpus_bands: DataFrame, incoming_bands: DataFrame, incoming_docs: DataFrame
 ) -> DataFrame:
@@ -562,25 +559,14 @@ def incoming_flags(
     The corpus side is the INDEX (|corpus| × bands skinny rows), not
     the corpus text — at 100 TB the gate touches ~200 bytes per corpus
     doc and the incoming batch only."""
-    c = corpus_bands.select(
-        F.col("doc_id").alias("corpus_doc"), F.col("sig").alias("sig_c"), "band", "band_key"
-    )
-    i = incoming_bands.select(
-        F.col("doc_id").alias("incoming_doc"), F.col("sig").alias("sig_i"), "band", "band_key"
-    )
-    matches = F.size(
-        F.filter(F.zip_with("sig_c", "sig_i", lambda x, y: x == y), lambda m: m)
-    )
     scored = (
-        c.join(i, ["band", "band_key"])
-        .select("corpus_doc", "incoming_doc", "sig_c", "sig_i")
-        .distinct()
-        .select(
-            "corpus_doc",
-            "incoming_doc",
-            det_round(matches.cast("double") / _N_PERM, 6).alias("est_jaccard"),
-        )
+        _band_est(corpus_bands, incoming_bands)
         .filter(F.col("est_jaccard") >= _DUP_THRESH)
+        .select(
+            F.col("d1").alias("corpus_doc"),
+            F.col("d2").alias("incoming_doc"),
+            "est_jaccard",
+        )
     )
     w = Window.partitionBy("incoming_doc").orderBy(
         F.desc("est_jaccard"), F.asc("corpus_doc")
@@ -857,11 +843,13 @@ def dedup_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _containment_dirs(counts: DataFrame, threshold: float = _CONTAIN_T) -> DataFrame:
-    """(d1, d2, common, c1, c2) → both containment directions via one
-    map-side explode, thresholded at `threshold` (default {_CONTAIN_T})
-    — shared by the exact and LSH-candidate containment variants; the
-    profile passes 0.0 to keep the full distribution (common >= 1
-    already, so nothing at exactly 0 exists to include)."""
+    """(d1, d2, common, c1, c2) → (contained_doc, container_doc,
+    containment) for both directions via one map-side explode, kept
+    where containment ≥ `threshold` (default `_CONTAIN_T`). The exact,
+    LSH-verified and bounded containment pass the exact common count;
+    `dedup_containment_profile` passes the estimate `_est_common` and
+    0.0 to keep the full distribution (the estimate is > 0 on every
+    candidate, so nothing at exactly 0 exists to include)."""
     both_dirs = F.array(
         F.struct(
             F.col("d1").alias("contained_doc"),
@@ -913,24 +901,18 @@ def dedup_containment_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     r4). Two hash joins on doc_id replace one doc_id join plus one
     (doc_id, shingle) join, so shuffle volume DROPS to
     |docs| + 2|cand| rows."""
-    return _containment_dirs(_lsh_verified_counts(spark, sf_dir))
-
-
-def _lsh_verified_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """(d1, d2, common, c1, c2) for every LSH band-collision candidate
-    with >= 1 common shingle — the shared verify stage behind
-    `dedup_containment_lsh` and `dedup_containment_profile`."""
     cand = dedup_minhash_lsh(spark, sf_dir).select("d1", "d2")
-    sh = _doc_shingles(spark, sf_dir)
-    # shingles are already distinct per doc → collect_set size == |set|
-    sets_ = sh.groupBy("doc_id").agg(F.collect_set("shingle").alias("sset"))
+    return _containment_dirs(_verified_counts(cand, _doc_shingles(spark, sf_dir)))
+
+
+def _verified_counts(cand: DataFrame, sh: DataFrame) -> DataFrame:
+    """Exact verify: (d1, d2) candidates + a distinct (doc_id, shingle)
+    stream → (d1, d2, common, c1, c2) for every candidate with >= 1
+    common shingle. Shingles are already distinct per doc, so the
+    `collect_set` size is |set|."""
+    sets_ = sh.groupBy("doc_id").agg(F.collect_set("shingle").alias("s"))
     return (
-        cand.join(
-            sets_.select(F.col("doc_id").alias("d1"), F.col("sset").alias("s1")), "d1"
-        )
-        .join(
-            sets_.select(F.col("doc_id").alias("d2"), F.col("sset").alias("s2")), "d2"
-        )
+        _sized(cand, sets_, "s")
         .select(
             "d1",
             "d2",
@@ -997,36 +979,12 @@ def dedup_containment_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Output: (decile, n_pairs, n_contained_docs, sum_containment_ppm),
     ≤10 rows at any corpus size."""
-    cand = dedup_minhash_lsh(spark, sf_dir)
-    cnt = (
-        _doc_shingles(spark, sf_dir)
-        .groupBy("doc_id")
-        .agg(F.count(F.lit(1)).alias("c"))
+    sized = _sized(
+        dedup_minhash_lsh(spark, sf_dir), _doc_counts(_doc_shingles(spark, sf_dir))
     )
-    j = cand.join(
-        cnt.select(F.col("doc_id").alias("d1"), F.col("c").alias("c1")), "d1"
-    ).join(cnt.select(F.col("doc_id").alias("d2"), F.col("c").alias("c2")), "d2")
-    common_est = F.least(
-        F.col("est_jaccard")
-        / (F.lit(1.0) + F.col("est_jaccard"))
-        * (F.col("c1") + F.col("c2")),
-        F.col("c1").cast("double"),
-        F.col("c2").cast("double"),
+    dirs = _containment_dirs(
+        sized.select("d1", "d2", _est_common().alias("common"), "c1", "c2"), 0.0
     )
-    dirs = j.select(
-        F.explode(
-            F.array(
-                F.struct(
-                    F.col("d1").alias("contained_doc"),
-                    det_round(common_est / F.col("c1"), 6).alias("containment"),
-                ),
-                F.struct(
-                    F.col("d2").alias("contained_doc"),
-                    det_round(common_est / F.col("c2"), 6).alias("containment"),
-                ),
-            )
-        ).alias("p")
-    ).select("p.contained_doc", "p.containment")
     per_doc = (
         dirs.select(
             "contained_doc",
@@ -1113,6 +1071,18 @@ _CONTAIN_SCREEN_T = 0.8  # estimated-containment admission floor (margin
 # below the 0.9 exact threshold absorbs minhash estimate error)
 
 
+def _est_common() -> Column:
+    """Minhash-estimated |A∩B| of a `_sized` (d1, d2, est_jaccard, c1,
+    c2) pair: J/(1+J)·(|A|+|B|), capped at min(|A|,|B|)."""
+    return F.least(
+        F.col("est_jaccard")
+        / (F.lit(1.0) + F.col("est_jaccard"))
+        * (F.col("c1") + F.col("c2")),
+        F.col("c1").cast("double"),
+        F.col("c2").cast("double"),
+    )
+
+
 def _containment_screen_verify(est: DataFrame, sh: DataFrame) -> DataFrame:
     """Shared screen→verify→threshold stage of the bounded containment:
     `est` = (d1, d2, est_jaccard) candidate pairs, `sh` = the matching
@@ -1120,49 +1090,17 @@ def _containment_screen_verify(est: DataFrame, sh: DataFrame) -> DataFrame:
     minhash-estimated max-direction containment ≥ {_CONTAIN_SCREEN_T},
     builds shingle sets ONLY for screened ids (semi-join before
     `collect_set`), exact-verifies via `array_intersect`, and emits
-    both thresholded directions (`_containment_dirs`). Factored out
-    (r13) so the identity-collapse fast path and the rep-level collapse
-    path run literally the same stage."""
-    cnt = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("c"))
-    j = est.join(
-        cnt.select(F.col("doc_id").alias("d1"), F.col("c").alias("c1")), "d1"
-    ).join(cnt.select(F.col("doc_id").alias("d2"), F.col("c").alias("c2")), "d2")
-    # identical arithmetic to dedup_containment_profile's common_est —
+    both thresholded directions (`_containment_dirs`).
+    `_containment_bounded_docs` runs it over the representatives."""
     # det-rounded so the >= comparison is an exact-ppm-multiple compare
     # in both engines
-    common_est = F.least(
-        F.col("est_jaccard")
-        / (F.lit(1.0) + F.col("est_jaccard"))
-        * (F.col("c1") + F.col("c2")),
-        F.col("c1").cast("double"),
-        F.col("c2").cast("double"),
+    screened = (
+        _sized(est, _doc_counts(sh))
+        .filter(det_round(_est_common() / F.least("c1", "c2"), 6) >= _CONTAIN_SCREEN_T)
+        .select("d1", "d2")
     )
-    screened = j.filter(
-        det_round(common_est / F.least("c1", "c2"), 6) >= _CONTAIN_SCREEN_T
-    ).select("d1", "d2")
     ids = screened.select(F.explode(F.array("d1", "d2")).alias("doc_id")).distinct()
-    sets_ = (
-        sh.join(ids, "doc_id", "semi")
-        .groupBy("doc_id")
-        .agg(F.collect_set("shingle").alias("sset"))
-    )
-    counts = (
-        screened.join(
-            sets_.select(F.col("doc_id").alias("d1"), F.col("sset").alias("s1")), "d1"
-        )
-        .join(
-            sets_.select(F.col("doc_id").alias("d2"), F.col("sset").alias("s2")), "d2"
-        )
-        .select(
-            "d1",
-            "d2",
-            F.size(F.array_intersect("s1", "s2")).alias("common"),
-            F.size("s1").alias("c1"),
-            F.size("s2").alias("c2"),
-        )
-        .filter(F.col("common") > 0)
-    )
-    return _containment_dirs(counts)
+    return _containment_dirs(_verified_counts(screened, sh.join(ids, "doc_id", "semi")))
 
 
 def dedup_containment_bounded(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1226,21 +1164,16 @@ def dedup_containment_bounded(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _containment_bounded_docs(
-    docs: DataFrame, shared_est: DataFrame | None = None
-) -> DataFrame:
+def _containment_bounded_docs(docs: DataFrame, shared_est: DataFrame) -> DataFrame:
     """The collapse→candidate→screen→verify→expand pipeline over any
     (doc_id, text) frame (factored for the duplicate-text pytest —
     the driver testdata has no exact-duplicate texts at sf0.01, so the
     expansion path needs a constructed frame to be exercised).
 
-    ``shared_est``: optional pre-built doc-level (d1, d2, est_jaccard)
-    candidate frame covering AT LEAST all rep pairs with identical
-    estimates (`dedup_minhash_lsh` qualifies — text-pure signatures);
-    when given, rep-level candidates are its restriction to rep ids
-    (two semi-joins) instead of a rebuilt band pipeline."""
-    from pyspark.sql import Window
-
+    ``shared_est``: pre-built doc-level (d1, d2, est_jaccard) candidate
+    frame covering AT LEAST all rep pairs with identical estimates
+    (`lsh_pairs(docs)` qualifies — text-pure signatures); rep-level
+    candidates are its restriction to rep ids (two semi-joins)."""
     g = docs.select(
         "doc_id",
         "text",
@@ -1248,39 +1181,12 @@ def _containment_bounded_docs(
     )
     members = g.select("doc_id", "gid")
     reps = g.filter(F.col("doc_id") == F.col("gid")).select("doc_id", "text")
-    if shared_est is not None:
-        rep_ids = reps.select("doc_id")
-        est = shared_est.join(
-            rep_ids.select(F.col("doc_id").alias("d1")), "d1", "semi"
-        ).join(rep_ids.select(F.col("doc_id").alias("d2")), "d2", "semi")
-    else:
-        # rep-level banded-LSH candidates + estimated jaccard (the
-        # `lsh_bands` index pipeline — signature rides into the band
-        # join, same shape as `_lsh_est_build` over the collapsed frame)
-        bands = lsh_bands(reps)
-        b1 = bands.select(
-            F.col("doc_id").alias("d1"), F.col("sig").alias("sig1"), "band", "band_key"
-        )
-        b2 = bands.select(
-            F.col("doc_id").alias("d2"), F.col("sig").alias("sig2"), "band", "band_key"
-        )
-        matches = F.size(
-            F.filter(F.zip_with("sig1", "sig2", lambda x, y: x == y), lambda m: m)
-        )
-        est = (
-            b1.join(b2, ["band", "band_key"])
-            .filter(F.col("d1") < F.col("d2"))
-            .select("d1", "d2", "sig1", "sig2")
-            .distinct()
-            .select(
-                "d1",
-                "d2",
-                det_round(matches.cast("double") / _N_PERM, 6).alias("est_jaccard"),
-            )
-        )
+    rep_ids = reps.select("doc_id")
+    est = shared_est.join(
+        rep_ids.select(F.col("doc_id").alias("d1")), "d1", "semi"
+    ).join(rep_ids.select(F.col("doc_id").alias("d2")), "d2", "semi")
     sh = _shingles_from(reps)
     rep_dirs = _containment_screen_verify(est, sh)
-    cnt = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("c"))
     # exact expansion: cross-group rows inherit the rep pair's value
     # (text-pure), within-group ordered pairs are identity containment
     cross = (
@@ -1307,7 +1213,7 @@ def _containment_bounded_docs(
     # so its duplicates are never candidates there — the identity
     # expansion must skip such groups or it would emit rows the
     # direct-form oracle cannot produce
-    shingled_gids = cnt.select(F.col("doc_id").alias("gid"))
+    shingled_gids = _doc_counts(sh).select(F.col("doc_id").alias("gid"))
     within = (
         members.join(shingled_gids, "gid", "semi")
         .select("gid", F.col("doc_id").alias("contained_doc"))
@@ -2159,29 +2065,15 @@ def dedup_minhash_bbit(spark: SparkSession, sf_dir: str) -> DataFrame:
     half of that argument."""
     pairs = dedup_minhash_lsh(spark, sf_dir)
     sigs = _minhash_sigs_columnar(_doc_shingles(spark, sf_dir, distinct=False))
-    bits = sigs.select(
-        "doc_id",
-        *[
-            (F.conv(F.substring(F.col(f"h{p}"), 16, 1), 16, 10).cast("int") % 2).alias(
-                f"b{p}"
-            )
-            for p in range(_N_PERM)
-        ],
-    )
-    b1 = bits.select(
-        F.col("doc_id").alias("d1"), *[F.col(f"b{p}").alias(f"x{p}") for p in range(_N_PERM)]
-    )
-    b2 = bits.select(
-        F.col("doc_id").alias("d2"), *[F.col(f"b{p}").alias(f"y{p}") for p in range(_N_PERM)]
-    )
-    matched = sum(
-        F.when(F.col(f"x{p}") == F.col(f"y{p}"), 1).otherwise(0)
+    parity = [
+        F.conv(F.substring(F.col(f"h{p}"), 16, 1), 16, 10).cast("int") % 2
         for p in range(_N_PERM)
-    )
+    ]
+    bits = sigs.select("doc_id", F.array(*parity).alias("b"))
+    matched = F.size(F.filter(F.zip_with("b1", "b2", lambda x, y: x == y), lambda m: m))
     full_ppm = F.floor(F.col("est_jaccard") * 1_000_000 + F.lit(0.5)).cast("bigint")
     scored = (
-        pairs.join(b1, "d1")
-        .join(b2, "d2")
+        _sized(pairs, bits, "b")
         .select(
             full_ppm.alias("full_ppm"),
             matched.cast("bigint").alias("matched"),

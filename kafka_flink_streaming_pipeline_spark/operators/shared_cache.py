@@ -31,7 +31,8 @@ its per-entry consumer map and refuses the artifacts it was told to
 skip, so no consumer is ever timed over a one-time build.
 
 Disk cache. Artifacts land under
-`spark-warehouse/shared_cache/<name>__<fingerprint>/`, where the
+`spark-warehouse/shared_cache/<name>__<sf id>__<fingerprint>/`, where
+the sf id is a short hash of the resolved sf_dir path and the
 fingerprint covers
 
 - the resolved sf_dir path,
@@ -47,9 +48,14 @@ Crash/torn-write safety: builds write to a pid-suffixed temp dir and
 artifact. A validity marker (`_SUCCESS` for Spark-written parquet,
 `_CACHE_OK` for path artifacts) distinguishes a published artifact
 from a torn one: a final dir missing its marker is deleted and
-rebuilt. Temp dirs from crashed builders (pid no longer alive) are
-swept before each build. `try/finally` removes this process's temp
-dir on any build failure.
+rebuilt. `try/finally` removes this process's temp dir on any build
+failure.
+
+Pruning: publishing an artifact removes every other entry of its
+(name, sf id) — versions built from older code or data, which no
+fingerprint asks for again, and dead builds' temp dirs — so the cache
+holds one set per sf_dir (a process still running older code loses
+its own). Other sf_dirs' artifacts and live builds' temp dirs stay.
 
 Set SPARK_GRAFT_SHARED_CACHE=0 to disable the disk cache (the memo
 stays on); path artifacts then live in temp dirs removed at
@@ -187,36 +193,55 @@ def sf_fingerprint(sf_dir: str) -> str:
 
 
 def artifact_dir(key: str, sf_dir: str) -> Path:
-    return _ROOT / f"{key}__{sf_fingerprint(sf_dir)}"
+    sf_id = hashlib.md5(str(Path(sf_dir).resolve()).encode()).hexdigest()[:8]
+    return _ROOT / f"{key}__{sf_id}__{sf_fingerprint(sf_dir)}"
 
 
-def _sweep_stale_tmp(final: Path) -> None:
-    """Remove `<name>.tmp.<pid>` siblings left by builders that died
-    mid-write. Only dirs whose owning pid is no longer alive are
-    removed — a concurrent live build keeps its temp dir."""
-    for tmp in final.parent.glob(final.name + ".tmp.*"):
-        pid_txt = tmp.name.rsplit(".", 1)[-1]
-        if not pid_txt.isdigit():
-            continue
-        pid = int(pid_txt)
-        try:
-            os.kill(pid, 0)
-        except ProcessLookupError:
-            shutil.rmtree(tmp, ignore_errors=True)
-        except PermissionError:
-            pass  # pid alive under another uid — leave it
-
-
-def publish(tmp: Path, final: Path) -> Path:
-    """Atomically promote a freshly built artifact; on a race the
-    first writer wins and the loser's copy is discarded."""
+def _live_tmp(path: Path) -> bool:
+    """True iff `path` is a `<...>.tmp.<pid>` build dir whose pid is
+    alive (under any uid)."""
+    pid = path.name.rsplit(".tmp.", 1)[-1]
+    if ".tmp." not in path.name or not pid.isdigit():
+        return False
     try:
-        os.rename(tmp, final)
-    except OSError:
+        os.kill(int(pid), 0)
+    except ProcessLookupError:
+        return False
+    except PermissionError:
+        pass  # alive under another uid
+    return True
+
+
+def _prune(final: Path) -> None:
+    """Remove every other entry of `final`'s (name, sf id): superseded
+    artifacts (dirs or .json files) and dead builds' temp dirs."""
+    name_sf = final.name.split(".", 1)[0].rsplit("__", 1)[0]
+    for path in final.parent.glob(name_sf + "__*"):
+        if path == final or _live_tmp(path):
+            continue
+        if path.is_dir():
+            shutil.rmtree(path, ignore_errors=True)
+        else:
+            path.unlink(missing_ok=True)
+
+
+def publish(final: Path, write) -> None:
+    """Run `write(tmp)` into a pid-suffixed temp dir, atomically promote
+    it to `final` and prune the superseded versions. On a race the
+    first writer wins and the loser's copy is discarded; on any failure
+    the temp dir is removed."""
+    _ROOT.mkdir(parents=True, exist_ok=True)
+    tmp = final.with_name(final.name + f".tmp.{os.getpid()}")
+    try:
+        write(str(tmp))
+        try:
+            os.rename(tmp, final)
+        except OSError:
+            if not final.exists():
+                raise
+    finally:
         shutil.rmtree(tmp, ignore_errors=True)
-        if not final.exists():
-            raise
-    return final
+    _prune(final)
 
 
 def _valid(final: Path, marker: str) -> bool:
@@ -246,14 +271,7 @@ def get_or_build_df(spark, sf_dir: str, key: str, build):
         df = build().localCheckpoint()
         if df.isEmpty():
             return df
-        _ROOT.mkdir(parents=True, exist_ok=True)
-        _sweep_stale_tmp(final)
-        tmp = final.with_name(final.name + f".tmp.{os.getpid()}")
-        try:
-            df.write.mode("overwrite").parquet(str(tmp))
-            publish(tmp, final)
-        finally:
-            shutil.rmtree(tmp, ignore_errors=True)
+        publish(final, lambda tmp: df.write.mode("overwrite").parquet(tmp))
     return spark.read.parquet(str(final))
 
 
@@ -272,6 +290,7 @@ def get_or_build_json(sf_dir: str, key: str, build):
     try:
         tmp.write_text(json.dumps(value))
         os.replace(tmp, final)
+        _prune(final)
     finally:
         if tmp.exists():
             tmp.unlink(missing_ok=True)
@@ -294,13 +313,10 @@ def get_or_build_path(key: str, sf_dir: str, build_into) -> str:
     final = artifact_dir(key, sf_dir)
     _clear_torn(final, _OK_MARKER)
     if not _valid(final, _OK_MARKER):
-        _ROOT.mkdir(parents=True, exist_ok=True)
-        _sweep_stale_tmp(final)
-        tmp = final.with_name(final.name + f".tmp.{os.getpid()}")
-        try:
-            build_into(str(tmp))
+
+        def write(tmp: str) -> None:
+            build_into(tmp)
             (Path(tmp) / _OK_MARKER).touch()
-            publish(tmp, final)
-        finally:
-            shutil.rmtree(tmp, ignore_errors=True)
+
+        publish(final, write)
     return str(final)

@@ -76,6 +76,7 @@ def test_containment_bounded_duplicate_text_expansion(spark):
     from kafka_flink_streaming_pipeline_spark.operators.dedup import (
         DEDUP_CONTAINMENT_BOUNDED_ORACLE,
         _containment_bounded_docs,
+        lsh_pairs,
     )
     from kafka_flink_streaming_pipeline_spark.sources.batch import load_table
 
@@ -96,9 +97,10 @@ def test_containment_bounded_duplicate_text_expansion(spark):
     rows.append((short_a, "too short"))
     rows.append((short_b, "too short"))
     pdf = pd.DataFrame(rows, columns=["doc_id", "text"])
+    docs = spark.createDataFrame(pdf)
     got = {
         (r.contained_doc, r.container_doc): r.containment
-        for r in _containment_bounded_docs(spark.createDataFrame(pdf)).collect()
+        for r in _containment_bounded_docs(docs, lsh_pairs(docs)).collect()
     }
     con = duckdb.connect()
     con.register("documents", pdf)

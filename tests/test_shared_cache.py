@@ -260,3 +260,28 @@ def test_enabled_cache_parity_real_operator(spark, cache, monkeypatch):
     cache.clear()
     assert baseline == cold == warm
     assert list(cache._ROOT.glob("*__*"))  # something was actually cached
+
+
+def test_publish_prunes_superseded_versions(spark, cache, sf_copy, monkeypatch, tmp_path):
+    """A code edit moves every artifact to a new fingerprint; publishing
+    the rebuilt one must remove the old version for the same sf_dir,
+    and keep the other sf_dir's artifact and a live build's temp dir."""
+    import os
+
+    other_sf = tmp_path / "sf_other"
+    shutil.copytree(sf_copy, other_sf)
+
+    def build():
+        return spark.range(3).withColumnRenamed("id", "x")
+
+    cache.get_or_build_df(spark, sf_copy, "t5", build).collect()
+    cache.get_or_build_df(spark, str(other_sf), "t5", build).collect()
+    old, other = cache.artifact_dir("t5", sf_copy), cache.artifact_dir("t5", str(other_sf))
+    live_tmp = old.with_name(old.name + f".tmp.{os.getpid()}")
+    live_tmp.mkdir()
+
+    monkeypatch.setattr(cache, "code_fingerprint", lambda: "edited")
+    cache.get_or_build_df(spark, sf_copy, "t5", build).collect()
+    new = cache.artifact_dir("t5", sf_copy)
+    assert new != old and (new / "_SUCCESS").exists()
+    assert sorted(cache._ROOT.iterdir()) == sorted([new, other, live_tmp])

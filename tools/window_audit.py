@@ -23,9 +23,11 @@ driver hash mismatches:
 
 It also prints a DEVICE COVERAGE table: for each cross-engine
 determinism device (md5 split-bucket, det_round/floor-half-up,
-integer division, session-shared subtrees), which audited entries
-exercise it — a device carried by a single window entry means a red
-row on that entry would not bisect, so singletons are flagged.
+integer division) and each session-shared artifact an entry's build
+and check read (`shared_cache.recording`, the map BENCH_DETAIL's
+`shared` holds), which audited entries exercise it — a device carried
+by a single window entry means a red row on that entry would not
+bisect, so singletons are flagged.
 
 Usage: python tools/window_audit.py [name ...]   (default: full window)
 Exit 0 = all compared clean with no flags.
@@ -55,10 +57,6 @@ _DEVICES: dict[str, tuple[re.Pattern, re.Pattern]] = {
     "md5-bucket": (re.compile(r"md5\s*\("), re.compile(r"F\.md5|\bmd5\(")),
     "floor-half-up": (re.compile(r"\+\s*0\.5\)"), re.compile(r"\+\s*F\.lit\(0\.5\)|\+\s*0\.5\)")),
     "integer-div": (re.compile(r"//|(?<![A-Za-z_])DIV(?![A-Za-z_])"), re.compile(r"(?<![A-Za-z_])DIV(?![A-Za-z_])")),
-    "shared:exact_graph": (re.compile(r"$^"), re.compile(r"exact_ngram_pairs")),
-    "shared:lsh_graph": (re.compile(r"$^"), re.compile(r"dedup_minhash_lsh|lsh_bands")),
-    "shared:pq_codes": (re.compile(r"$^"), re.compile(r"_pq_codes|_pq_anchors")),
-    "shared:curation_v2": (re.compile(r"$^"), re.compile(r"curation_pipeline_v2")),
     "det_round": (re.compile(r"$^"), re.compile(r"det_round")),
 }
 
@@ -88,6 +86,7 @@ def _entry_devices(spec) -> set[str]:
 
 def main() -> int:
     from kafka_flink_streaming_pipeline_spark import get_spark
+    from kafka_flink_streaming_pipeline_spark.operators import shared_cache
     from kafka_flink_streaming_pipeline_spark.plans import PRIORITY_WINDOW, merged
     from tests.conftest import SF_CORRECT, make_duck
     from tests.harness import compare
@@ -100,6 +99,7 @@ def main() -> int:
 
     n_fail = 0
     coverage: dict[str, set[str]] = {}
+    shared: dict[str, dict[str, str]] = {}
     for name in names:
         spec = plans.get(name)
         if spec is None:
@@ -118,64 +118,65 @@ def main() -> int:
             for ln in _decimal_intdiv_lines(spec.oracle):
                 flags.append(f"oracle:decimal-intdiv[{ln[:60]}]")
         coverage.setdefault(name, _entry_devices(spec))
-        try:
-            df = spec.build(spark, SF_CORRECT)
+        with shared_cache.recording(name) as shared[name]:
             try:
-                plan = df._jdf.queryExecution().analyzed().toString()
-                if any(
-                    " div " in ln and "decimal(" in ln
-                    for ln in plan.splitlines()
-                ):
-                    flags.append("spark:decimal-intdiv")
-            except Exception:  # noqa: BLE001 — plan introspection is best-effort
-                pass
-            for f in df.schema.fields:
-                s = f.dataType.simpleString()
-                if any(t in s for t in ("decimal", "array", "map", "interval")):
-                    flags.append(f"spark:{f.name}:{s}")
-            if spec.oracle is None:
-                df.count()
-                print(f"WARN {name}: no oracle (rows-only driver check)")
-                continue
-            res = duck.execute(spec.oracle)
-            d_cols = [d[0] for d in res.description]
-            d_rows = res.fetchall()
-            if d_rows:
-                for i, c in enumerate(d_cols):
-                    v = next((r[i] for r in d_rows if r[i] is not None), None)
-                    if isinstance(v, decimal.Decimal):
-                        flags.append(f"duck:{c}:Decimal")
-                    if isinstance(v, (list, tuple)):
-                        flags.append(f"duck:{c}:list")
-                s_row = df.limit(1).collect()
-                if s_row:
-                    s_map = s_row[0].asDict()
-                    d_map = dict(zip(d_cols, d_rows[0]))
-                    for c in s_map:
-                        sv, dv = s_map.get(c), d_map.get(c)
-                        if sv is not None and dv is not None:
-                            st, dt = type(sv).__name__, type(dv).__name__
-                            if st != dt and {st, dt} not in ({"int", "float"},):
-                                flags.append(f"pytype:{c}:{st}!={dt}")
-            compare(df, duck, spec.oracle, name)
-            dt = time.time() - t0
-            status = "OK  " if not flags else "FLAG"
-            print(f"{status} {name} ({dt:.1f}s)" + (f" {flags}" if flags else ""))
-            if flags:
+                df = spec.build(spark, SF_CORRECT)
+                try:
+                    plan = df._jdf.queryExecution().analyzed().toString()
+                    if any(
+                        " div " in ln and "decimal(" in ln
+                        for ln in plan.splitlines()
+                    ):
+                        flags.append("spark:decimal-intdiv")
+                except Exception:  # noqa: BLE001 — plan introspection is best-effort
+                    pass
+                for f in df.schema.fields:
+                    s = f.dataType.simpleString()
+                    if any(t in s for t in ("decimal", "array", "map", "interval")):
+                        flags.append(f"spark:{f.name}:{s}")
+                if spec.oracle is None:
+                    df.count()
+                    print(f"WARN {name}: no oracle (rows-only check)")
+                    continue
+                res = duck.execute(spec.oracle)
+                d_cols = [d[0] for d in res.description]
+                d_rows = res.fetchall()
+                if d_rows:
+                    for i, c in enumerate(d_cols):
+                        v = next((r[i] for r in d_rows if r[i] is not None), None)
+                        if isinstance(v, decimal.Decimal):
+                            flags.append(f"duck:{c}:Decimal")
+                        if isinstance(v, (list, tuple)):
+                            flags.append(f"duck:{c}:list")
+                    s_row = df.limit(1).collect()
+                    if s_row:
+                        s_map = s_row[0].asDict()
+                        d_map = dict(zip(d_cols, d_rows[0]))
+                        for c in s_map:
+                            sv, dv = s_map.get(c), d_map.get(c)
+                            if sv is not None and dv is not None:
+                                st, dt = type(sv).__name__, type(dv).__name__
+                                if st != dt and {st, dt} not in ({"int", "float"},):
+                                    flags.append(f"pytype:{c}:{st}!={dt}")
+                compare(df, duck, spec.oracle, name)
+                dt = time.time() - t0
+                status = "OK  " if not flags else "FLAG"
+                print(f"{status} {name} ({dt:.1f}s)" + (f" {flags}" if flags else ""))
+                if flags:
+                    n_fail += 1
+            except Exception as e:  # noqa: BLE001 — audit reports, never dies
+                print(f"FAIL {name}: {type(e).__name__}: {str(e)[:300]}")
                 n_fail += 1
-        except Exception as e:  # noqa: BLE001 — audit reports, never dies
-            print(f"FAIL {name}: {type(e).__name__}: {str(e)[:300]}")
-            n_fail += 1
     print("\nDEVICE COVERAGE (entries per determinism device in this set):")
     by_dev: dict[str, list[str]] = {}
     for entry, devs in coverage.items():
-        for dev in devs:
+        for dev in devs | {f"shared:{a}" for a in shared.get(entry, {})}:
             by_dev.setdefault(dev, []).append(entry)
-    for dev in sorted(_DEVICES):
+    for dev in sorted(set(_DEVICES) | set(by_dev)):
         users = by_dev.get(dev, [])
         mark = " SINGLETON — a red row here would not bisect" if len(users) == 1 else ""
         shown = ", ".join(sorted(users)[:6]) + (" …" if len(users) > 6 else "")
-        print(f"  {dev:<20} {len(users):>3}  {shown}{mark}")
+        print(f"  {dev:<32} {len(users):>3}  {shown}{mark}")
 
     print(f"\n{len(names) - n_fail}/{len(names)} clean")
     return 1 if n_fail else 0
