@@ -54,6 +54,10 @@ def main() -> None:
         kafka_replay_stream,
         produce_topic_log,
     )
+    from kafka_flink_streaming_pipeline_spark.sources.streaming import (
+        FRAME_PAYLOAD_DDL,
+        producer_frames,
+    )
     from kafka_flink_streaming_pipeline_spark.streaming.jobs import (
         drain,
         fanout_stream_job,
@@ -74,37 +78,15 @@ def main() -> None:
     events = load_table(spark, args.sf_dir, "events")
     n_events = events.count()
 
-    def frames(df):
-        return df.select(
-            F.col("user_id").cast("string").alias("key"),
-            F.to_json(
-                F.struct(
-                    F.col("event_id"),
-                    F.unix_micros("ts").alias("ts_us"),
-                    F.col("user_id"),
-                    F.col("event_type"),
-                    F.col("value"),
-                    F.col("props"),
-                )
-            ).alias("value"),
-            F.col("ts"),
-            F.col("event_id").alias("seq"),
-        )
-
     # ---- produce: two segments, like a producer that keeps running ----
     early = events.filter(F.col("event_id") % 5 != 0)
     late = events.filter(F.col("event_id") % 5 == 0)
     produce_topic_log(
-        frames(early), log, n_partitions=args.partitions,
+        producer_frames(early), log, n_partitions=args.partitions,
         segment=0, order_cols=("ts", "seq"),
     )
     print(f"produced segment 0: {early.count()} frames across "
           f"{args.partitions} partitions")
-
-    payload_ddl = (
-        "event_id bigint, ts_us bigint, user_id bigint, "
-        "event_type string, value double, props string"
-    )
 
     def consume():
         # no rate cap here: fanout_stream_job triggers availableNow,
@@ -114,7 +96,7 @@ def main() -> None:
         # tests/test_kafka_replay_source.py, and perfbench stream_ingest
         # measures the sustained rate
         stream = kafka_replay_stream(
-            spark, log, payload_ddl, group_id="pipeline"
+            spark, log, FRAME_PAYLOAD_DDL, group_id="pipeline"
         ).drop("kafka_key")
         return fanout_stream_job(stream, raw_p, rollup_p, ck)
 
@@ -124,7 +106,7 @@ def main() -> None:
 
     # ---- more production while the consumer is DOWN -------------------
     produce_topic_log(
-        frames(late), log, n_partitions=args.partitions,
+        producer_frames(late), log, n_partitions=args.partitions,
         segment=1, order_cols=("ts", "seq"),
     )
     print(f"produced segment 1 while consumer down: {late.count()} frames")

@@ -25,25 +25,20 @@ import datetime
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from kafka_flink_streaming_pipeline_spark.streaming.jobs import user_features_20m
+
 
 def build_day_features(spark: SparkSession, sf_dir: str, day: str) -> DataFrame:
-    from kafka_flink_streaming_pipeline_spark.plans.clickstream import _enriched
+    """FP3 features (`user_features_20m`) of the day slice [day, day+1)."""
+    from kafka_flink_streaming_pipeline_spark.plans.clickstream import _events
 
     lo = datetime.date.fromisoformat(day)
     hi = lo + datetime.timedelta(days=1)
-    e = _enriched(spark, sf_dir).filter(
-        (F.col("event_time") >= F.lit(str(lo)).cast("timestamp"))
-        & (F.col("event_time") < F.lit(str(hi)).cast("timestamp"))
-    )
-    return (
-        e.filter(F.col("event_type").isin("click", "view"))
-        .groupBy("uuid", F.window("event_time", "20 minutes").alias("w"))
-        .agg(
-            F.count(F.when(F.col("event_type") == "click", 1)).alias("click20m"),
-            F.count(F.when(F.col("event_type") == "view", 1)).alias("view20m"),
+    return user_features_20m(
+        _events(spark, sf_dir).filter(
+            (F.col("event_time") >= F.lit(str(lo)).cast("timestamp"))
+            & (F.col("event_time") < F.lit(str(hi)).cast("timestamp"))
         )
-        .filter(F.col("view20m") > 0)  # RIGHT JOIN: view side preserved
-        .select("uuid", F.col("w.end").alias("window_end"), "click20m", "view20m")
     )
 
 

@@ -17,7 +17,6 @@ real broker, swap the file drop for `sinks.write_kafka` of the
 from __future__ import annotations
 
 import argparse
-import glob
 import os
 import shutil
 import time
@@ -41,58 +40,39 @@ def main() -> None:
     from kafka_flink_streaming_pipeline_spark import get_spark
     from kafka_flink_streaming_pipeline_spark.sources.batch import load_table
     from kafka_flink_streaming_pipeline_spark.sources.streaming import (
-        assign_time_chunks,
+        prepare_replay_chunks,
     )
 
     spark = get_spark("replay-producer")
     spark.sparkContext.setLogLevel("ERROR")
 
-    # One shuffle writes every chunk (quantile time-slices, one file per
-    # chunk dir) — no `ntile() OVER (ORDER BY ts)` single-task global
-    # sort, which is exactly the driver-loop bottleneck the reference
-    # producer has (kafka_stream_producer.py:324-435). The driver then
-    # only paces file drops; per-chunk stats ride a tiny groupBy.
-    events = load_table(spark, args.sf_dir, "events")
-    chunked = assign_time_chunks(events, args.chunks)
+    # The chunks are staged by `prepare_replay_chunks`: one shuffle
+    # writes them all, and their mtimes step strictly upward in chunk
+    # order. The file source replays in mtime order, so the moves below
+    # keep that order (os.replace keeps the mtime); files copied in a
+    # tight loop would tie and replay out of order, their rows dropped
+    # behind the watermark. The driver only paces the moves.
     staging = args.out.rstrip("/") + "__staging"
-    (
-        chunked.repartition(args.chunks, "chunk")
-        # (chunk, ts): satisfies the dynamic-partition writer's required
-        # sort directly, so the intra-chunk ts order is guaranteed, not
-        # an artifact of a stable in-memory re-sort
-        .sortWithinPartitions("chunk", "ts")
-        .write.mode("overwrite")
-        .partitionBy("chunk")
-        .parquet(staging)
+    prepare_replay_chunks(
+        spark, load_table(spark, args.sf_dir, "events"), staging, args.chunks
     )
-    # per-chunk stats from the staging files themselves — already
-    # partitioned by chunk, so this is a cheap partition-pruned scan
-    # (recomputing from `chunked` would re-run the full events pass)
-    stats = {
-        r.chunk: (r.n, r.lo, r.hi)
+    stats = sorted(
+        (os.path.basename(r.path), r.n, r.lo, r.hi)
         for r in spark.read.parquet(staging)
-        .groupBy("chunk")
+        .groupBy(F.input_file_name().alias("path"))
         .agg(F.count("*").alias("n"), F.min("ts").alias("lo"), F.max("ts").alias("hi"))
         .collect()
-    }
+    )
     os.makedirs(args.out, exist_ok=True)
     total = 0
     t_start = time.time()
-    for i in range(1, args.chunks + 1):
-        if i not in stats:  # quantile ties can leave a chunk empty
-            continue
-        parts = glob.glob(f"{staging}/chunk={i}/part-*.parquet")
-        if len(parts) != 1:  # load-bearing: a split chunk would replay
-            # partially; RuntimeError, not assert (stripped under -O)
-            raise RuntimeError(f"chunk {i} not clustered to one file: {parts}")
-        dst = f"{args.out}/chunk_{i:04d}.parquet"
-        shutil.copy(parts[0], dst)
-        n, lo, hi = stats[i]
+    for name, n, lo, hi in stats:
+        os.replace(f"{staging}/{name}", f"{args.out}/{name}")
         total += n
         if args.time_scale > 0:
             time.sleep((hi - lo).total_seconds() * args.time_scale)
         rate = total / max(time.time() - t_start, 1e-9)
-        print(f"chunk {i}/{args.chunks}: {n} rows [{lo} .. {hi}] cum_rate={rate:.1f} msg/s")
+        print(f"{name}: {n} rows [{lo} .. {hi}] cum_rate={rate:.1f} msg/s")
     shutil.rmtree(staging, ignore_errors=True)
     print(f"replayed {total} rows in {time.time() - t_start:.1f}s")
 

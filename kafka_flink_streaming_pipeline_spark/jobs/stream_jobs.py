@@ -35,6 +35,7 @@ def main() -> None:
         replay_stream,
     )
     from kafka_flink_streaming_pipeline_spark.streaming.jobs import (
+        drain,
         feature_stream_job,
         raw_sink_job,
     )
@@ -58,7 +59,7 @@ def main() -> None:
         q = fanout_stream_job(
             stream, f"{args.table}/raw", f"{args.table}/rollup", args.checkpoint
         )
-        q.awaitTermination()
+        drain(q, "fanout job")
         n_raw = read_append_table(spark, f"{args.table}/raw").count()
         n_roll = spark.read.parquet(f"{args.table}/rollup").count()
         print(f"fanout: {n_raw} raw rows, {n_roll} rollup rows")
@@ -72,13 +73,13 @@ def main() -> None:
             stream, f"{args.table}/actives", f"{args.table}/geo", args.checkpoint
         )
         for q in qs:
-            q.awaitTermination()
+            drain(q, "global features job")
         n = spark.read.parquet(f"{args.table}/actives").count()
         print(f"global features: {n} active-user windows")
         return
     job = raw_sink_job if args.job == "raw" else feature_stream_job
     q = job(stream, args.table, args.checkpoint)
-    q.awaitTermination()
+    drain(q, f"{args.job} job")
     n = spark.read.parquet(args.table).count()
     print(f"{args.job} table rows: {n}")
 

@@ -32,30 +32,15 @@ from pyspark.sql import functions as F
 
 from kafka_flink_streaming_pipeline_spark.plans import QuerySpec
 from kafka_flink_streaming_pipeline_spark.sources.batch import load_table
+from kafka_flink_streaming_pipeline_spark.streaming.jobs import user_features_20m
 
 _TS_FMT = "yyyy-MM-dd HH:mm:ss"
 _WIN20_US = 20 * 60 * 1_000_000
 
 
-def _fp3_features_ts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """FP3 feature rows with a TIMESTAMP window_end (the registered
-    fp3 query formats to string for the oracle; the as-of join needs
-    the raw timestamp)."""
-    from kafka_flink_streaming_pipeline_spark.plans.clickstream import (
-        _enriched,
-        _window_agg,
-    )
-
-    agg = _window_agg(_enriched(spark, sf_dir), 20)
-    return agg.filter(F.col("views") > 0).select(
-        "uuid",
-        F.col("win_end"),
-        F.col("clicks").alias("click20m"),
-        F.col("views").alias("view20m"),
-    )
-
-
 def asof_feature_join(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from kafka_flink_streaming_pipeline_spark.plans.clickstream import _events
+
     events = load_table(spark, sf_dir, "events").select(
         "event_id",
         F.col("user_id").alias("uuid"),
@@ -64,10 +49,12 @@ def asof_feature_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.lit(None).cast("long").alias("click20m"),
         F.lit(None).cast("long").alias("view20m"),
     )
-    feats = _fp3_features_ts(spark, sf_dir).select(
+    # the FP3 rows with a TIMESTAMP window_end (the registered fp3
+    # query formats it to a string for its oracle)
+    feats = user_features_20m(_events(spark, sf_dir)).select(
         F.lit(None).cast("long").alias("event_id"),
         "uuid",
-        F.col("win_end").alias("t"),
+        F.col("window_end").alias("t"),
         F.lit(0).alias("tag"),
         "click20m",
         "view20m",

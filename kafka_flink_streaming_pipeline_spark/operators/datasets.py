@@ -49,7 +49,9 @@ from kafka_flink_streaming_pipeline_spark.operators.dedup import (
 from kafka_flink_streaming_pipeline_spark.operators.text import quality_cte, quality_scores
 from kafka_flink_streaming_pipeline_spark.functions.core import det_round
 from kafka_flink_streaming_pipeline_spark.plans import QuerySpec
+from kafka_flink_streaming_pipeline_spark.plans.clickstream import _events
 from kafka_flink_streaming_pipeline_spark.sources.batch import load_table
+from kafka_flink_streaming_pipeline_spark.streaming.jobs import lang_views_5m
 
 # --- deterministic train/val/test split -----------------------------------
 
@@ -545,27 +547,17 @@ _WIN5_US = 5 * 60 * 1_000_000
 
 
 def stream_enrich_lang_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Batch formulation of the stream-static enrichment: events decode
-    their document_id from the JSON payload, join the `documents`
-    dimension (broadcast — the dim is tiny relative to the event
-    stream at any SF), and count 5-min windowed views per language.
-    `·/streaming/jobs.py::enrich_stream_job` runs the SAME plan over
-    the replayed stream (stream-static joins are stateless: the static
-    side is re-read per micro-batch, picking up dimension updates);
-    equivalence is proven in test_stream_static_enrich_matches_batch."""
-    ev = load_table(spark, sf_dir, "events").select(
-        "ts", F.get_json_object("props", "$.k").cast("bigint").alias("document_id")
-    )
-    docs = F.broadcast(load_table(spark, sf_dir, "documents").select("doc_id", "lang"))
+    """Batch run of the stream-static enrichment `lang_views_5m`: events
+    decode their document_id from the JSON payload, join the
+    `documents` dimension, and count 5-min windowed views per language.
+    `·/streaming/jobs.py::enrich_stream_job` runs the same transform
+    over the replayed stream (stream-static joins are stateless: the
+    static side is re-read per micro-batch, picking up dimension
+    updates); test_stream_static_enrich_matches_batch compares the two."""
+    docs = load_table(spark, sf_dir, "documents")
     return (
-        ev.join(docs, ev.document_id == docs.doc_id)
-        .groupBy(F.window("ts", "5 minutes").alias("w"), "lang")
-        .agg(F.count("*").alias("views"))
-        .select(
-            F.date_format(F.col("w.end"), "yyyy-MM-dd HH:mm:ss").alias("window_end"),
-            "lang",
-            "views",
-        )
+        lang_views_5m(_events(spark, sf_dir), docs)
+        .withColumn("window_end", F.date_format("window_end", "yyyy-MM-dd HH:mm:ss"))
         .orderBy("window_end", "lang")
     )
 

@@ -36,19 +36,21 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from kafka_flink_streaming_pipeline_spark.functions import (
-    decode_traffic_source,
-    redis_feature_key,
-    synth_geo,
-)
+from kafka_flink_streaming_pipeline_spark.functions import decode_traffic_source
 from kafka_flink_streaming_pipeline_spark.functions.core import det_round
+from kafka_flink_streaming_pipeline_spark.jobs.feature_batch_job import build_day_features
 from kafka_flink_streaming_pipeline_spark.plans import QuerySpec
 from kafka_flink_streaming_pipeline_spark.sources.batch import load_table
+from kafka_flink_streaming_pipeline_spark.streaming.jobs import (
+    enrich,
+    user_features_5m,
+    user_features_20m,
+)
 
 TS_FMT = "yyyy-MM-dd HH:mm:ss"
 
-# Shared CTE prefix for every DuckDB oracle — the same enrichment the
-# Spark side applies in `_enriched`.
+# Shared CTE prefix for every DuckDB oracle — the SQL form of
+# `streaming.jobs.enrich`, which `_enriched` applies to the events table.
 ENRICHED_SQL = """
 WITH enriched AS (
   SELECT user_id                                              AS uuid,
@@ -66,16 +68,21 @@ latest AS (SELECT max(event_time) AS max_ts FROM enriched)
 """
 
 
+def _events(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The events table in the parsed wire shape that the shared
+    transforms of `streaming/jobs.py` read: ts renamed to event_time."""
+    return load_table(spark, sf_dir, "events").withColumnRenamed("ts", "event_time")
+
+
 def _enriched(spark: SparkSession, sf_dir: str) -> DataFrame:
-    e = load_table(spark, sf_dir, "events")
-    doc = F.get_json_object("props", "$.k").cast("long")
-    return e.select(
-        F.col("user_id").alias("uuid"),
-        F.col("ts").alias("event_time"),
-        doc.alias("document_id"),
-        synth_geo(F.col("event_type"), F.col("user_id"), doc).alias("geo_location"),
-        (F.col("user_id") % 4).alias("traffic_source"),
-        "event_type",
+    return enrich(_events(spark, sf_dir))
+
+
+def _formatted(feats: DataFrame) -> DataFrame:
+    """Feature rows as the oracles emit them: window_end formatted,
+    ordered by (uuid, window_end)."""
+    return feats.withColumn("window_end", F.date_format("window_end", TS_FMT)).orderBy(
+        "uuid", "window_end"
     )
 
 
@@ -535,40 +542,15 @@ ORDER BY day_delta
 
 # --- FP2: 5-min user click/view features (redis_sink copy.sql:64-181) -----
 #
-# The reference LEFT JOINs two streaming windowed aggregates (J1). Spark
-# can't join two streaming aggregates in append mode, and even in batch
-# that's two shuffles + a join; the idiomatic-Spark restructuring is a
-# single union-pivot aggregation: one shuffle, identical semantics
-# (left-join row set == windows with >= 1 click). The streaming module
-# reuses this exact plan. tests/test_features.py proves equivalence
-# against the literal LEFT JOIN oracle below.
-
-
-def _window_agg(e: DataFrame, minutes: int) -> DataFrame:
-    return (
-        e.filter(F.col("event_type").isin("click", "view"))
-        .groupBy("uuid", F.window("event_time", f"{minutes} minutes").alias("w"))
-        .agg(
-            F.count(F.when(F.col("event_type") == "click", 1)).alias("clicks"),
-            F.count(F.when(F.col("event_type") == "view", 1)).alias("views"),
-        )
-        .select("uuid", F.col("w.end").alias("win_end"), "clicks", "views")
-    )
+# The reference LEFT JOINs two streaming windowed aggregates (J1). The
+# plan is `streaming.jobs.user_features_5m`, the single union-pivot
+# aggregation (one shuffle, the same row set) that the FP2 stream job
+# runs too; test_fp2_streaming_equals_batch replays the stream job
+# against this entry, whose oracle below keeps the literal LEFT JOIN.
 
 
 def _fp2(spark: SparkSession, sf_dir: str) -> DataFrame:
-    agg = _window_agg(_enriched(spark, sf_dir), 5)
-    return (
-        agg.filter(F.col("clicks") > 0)  # LEFT JOIN semantics: click side preserved
-        .select(
-            F.col("uuid"),
-            F.date_format("win_end", TS_FMT).alias("window_end"),
-            F.col("clicks").alias("click5m"),
-            F.col("views").alias("view5m"),
-            redis_feature_key(F.col("uuid"), F.col("win_end")).alias("redis_key"),
-        )
-        .orderBy("uuid", "window_end")
-    )
+    return _formatted(user_features_5m(_events(spark, sf_dir)))
 
 
 _WIN5_US = 5 * 60 * 1_000_000
@@ -599,22 +581,13 @@ ORDER BY uc.uuid, window_end
 #
 # The reference RIGHT JOINs the click aggregate into the view aggregate
 # (COALESCE on both key sides suggests full-outer intent; we replicate
-# RIGHT exactly — SURVEY.md §7 risks). Union-pivot + views>0 filter is
-# the same row set with one shuffle instead of two.
+# RIGHT exactly — SURVEY.md §7 risks). `streaming.jobs.user_features_20m`
+# is the same row set from one union-pivot aggregation, one shuffle
+# instead of two.
 
 
 def _fp3(spark: SparkSession, sf_dir: str) -> DataFrame:
-    agg = _window_agg(_enriched(spark, sf_dir), 20)
-    return (
-        agg.filter(F.col("views") > 0)  # RIGHT JOIN semantics: view side preserved
-        .select(
-            F.col("uuid"),
-            F.date_format("win_end", TS_FMT).alias("window_end"),
-            F.col("clicks").alias("click20m"),
-            F.col("views").alias("view20m"),
-        )
-        .orderBy("uuid", "window_end")
-    )
+    return _formatted(user_features_20m(_events(spark, sf_dir)))
 
 
 _WIN20_US = 20 * 60 * 1_000_000
@@ -647,21 +620,8 @@ _DAY_HI = "2024-01-06 00:00:00"
 
 
 def _fp3_day(spark: SparkSession, sf_dir: str) -> DataFrame:
-    e = _enriched(spark, sf_dir).filter(
-        (F.col("event_time") >= F.lit(_DAY_LO).cast("timestamp"))
-        & (F.col("event_time") < F.lit(_DAY_HI).cast("timestamp"))
-    )
-    agg = _window_agg(e, 20)
-    return (
-        agg.filter(F.col("views") > 0)
-        .select(
-            F.col("uuid"),
-            F.date_format("win_end", TS_FMT).alias("window_end"),
-            F.col("clicks").alias("click20m"),
-            F.col("views").alias("view20m"),
-        )
-        .orderBy("uuid", "window_end")
-    )
+    """The FP3 backfill job's features for `_DAY_LO`'s date."""
+    return _formatted(build_day_features(spark, sf_dir, _DAY_LO[:10]))
 
 
 _FP3_DAY_ORACLE = f"""{ENRICHED_SQL},

@@ -5,8 +5,14 @@ catalogue that the README advertises (README.md:56-67): per-document
 window counts, top geo per window (FIRST_VALUE — W4), active users per
 window over a UNION of both streams (U1 + A6), and the global-feature
 join of two window aggregates (J5). These plans implement that surface
-batch-first (oracle-checked); the streaming variants reuse the same
-aggregation bodies via the jobs module.
+batch-first (oracle-checked). `fp2_kv_rows` projects the FP2 transform
+the stream job runs (`streaming.jobs.user_features_5m`). The streaming
+twins of the active-user, top-geo and global plans
+(`streaming.jobs.global_features_stream_jobs`,
+`hop_active_users_stream_job`) are written apart on purpose: Spark
+forbids `count_distinct` and a `first_value` window in a streaming
+query, so they restructure the aggregate (dedup → count, a per-batch
+top-1), and tests/test_streaming.py proves them equal to these plans.
 
 Also here:
 - the Redis hash row itself (F6 `MAP[...]` constructor → `create_map`
@@ -21,13 +27,14 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from kafka_flink_streaming_pipeline_spark.functions import redis_feature_key
 from kafka_flink_streaming_pipeline_spark.plans import QuerySpec
 from kafka_flink_streaming_pipeline_spark.plans.clickstream import (
     ENRICHED_SQL,
     TS_FMT,
     _enriched,
+    _events,
 )
+from kafka_flink_streaming_pipeline_spark.streaming.jobs import user_features_5m
 
 _WIN5_US = 5 * 60 * 1_000_000
 
@@ -283,25 +290,15 @@ ORDER BY g.window_end
 
 
 def fp2_kv_rows(spark: SparkSession, sf_dir: str) -> DataFrame:
-    e = _enriched(spark, sf_dir)
-    agg = (
-        e.filter(F.col("event_type").isin("click", "view"))
-        .groupBy("uuid", F.window("event_time", "5 minutes").alias("w"))
-        .agg(
-            F.count(F.when(F.col("event_type") == "click", 1)).alias("click5m"),
-            F.count(F.when(F.col("event_type") == "view", 1)).alias("view5m"),
-        )
-        .filter(F.col("click5m") > 0)
-    )
+    feats = user_features_5m(_events(spark, sf_dir))
     redis_hash = F.create_map(
         F.lit("click5m"),
         F.col("click5m").cast("string"),
         F.lit("view5m"),
         F.col("view5m").cast("string"),
     )
-    return agg.select(
-        redis_feature_key(F.col("uuid"), F.col("w.end")).alias("redis_key"),
-        F.to_json(redis_hash).alias("redis_hash_json"),
+    return feats.select(
+        "redis_key", F.to_json(redis_hash).alias("redis_hash_json")
     ).orderBy("redis_key")
 
 

@@ -45,9 +45,11 @@ from kafka_flink_streaming_pipeline_spark.sources.kafka_replay import (
     produce_topic_log,
 )
 from kafka_flink_streaming_pipeline_spark.sources.streaming import (
+    FRAME_PAYLOAD_DDL,
     WIRE_SCHEMA,
     file_batches,
     prepare_replay_chunks,
+    producer_frames,
     replay_stream,
 )
 from kafka_flink_streaming_pipeline_spark.streaming.jobs import (
@@ -235,30 +237,13 @@ def _kafka_roundtrip_build(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     def build(work: str) -> DataFrame:
         events = load_table(spark, sf_dir, "events")
-        frame = events.select(
-            F.col("user_id").cast("string").alias("key"),
-            F.to_json(
-                F.struct(
-                    F.col("event_id"),
-                    F.unix_micros("ts").alias("ts_us"),
-                    F.col("user_id"),
-                    F.col("event_type"),
-                    F.col("value"),
-                    F.col("props"),
-                )
-            ).alias("value"),
-            F.col("ts"),
-            F.col("event_id").alias("seq"),
-        )
         log = os.path.join(work, "log")
-        produce_topic_log(frame, log, n_partitions=4, order_cols=("ts", "seq"))
-        payload_ddl = (
-            "event_id bigint, ts_us bigint, user_id bigint, "
-            "event_type string, value double, props string"
+        produce_topic_log(
+            producer_frames(events), log, n_partitions=4, order_cols=("ts", "seq")
         )
         out = os.path.join(work, "out")
         q = _parquet_job(
-            kafka_replay_stream(spark, log, payload_ddl).select(*cols),
+            kafka_replay_stream(spark, log, FRAME_PAYLOAD_DDL).select(*cols),
             out,
             os.path.join(work, "ck"),
         )

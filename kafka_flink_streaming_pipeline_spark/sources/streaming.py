@@ -16,6 +16,8 @@ Ways to get a streaming DataFrame:
   timestamp-ordered chunk files for `replay_stream` to consume —
   timestamp-ordered merge replay like the reference producer (without
   the wall-clock sleeps; correctness tests don't need pacing).
+- `producer_frames`: the keyed JSON frames a producer writes for an
+  events table, which `parse_kafka_frame` decodes.
 - `file_batches`: any bounded frame (documents, vectors, forget
   requests) replayed as N files, one per micro-batch.
 """
@@ -67,6 +69,35 @@ def parse_kafka_frame(
     elif "ts_us" in parsed.columns:  # wire-exact shape: unix microseconds
         parsed = parsed.withColumn("event_time", F.timestamp_micros(F.col("ts_us")))
     return parsed.withWatermark("event_time", watermark)
+
+
+#: DDL of the `producer_frames` JSON payload, for decoding it back.
+FRAME_PAYLOAD_DDL = (
+    "event_id bigint, ts_us bigint, user_id bigint, "
+    "event_type string, value double, props string"
+)
+
+
+def producer_frames(events: DataFrame) -> DataFrame:
+    """The S11 producer frame of each event (kafka_stream_producer.py:
+    374-424): key = user_id (a keyed producer), value = JSON of the full
+    row with ts as unix micros (`FRAME_PAYLOAD_DDL`), so the round trip
+    is bit-exact with no datetime-format dependence. `ts` and `seq`
+    (the event_id) ride along as `produce_topic_log`'s send order."""
+    payload = F.struct(
+        "event_id",
+        F.unix_micros("ts").alias("ts_us"),
+        "user_id",
+        "event_type",
+        "value",
+        "props",
+    )
+    return events.select(
+        F.col("user_id").cast("string").alias("key"),
+        F.to_json(payload).alias("value"),
+        "ts",
+        F.col("event_id").alias("seq"),
+    )
 
 
 def kafka_stream(

@@ -112,23 +112,57 @@ def raw_sink_job(stream: DataFrame, table_path: str, checkpoint: str) -> Streami
     )
 
 
-def user_features_5m(stream: DataFrame) -> DataFrame:
-    """FP2 as union-pivot single aggregation over the streamed events.
+# --- the shared clickstream transforms -------------------------------------
+#
+# Each reads events shaped (user_id, event_time, event_type, props) — the
+# parsed wire shape; a table gets it by renaming ts to event_time — so
+# the batch plans, the FP3 backfill and the streaming jobs run one
+# declaration of each feature, as a batch or as a stream.
 
-    Emits (uuid, window_end, click5m, view5m, redis_key) — the same
-    row set as the reference's click-agg ⟕ view-agg (clicks > 0 filter
-    applied in the sink query, mirroring the LEFT side preservation).
-    """
+
+def enrich(events: DataFrame) -> DataFrame:
+    """(uuid, event_time, document_id, geo_location, traffic_source,
+    event_type): the reference's data model mapped onto the events
+    columns (plans/clickstream.py module docstring; its oracles apply
+    the same mapping in `ENRICHED_SQL`)."""
+    doc = F.get_json_object("props", "$.k").cast("long")
+    return events.select(
+        F.col("user_id").alias("uuid"),
+        "event_time",
+        doc.alias("document_id"),
+        synth_geo(F.col("event_type"), F.col("user_id"), doc).alias("geo_location"),
+        (F.col("user_id") % 4).alias("traffic_source"),
+        "event_type",
+    )
+
+
+def click_view_counts(events: DataFrame, minutes: int) -> DataFrame:
+    """(uuid, w, click<m>m, view<m>m): per-user tumbling-window click
+    and view counts as ONE union-pivot aggregation (conditional counts
+    in one groupBy). The reference joins a click aggregate to a view
+    aggregate (J1); Spark forbids joining two streaming aggregates, and
+    in batch the join costs two shuffles more. The join's row set is
+    the windows where the preserved side counted > 0, which the callers
+    below filter for."""
     return (
-        stream.filter(F.col("event_type").isin("click", "view"))
+        events.filter(F.col("event_type").isin("click", "view"))
         .groupBy(
             F.col("user_id").alias("uuid"),
-            F.window("event_time", "5 minutes").alias("w"),
+            F.window("event_time", f"{minutes} minutes").alias("w"),
         )
         .agg(
-            F.count(F.when(F.col("event_type") == "click", 1)).alias("click5m"),
-            F.count(F.when(F.col("event_type") == "view", 1)).alias("view5m"),
+            F.count(F.when(F.col("event_type") == "click", 1)).alias(f"click{minutes}m"),
+            F.count(F.when(F.col("event_type") == "view", 1)).alias(f"view{minutes}m"),
         )
+    )
+
+
+def user_features_5m(stream: DataFrame) -> DataFrame:
+    """FP2 (uuid, window_end, click5m, view5m, redis_key): the 5-minute
+    counts where the click side is kept, the reference's click-agg ⟕
+    view-agg."""
+    return (
+        click_view_counts(stream, 5)
         .filter(F.col("click5m") > 0)
         .select(
             "uuid",
@@ -137,6 +171,33 @@ def user_features_5m(stream: DataFrame) -> DataFrame:
             "view5m",
             redis_feature_key(F.col("uuid"), F.col("w.end")).alias("redis_key"),
         )
+    )
+
+
+def user_features_20m(events: DataFrame) -> DataFrame:
+    """FP3 (uuid, window_end, click20m, view20m): the 20-minute counts
+    where the view side is kept, the reference's click-agg RIGHT JOIN
+    view-agg (feature_batch_update.py:85-113)."""
+    return (
+        click_view_counts(events, 20)
+        .filter(F.col("view20m") > 0)
+        .select("uuid", F.col("w.end").alias("window_end"), "click20m", "view20m")
+    )
+
+
+def lang_views_5m(events: DataFrame, docs: DataFrame) -> DataFrame:
+    """(window_end, lang, views): the events' decoded document_id joined
+    to the documents dimension (broadcast: the dimension is small next
+    to the events at any scale), then 5-minute views per language."""
+    return (
+        enrich(events)
+        .join(
+            F.broadcast(docs.select("doc_id", "lang")),
+            F.col("document_id") == F.col("doc_id"),
+        )
+        .groupBy(F.window("event_time", "5 minutes").alias("w"), "lang")
+        .agg(F.count("*").alias("views"))
+        .select(F.col("w.end").alias("window_end"), "lang", "views")
     )
 
 
@@ -153,7 +214,8 @@ def global_features_stream_jobs(
       multi-stateful support; state for both stages evicts at the
       watermark. This is the EXACT distinct the reference declares
       (count(DISTINCT uuid)), not the approx fallback.
-    - top geo: per-(geo, window) counts close atomically when the
+    - top geo: per-(geo, window) counts of the view rows (the batch
+      plan's geo side reads views only) close atomically when the
       watermark passes the window end, so the FIRST_VALUE/rank top-1 is
       computed per emitted batch in foreachBatch and upserted on
       window_end — the J5/W4 foreachBatch treatment (SURVEY.md §4).
@@ -161,11 +223,12 @@ def global_features_stream_jobs(
     The batch `global_features_5m` plan then equals actives ⋈ geo_top
     over the closed windows (proven in tests)."""
     spark = stream.sparkSession
-    base = stream.filter(F.col("event_type").isin("click", "view")).select(
-        F.col("user_id").alias("uuid"),
+    base = enrich(stream).filter(F.col("event_type").isin("click", "view")).select(
+        "uuid",
         "event_time",
         F.window("event_time", "5 minutes").alias("w"),
-        synth_geo_from_stream().alias("geo_location"),
+        "geo_location",
+        "event_type",
     )
     actives_q = _parquet_job(
         base.dropDuplicates(["uuid", "w"])
@@ -190,7 +253,7 @@ def global_features_stream_jobs(
         upsert_sink(spark, geo_path, ["window_end"], "batch_seq")(top, batch_id)
 
     geo_q = start_bounded(
-        base.filter(F.col("geo_location").isNotNull())
+        base.filter(F.col("event_type") == "view")
         .groupBy("w", "geo_location")
         .agg(F.count("*").alias("total"))
         .select(F.col("w.end").alias("window_end"), "geo_location", "total")
@@ -199,16 +262,6 @@ def global_features_stream_jobs(
         f"{checkpoint_dir}/geo",
     )
     return [actives_q, geo_q]
-
-
-def synth_geo_from_stream():
-    """The enrichment geo expression over the wire columns (matches
-    plans.clickstream._enriched's synth_geo mapping for view rows)."""
-    doc_id = F.get_json_object("props", "$.k").cast("bigint")
-    return F.when(
-        F.col("event_type") == "view",
-        synth_geo(F.col("event_type"), F.col("user_id"), doc_id),
-    )
 
 
 def _interval_join(
@@ -374,21 +427,9 @@ def enrich_stream_job(
     picked up at batch granularity), and broadcasting it keeps each
     micro-batch join shuffle-free. The windowed aggregate closes per
     watermark; append mode emits each (window, lang) row exactly once.
-    Batch-equivalent plan: operators/datasets.py
-    stream_enrich_lang_counts."""
-    enriched = (
-        stream.withColumn(
-            "document_id", F.get_json_object("props", "$.k").cast("bigint")
-        )
-        .join(
-            F.broadcast(static_docs.select("doc_id", "lang")),
-            F.col("document_id") == F.col("doc_id"),
-        )
-        .groupBy(F.window("event_time", "5 minutes").alias("w"), "lang")
-        .agg(F.count("*").alias("views"))
-        .select(F.col("w.end").alias("window_end"), "lang", "views")
-    )
-    return _parquet_job(enriched, table_path, checkpoint)
+    The transform is `lang_views_5m`, which the batch entry
+    `stream_enrich_lang_counts` (operators/datasets.py) also runs."""
+    return _parquet_job(lang_views_5m(stream, static_docs), table_path, checkpoint)
 
 
 def fanout_stream_job(

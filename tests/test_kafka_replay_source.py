@@ -27,37 +27,14 @@ from kafka_flink_streaming_pipeline_spark.sources.kafka_replay import (
     kafka_replay_stream,
     produce_topic_log,
 )
-from kafka_flink_streaming_pipeline_spark.sources.streaming import WIRE_SCHEMA
+from kafka_flink_streaming_pipeline_spark.sources.streaming import (
+    FRAME_PAYLOAD_DDL,
+    producer_frames,
+)
 
 from tests.conftest import SF_SMOKE
 
 N_PARTS = 4
-
-
-def _frame(events):
-    """Producer frame: key = user_id (Kafka keyed producer), value =
-    JSON of the full row — ts serialized as unix micros so the round
-    trip is bit-exact with no datetime-format dependence."""
-    payload = F.struct(
-        F.col("event_id"),
-        F.unix_micros("ts").alias("ts_us"),
-        F.col("user_id"),
-        F.col("event_type"),
-        F.col("value"),
-        F.col("props"),
-    )
-    return events.select(
-        F.col("user_id").cast("string").alias("key"),
-        F.to_json(payload).alias("value"),
-        F.col("ts"),
-        F.col("event_id").alias("seq"),
-    )
-
-
-PAYLOAD_DDL = (
-    "event_id bigint, ts_us bigint, user_id bigint, "
-    "event_type string, value double, props string"
-)
 
 
 def _produce(spark, log_dir, segment=0, pred=None):
@@ -65,7 +42,7 @@ def _produce(spark, log_dir, segment=0, pred=None):
     if pred is not None:
         events = events.filter(pred)
     produce_topic_log(
-        _frame(events), log_dir, n_partitions=N_PARTS, segment=segment,
+        producer_frames(events), log_dir, n_partitions=N_PARTS, segment=segment,
         order_cols=("ts", "seq"),
     )
     return events
@@ -128,7 +105,7 @@ def test_roundtrip_exact_and_per_partition_order(spark, tmp_path):
 
     # parsed round-trip through the SAME S1 decode stage kafka_stream uses
     out = str(tmp_path / "out")
-    stream = kafka_replay_stream(spark, log, PAYLOAD_DDL)
+    stream = kafka_replay_stream(spark, log, FRAME_PAYLOAD_DDL)
     _run_to_parquet(stream, out, str(tmp_path / "ck"))
     got = spark.read.parquet(out).select(
         "event_id",

@@ -67,21 +67,14 @@ def test_replay_chunk_mtimes_precede_later_files(spark, tmp_path):
     assert mtimes[-1] < os.path.getmtime(sentinel)  # sentinel replays last
 
 
-def test_fp2_streaming_equals_batch(spark, tmp_path, chunks):
-    """Replaying the bounded events through the streaming FP2 job must
-    produce exactly the batch FP2 result (J1 restructuring proof)."""
-    table = str(tmp_path / "features")
-    q = feature_stream_job(
-        replay_stream(spark, chunks), table, str(tmp_path / "ckpt")
-    )
-    q.awaitTermination(300)
-    assert_no_watermark_drops(q)
-
+def assert_fp2_table_equals_batch(spark, table: str, sf_dir: str) -> None:
+    """The FP2 feature table the stream job upserted holds exactly the
+    rows of the batch FP2 entry over `sf_dir`."""
     from kafka_flink_streaming_pipeline_spark.plans.clickstream import _fp2
 
     batch = {
         (r.uuid, r.window_end, r.click5m, r.view5m, r.redis_key)
-        for r in _fp2(spark, SF_SMOKE).collect()
+        for r in _fp2(spark, sf_dir).collect()
     }
     streamed = {
         (
@@ -94,6 +87,45 @@ def test_fp2_streaming_equals_batch(spark, tmp_path, chunks):
         for r in spark.read.parquet(table).collect()
     }
     assert streamed == batch
+
+
+def test_fp2_streaming_equals_batch(spark, tmp_path, chunks):
+    """Replaying the bounded events through the streaming FP2 job must
+    produce exactly the batch FP2 result (J1 restructuring proof)."""
+    table = str(tmp_path / "features")
+    q = feature_stream_job(
+        replay_stream(spark, chunks), table, str(tmp_path / "ckpt")
+    )
+    q.awaitTermination(300)
+    assert_no_watermark_drops(q)
+    assert_fp2_table_equals_batch(spark, table, SF_SMOKE)
+
+
+def test_replay_producer_flow_equals_batch(spark, tmp_path, monkeypatch):
+    """The README's file-replay flow: `jobs.replay_producer` fills the
+    watch dir, the FP2 stream job drains it, and the feature table
+    equals the batch FP2 entry. The file source replays in mtime order,
+    so the producer's chunks must reach the watch dir with mtimes in
+    chunk order: a later chunk replayed first moves the watermark past
+    the earlier chunks' windows, and `drain` fails on the dropped rows.
+    At sf0.01 copies that tie in mtime lost rows on every run; at sf0.001
+    only on some."""
+    import sys
+
+    from kafka_flink_streaming_pipeline_spark.jobs import replay_producer
+    from kafka_flink_streaming_pipeline_spark.streaming.jobs import drain
+
+    watch = str(tmp_path / "replay")
+    monkeypatch.setattr(
+        sys, "argv", ["replay_producer", "--sf-dir", SF_CORRECT, "--out", watch]
+    )
+    replay_producer.main()
+    table = str(tmp_path / "features")
+    drain(
+        feature_stream_job(replay_stream(spark, watch), table, str(tmp_path / "ckpt")),
+        "FP2 over the producer's chunks",
+    )
+    assert_fp2_table_equals_batch(spark, table, SF_CORRECT)
 
 
 def test_fp1_upsert_idempotent(spark, tmp_path, chunks):
